@@ -62,14 +62,25 @@ tombstones, so erased rows leave every consumer — search results,
 the df state (folded out additively at weight -1), the skew
 measurement, the next retrain — atomically at the commit swap; the
 physical bytes go at maintenance time (``fold_*_deletes`` for the
-lexical/positional tables, the next ``rebuild_ivf_index`` for the
+lexical/positional/LSH tables, the next ``rebuild_ivf_index`` for the
 vector table), which is the ordering an erasure SLA needs: logical
 now, physical by the next maintenance window.
+
+One path for every family: each family is an ``IndexFamily``
+descriptor — pure data naming its commit table, its tombstone table
+and key, and each data table with the columns a tombstone masks. The
+tombstone read, the live-row mask, the delete apply, the fold,
+``next_batch_id``, compaction and vacuum are each ONE function over a
+descriptor; the per-family public names delegate to them. Only the
+apply builders (postings, MinHash/bands/pairs, IVF assignment and
+rebuild) are per-family, because they are different algorithms.
 """
 
 from __future__ import annotations
 
 import uuid
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -112,20 +123,61 @@ POS_TOMBSTONES = "pos_tombstones"
 _TOKEN = "_token"
 
 
+@dataclass(frozen=True)
+class IndexFamily:
+    """One index family's tables, as data. Appends become visible
+    through ``commits``; erasures land in ``tombstones`` keyed by
+    ``key``. ``data`` pairs each data table with the columns a
+    tombstone masks — a row leaves every view when ANY of them names
+    an erased id; folds and compaction rewrite these tables. ``side``
+    tables ride the same commit protocol but only a rebuild rewrites
+    them: they are vacuumed, never folded or compacted, and a reader
+    that masks one masks it on ``key``."""
+
+    name: str
+    commits: str
+    tombstones: str
+    key: str
+    data: tuple[tuple[str, tuple[str, ...]], ...]
+    side: tuple[str, ...] = ()
+
+
+LEXICAL = IndexFamily(
+    "lexical", LEX_COMMITS, LEX_TOMBSTONES, "doc_id",
+    ((LEX_POSTINGS, ("doc_id",)), (LEX_DOCLEN, ("doc_id",))),
+)
+POSITIONAL = IndexFamily(
+    "positional", POS_COMMITS, POS_TOMBSTONES, "doc_id",
+    ((POS_POSTINGS, ("doc_id",)),),
+)
+LSH = IndexFamily(
+    "lsh", LSH_COMMITS, LSH_TOMBSTONES, "doc_id",
+    ((LSH_MINS, ("doc",)), (LSH_BANDS, ("doc",)),
+     (LSH_PAIRS, ("doc_a", "doc_b"))),
+)
+IVF = IndexFamily(
+    "ivf", IVF_COMMITS, IVF_TOMBSTONES, "vec_id",
+    ((IVF_VECS, ("vec_id",)),), side=(IVF_DOCMAP, IVF_CENTROIDS),
+)
+# the order every fan-out (forget_documents, IndexMaintenance) visits
+# the families in, and so the order of their audit rows
+FAMILIES = (LEXICAL, POSITIONAL, LSH, IVF)
+
+
+def family_tables(fam: IndexFamily) -> tuple[str, ...]:
+    """Every token-stamped table of ``fam`` — what vacuum covers."""
+    return (*(t for t, _ in fam.data), fam.tombstones, *fam.side)
+
+
 # -- commit protocol ---------------------------------------------------------
 
 
-def _read_commits(
-    store: TableStore, commits_table: str
-) -> dict[int, str] | None:
+def _read_commits(store: TableStore, commits_table: str) -> dict[int, str]:
     """batch_id → token, read driver-side (round 13, guide §1.2/§5:
     the commit table is one-row-per-batch METADATA — a Spark job per
     protocol check paid full job scheduling for a few hundred bytes,
-    and the serving gates run dozens of such checks). Returns None on
-    a Delta-backed store (callers keep the DataFrame path — Delta has
-    its own transaction log for exactly this state)."""
-    if store.use_delta:
-        return None
+    and the serving gates run dozens of such checks). ``read_local``
+    serves both store backends, so the protocol has one path."""
     if not store.exists(commits_table):
         return {}
     t = store.read_local(commits_table)
@@ -140,8 +192,8 @@ def _read_commits(
 def _write_commits(
     store: TableStore, commits_table: str, commits: dict[int, str]
 ) -> None:
-    """Atomic driver-side rewrite of a commit table (one parquet
-    file, same pointer-swap commit as every write)."""
+    """Atomic driver-side rewrite of a commit table (one data file,
+    the store's usual atomic commit)."""
     import pyarrow as pa
 
     ids = sorted(commits)
@@ -149,7 +201,7 @@ def _write_commits(
         commits_table,
         pa.table(
             {
-                "batch_id": pa.array([int(b) for b in ids], pa.int64()),
+                "batch_id": pa.array(ids, pa.int64()),
                 "token": pa.array([commits[b] for b in ids], pa.string()),
             }
         ),
@@ -158,22 +210,21 @@ def _write_commits(
 
 # Committed-token visibility filter: up to this many committed batches
 # the token set rides inline as a scan-pushable IN predicate (zero
-# extra jobs); past it — or on Delta — readers keep the broadcast
-# semi-join (a production store with an unbounded commit history should
-# be compacting its commit table anyway; the cap keeps plan size
-# bounded either way).
+# extra jobs); past it readers keep the broadcast semi-join (a
+# production store with an unbounded commit history should be
+# compacting its commit table anyway; the cap keeps plan size bounded
+# either way).
 _TOKEN_INLIST_CAP = 1024
 
 
 def _committed(
-    store: TableStore, table: str, commits_table: str, keep_token: bool
+    store: TableStore, table: str, commits_table: str, keep_token: bool = False
 ) -> DataFrame:
+    """Only the rows whose token was committed."""
     rows = store.read(table)
     commits = _read_commits(store, commits_table)
-    if commits is not None and len(commits) <= _TOKEN_INLIST_CAP:
-        out = rows.where(
-            F.col(_TOKEN).isin(sorted(set(commits.values())))
-        )
+    if len(commits) <= _TOKEN_INLIST_CAP:
+        out = rows.where(F.col(_TOKEN).isin(sorted(set(commits.values()))))
     else:
         tokens = store.read(commits_table).select(
             F.col("token").alias(_TOKEN)
@@ -183,17 +234,17 @@ def _committed(
 
 
 def _applied(store: TableStore, commits_table: str, batch_id: int) -> bool:
+    return int(batch_id) in _read_commits(store, commits_table)
+
+
+def _commit(
+    store: TableStore, commits_table: str, batch_id: int, token: str
+) -> None:
+    # one row per committed batch — atomic overwrite, driver-side
+    # (metadata write; no Spark job on the parquet store)
     commits = _read_commits(store, commits_table)
-    if commits is not None:
-        return int(batch_id) in commits
-    if not store.exists(commits_table):
-        return False
-    row = (
-        store.read(commits_table)
-        .where(F.col("batch_id") == F.lit(int(batch_id)))
-        .head()
-    )
-    return row is not None
+    commits[int(batch_id)] = token
+    _write_commits(store, commits_table, commits)
 
 
 def next_batch_id(store: TableStore) -> int:
@@ -202,56 +253,15 @@ def next_batch_id(store: TableStore) -> int:
     mutation streams' derived 2b/2b+1 ids all share one monotonic
     sequence per family, and a caller-guessed id collides silently
     (now audited as Skipped) or trips the stale-id guard. This reads
-    each family's commit table (one tiny scan each — one row per
-    committed batch) and returns max+1 across all of them, so a
+    each family's commit table (driver-side, one row per committed
+    batch) and returns max+1 across all of them, so a
     ``forget_documents`` caller — or any out-of-band maintenance
     writer — gets a collision-free id without holding protocol state.
     Races between two concurrent allocators remain out of contract
     (the stores are single-writer by design, like every TableStore)."""
-    hi = -1
-    for commits_table in (LEX_COMMITS, POS_COMMITS, LSH_COMMITS, IVF_COMMITS):
-        commits = _read_commits(store, commits_table)
-        if commits is not None:
-            if commits:
-                hi = max(hi, max(commits))
-            continue
-        if not store.exists(commits_table):
-            continue
-        row = store.read(commits_table).agg(F.max("batch_id")).head()
-        if row is not None and row[0] is not None:
-            hi = max(hi, int(row[0]))
-    return hi + 1
-
-
-def _commit(
-    store: TableStore, commits_table: str, batch_id: int, token: str
-) -> None:
-    commits = _read_commits(store, commits_table)
-    if commits is not None:
-        commits[int(batch_id)] = token
-        # one row per committed batch — atomic pointer-swap overwrite,
-        # driver-side (metadata write; no Spark job)
-        _write_commits(store, commits_table, commits)
-        return
-    new = local_frame(
-        store.spark,
-        [(int(batch_id), token)],
-        "batch_id long, token string",
+    return 1 + max(
+        max(_read_commits(store, fam.commits), default=-1) for fam in FAMILIES
     )
-    if store.exists(commits_table):
-        cur = store.read(commits_table).where(
-            F.col("batch_id") != F.lit(int(batch_id))
-        )
-        new = cur.unionByName(new)
-    # one row per committed batch — atomic pointer-swap overwrite
-    store.overwrite(commits_table, new.coalesce(1))
-
-
-def _committed_rows(store: TableStore, table: str, commits_table: str) -> DataFrame:
-    """Reader view: only rows whose token was committed — a
-    scan-pushable IN filter on the driver-read token set (bounded),
-    falling back to a broadcast semi-join past the cap / on Delta."""
-    return _committed(store, table, commits_table, keep_token=False)
 
 
 def compact_index_table(
@@ -330,22 +340,200 @@ def vacuum_uncommitted(store: TableStore, table: str, commits_table: str) -> int
     into a new version, driver-side, zero Spark jobs (the post-rebuild
     vacuum of the entire pre-rebuild IVF index becomes a metadata
     operation). Mixed-token files (written by compaction/folds, which
-    retain tokens) fall back to the row-level Spark rewrite."""
+    retain tokens) and Delta stores fall back to the row-level Spark
+    rewrite."""
     if not store.exists(table) or not store.exists(commits_table):
         return 0
-    commits = _read_commits(store, commits_table)
-    if commits is not None:
-        removed = store.prune_files_by_value(
-            table, _TOKEN, set(commits.values())
-        )
-        if removed is not None:
-            return removed
+    removed = store.prune_files_by_value(
+        table, _TOKEN, set(_read_commits(store, commits_table).values())
+    )
+    if removed is not None:
+        return removed
     keep = _committed(store, table, commits_table, keep_token=True)
     # total from footer metadata (no job) — only `keep` needs a scan
     removed = store.count_rows(table) - keep.count()
     if removed:
         store.overwrite(table, keep)
     return removed
+
+
+# -- tombstones, live rows, delete apply and fold (every family) -------------
+
+
+def read_tombstones(store: TableStore, fam: IndexFamily) -> DataFrame:
+    """(key) — the family's committed erasure set. Empty before the
+    first delete, and again after the fold (for IVF: the rebuild) has
+    applied it physically."""
+    if not store.exists(fam.tombstones):
+        return local_frame(store.spark, [], f"{fam.key} long")
+    return (
+        _committed(store, fam.tombstones, fam.commits)
+        .select(fam.key)
+        .distinct()
+    )
+
+
+def _mask(
+    rows: DataFrame, tomb: DataFrame, fam: IndexFamily, table: str
+) -> DataFrame:
+    """Anti-join the erased ids out of ``rows`` on every column of
+    ``table`` that a tombstone masks."""
+    for col in dict(fam.data).get(table, (fam.key,)):
+        rows = rows.join(tomb.withColumnRenamed(fam.key, col), col, "left_anti")
+    return rows
+
+
+def _live(
+    store: TableStore,
+    fam: IndexFamily,
+    table: str,
+    tomb: DataFrame | None = None,
+) -> DataFrame:
+    """Reader view of a family table: committed rows that no committed
+    tombstone masks (until the fold drops them physically). Pass
+    ``tomb`` to share one tombstone read across several tables — each
+    read of a stored table costs a schema-inference job."""
+    if tomb is None:
+        tomb = read_tombstones(store, fam)
+    return _mask(_committed(store, table, fam.commits), tomb, fam, table)
+
+
+def _apply_deletes(
+    store: TableStore,
+    fam: IndexFamily,
+    ids: DataFrame,
+    batch_id: int,
+    id_col: str,
+    leg: Callable[[DataFrame], None] | None = None,
+) -> bool:
+    """Fold one ERASURE increment into ``fam``: the ids not already
+    tombstoned append token-stamped to the tombstone table and become
+    visible with the standard commit — readers anti-join them, so
+    every masked row leaves every view at the commit swap. O(deleted
+    ids); returns False when ``batch_id`` was already committed.
+
+    ``leg`` is a family's extra erasure work (lexical: the df
+    decrement); it gets the materialized new ids and runs before the
+    tombstones land — the torn-apply window the build path documents,
+    healed by redelivering the batch."""
+    if _applied(store, fam.commits, batch_id):
+        return False
+    ids = (
+        ids.select(F.col(id_col).alias(fam.key))
+        .distinct()
+        .join(read_tombstones(store, fam), fam.key, "left_anti")
+    )
+    cp: list = []
+    try:
+        if leg is not None:
+            # the leg and the append both read the set: materialize once
+            ids, cp = _tracked_checkpoint(ids)
+            leg(ids)
+        token = uuid.uuid4().hex
+        store.append(fam.tombstones, ids.withColumn(_TOKEN, F.lit(token)))
+        _commit(store, fam.commits, batch_id, token)
+    finally:
+        _release_checkpoint(cp)
+    return True
+
+
+def _fold_deletes(store: TableStore, fam: IndexFamily, n_files: int = 8) -> int:
+    """Physically drop tombstoned rows from the family's data tables —
+    the compaction-time half of the erasure contract (until this runs,
+    erased rows are reader-invisible but still on disk; after it, the
+    bytes are gone — what an erasure SLA actually requires). Returns
+    the number of rows dropped.
+
+    Swap order is reader-consistency-critical: the data tables fold
+    FIRST (each swap is a no-op to readers — the anti-join already
+    masked those rows), the tombstone table clears LAST. A crash
+    anywhere in between leaves a state where the anti-join still
+    masks whatever the fold hasn't dropped yet; clearing tombstones
+    before the folds would resurrect erased rows. Only the
+    SNAPSHOTTED ids clear (ADVICE r12): a delete increment committed
+    between this fold's tombstone snapshot and its final swap
+    survives in the tombstone table — still masked, folded by the
+    next cadence — instead of being truncated away unapplied. Derived
+    state folded at apply time (the lexical df rollup) is not
+    touched. Maintenance action, never on the read path."""
+    tomb, cp = _tracked_checkpoint(read_tombstones(store, fam))
+    try:
+        if tomb.head() is None:
+            return 0
+        dropped = 0
+        for table, _cols in fam.data:
+            if not store.exists(table):
+                continue
+            committed = _committed(store, table, fam.commits, keep_token=True)
+            n = committed.count()
+            store.overwrite(
+                table, _mask(committed, tomb, fam, table).repartition(n_files)
+            )
+            # kept rows from the new version's footers — no second job
+            dropped += n - store.count_rows(table)
+        # tombstones cleared LAST (see above), and only the snapshot's
+        # ids; the commit table keeps the delete batch_ids, so
+        # redelivery of an old delete stays a no-op
+        store.overwrite(
+            fam.tombstones,
+            store.read(fam.tombstones)
+            .join(tomb, fam.key, "left_anti")
+            .coalesce(1),
+        )
+        return dropped
+    finally:
+        _release_checkpoint(cp)
+
+
+def read_lexical_tombstones(store: TableStore) -> DataFrame:
+    return read_tombstones(store, LEXICAL)
+
+
+def read_lsh_tombstones(store: TableStore) -> DataFrame:
+    return read_tombstones(store, LSH)
+
+
+def read_ivf_tombstones(store: TableStore) -> DataFrame:
+    return read_tombstones(store, IVF)
+
+
+def fold_lexical_deletes(store: TableStore, n_files: int = 8) -> int:
+    return _fold_deletes(store, LEXICAL, n_files)
+
+
+def fold_positional_deletes(store: TableStore, n_files: int = 8) -> int:
+    return _fold_deletes(store, POSITIONAL, n_files)
+
+
+def fold_lsh_deletes(store: TableStore, n_files: int = 8) -> int:
+    return _fold_deletes(store, LSH, n_files)
+
+
+def apply_positional_deletes(
+    store: TableStore, doc_ids: DataFrame, batch_id: int, id_col: str = "doc_id"
+) -> bool:
+    return _apply_deletes(store, POSITIONAL, doc_ids, batch_id, id_col)
+
+
+def apply_lsh_deletes(
+    store: TableStore, doc_ids: DataFrame, batch_id: int, id_col: str = "doc_id"
+) -> bool:
+    """A FUTURE batch's band keys can no longer pair against an erased
+    doc (its band rows are masked) — a forgotten doc must not
+    influence future dedup either."""
+    return _apply_deletes(store, LSH, doc_ids, batch_id, id_col)
+
+
+def apply_ivf_deletes(
+    store: TableStore, vec_ids: DataFrame, batch_id: int, id_col: str = "vec_id"
+) -> bool:
+    """Every consumer reads through ``read_ivf_index`` (probes,
+    ``ivf_bucket_skew``, the rebuild's retrain/reassign), so erased
+    vectors leave search results, the skew measurement, AND the next
+    retrain's training set at the commit swap. Deletion drift feeds
+    the skew trigger, and the fired rebuild — which rewrites the
+    index from live rows only — is the physical erasure."""
+    return _apply_deletes(store, IVF, vec_ids, batch_id, id_col)
 
 
 # -- lexical index -----------------------------------------------------------
@@ -414,19 +602,6 @@ def apply_lexical_batch(
     return True
 
 
-def read_lexical_tombstones(store: TableStore) -> DataFrame:
-    """(doc_id) — committed erasure set. Empty frame before the first
-    delete (and again after ``fold_lexical_deletes`` has physically
-    applied it)."""
-    if not store.exists(LEX_TOMBSTONES):
-        return local_frame(store.spark, [], "doc_id long")
-    return (
-        _committed_rows(store, LEX_TOMBSTONES, LEX_COMMITS)
-        .select("doc_id")
-        .distinct()
-    )
-
-
 def read_lexical_index(
     store: TableStore,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -439,13 +614,9 @@ def read_lexical_index(
     additive state — filtered here so consumers (and the hash gates)
     see exactly the vocabulary a fresh build over the surviving
     corpus would produce."""
-    tomb = read_lexical_tombstones(store)
-    td = _committed_rows(store, LEX_POSTINGS, LEX_COMMITS).join(
-        tomb, "doc_id", "left_anti"
-    )
-    dn = _committed_rows(store, LEX_DOCLEN, LEX_COMMITS).join(
-        tomb, "doc_id", "left_anti"
-    )
+    tomb = read_tombstones(store, LEXICAL)
+    td = _live(store, LEXICAL, LEX_POSTINGS, tomb)
+    dn = _live(store, LEXICAL, LEX_DOCLEN, tomb)
     dfc = (
         store.read(LEX_DF)
         .select("term", F.col("df").cast("long").alias("df"))
@@ -483,11 +654,8 @@ def apply_lexical_deletes(
        weight -1 (``partial_rollup(weight_col=...)`` — counts form a
        group, not just a monoid, so retraction is one more fold).
     3. The doc ids append token-stamped to ``lex_tombstones`` and
-       become visible with the standard commit — readers anti-join,
-       so postings/doclen rows of erased docs disappear atomically
-       with the df decrement's visibility... (the decrement itself
-       lands first; the same torn-apply window the build path
-       documents, healed by redelivering the batch).
+       become visible with the standard commit (``_apply_deletes``;
+       steps 1-2 are its lexical leg).
 
     Deletes share the build path's ``batch_id`` sequence (the rollup
     skips ids at or below the last applied, so ids must be issued
@@ -505,9 +673,8 @@ def apply_lexical_deletes(
     surfaced as a skipped apply / a stale-id ValueError here rather
     than silently mis-recorded (ADVICE r12).
     """
-    if _applied(store, LEX_COMMITS, batch_id):
-        return False
-    if store.exists(LEX_DF):
+
+    def decrement(ids: DataFrame) -> None:
         applied = applied_watermark(store, LEX_DF)
         if applied is not None and int(batch_id) < int(applied):
             raise ValueError(
@@ -516,16 +683,10 @@ def apply_lexical_deletes(
                 "committed — the decrement would be silently skipped. "
                 "Issue delete ids from the family's monotonic sequence."
             )
-    ids, _cp_ids = _tracked_checkpoint(
-        doc_ids.select(F.col(id_col).alias("doc_id"))
-        .distinct()
-        .join(read_lexical_tombstones(store), "doc_id", "left_anti")
-    )
-    try:
         # terms of the docs being erased — equi-join bounded by the
         # delete set (tiny side; AQE broadcasts it)
-        td_del, _cp_td = _tracked_checkpoint(
-            _committed_rows(store, LEX_POSTINGS, LEX_COMMITS)
+        td_del, cp = _tracked_checkpoint(
+            _committed(store, LEX_POSTINGS, LEX_COMMITS)
             .join(ids, "doc_id", "left_semi")
             .withColumn("_w", F.lit(-1))
         )
@@ -539,62 +700,10 @@ def apply_lexical_deletes(
                 count_col="df",
                 weight_col="_w",
             )
-            token = uuid.uuid4().hex
-            store.append(LEX_TOMBSTONES, ids.withColumn(_TOKEN, F.lit(token)))
-            _commit(store, LEX_COMMITS, batch_id, token)
         finally:
-            _release_checkpoint(_cp_td)
-    finally:
-        _release_checkpoint(_cp_ids)
-    return True
+            _release_checkpoint(cp)
 
-
-def fold_lexical_deletes(store: TableStore, n_files: int = 8) -> int:
-    """Physically drop tombstoned rows from the data tables — the
-    compaction-time half of the erasure contract (until this runs,
-    erased rows are reader-invisible but still on disk; after it, the
-    bytes are gone — what an erasure SLA actually requires). Returns
-    the number of rows dropped.
-
-    Swap order is reader-consistency-critical: postings and doclen
-    fold FIRST (each swap is a no-op to readers — the anti-join
-    already masked those rows), the tombstone table clears LAST. A
-    crash anywhere in between leaves a state where the anti-join
-    still masks whatever the fold hasn't dropped yet; clearing
-    tombstones before both folds would resurrect erased rows. Only
-    the SNAPSHOTTED doc_ids clear (ADVICE r12): a delete increment
-    committed between this fold's tombstone snapshot and its final
-    swap survives in the tombstone table — still masked, folded by
-    the next cadence — instead of being truncated away unapplied
-    (permanent resurrection of erased rows). The df rollup holds the
-    decrements already (apply time) and is not touched. Maintenance
-    action, never on the read path."""
-    tomb, _cp = _tracked_checkpoint(read_lexical_tombstones(store))
-    try:
-        if tomb.head() is None:
-            return 0
-        dropped = 0
-        for table in (LEX_POSTINGS, LEX_DOCLEN):
-            if not store.exists(table):
-                continue
-            committed = _committed(store, table, LEX_COMMITS, keep_token=True)
-            keep = committed.join(tomb, "doc_id", "left_anti")
-            # committed − keep ≡ the tombstone-hit rows: one semi-join
-            # count instead of two full-table counts (guide §1.2)
-            dropped += committed.join(tomb, "doc_id", "left_semi").count()
-            store.overwrite(table, keep.repartition(n_files))
-        # tombstones cleared LAST (see above), and only the snapshot's
-        # ids; the commit table keeps the delete batch_ids, so
-        # redelivery of an old delete stays a no-op
-        store.overwrite(
-            LEX_TOMBSTONES,
-            store.read(LEX_TOMBSTONES)
-            .join(tomb, "doc_id", "left_anti")
-            .coalesce(1),
-        )
-        return dropped
-    finally:
-        _release_checkpoint(_cp)
+    return _apply_deletes(store, LEXICAL, doc_ids, batch_id, id_col, decrement)
 
 
 # -- positional index --------------------------------------------------------
@@ -646,74 +755,10 @@ def apply_positional_batch(
     return True
 
 
-def read_positional_tombstones(store: TableStore) -> DataFrame:
-    """(doc_id) — committed erasure set for the positional index."""
-    if not store.exists(POS_TOMBSTONES):
-        return local_frame(store.spark, [], "doc_id long")
-    return (
-        _committed_rows(store, POS_TOMBSTONES, POS_COMMITS)
-        .select("doc_id")
-        .distinct()
-    )
-
-
 def read_positional_index(store: TableStore) -> DataFrame:
     """(doc_id, term, pos) — committed, live rows only (tombstoned
     docs anti-joined out until ``fold_positional_deletes``)."""
-    return _committed_rows(store, POS_POSTINGS, POS_COMMITS).join(
-        read_positional_tombstones(store), "doc_id", "left_anti"
-    )
-
-
-def apply_positional_deletes(
-    store: TableStore,
-    doc_ids: DataFrame,
-    batch_id: int,
-    id_col: str = "doc_id",
-) -> bool:
-    """Erasure increment for the positional index — token-stamped
-    tombstones + commit, same contract as ``apply_lexical_deletes``
-    minus the rollup leg (the positional family keeps no derived
-    aggregate state; phrase reads go straight to postings). Returns
-    applied-by-this-call (ADVICE r12 audit contract)."""
-    if _applied(store, POS_COMMITS, batch_id):
-        return False
-    ids = (
-        doc_ids.select(F.col(id_col).alias("doc_id"))
-        .distinct()
-        .join(read_positional_tombstones(store), "doc_id", "left_anti")
-    )
-    token = uuid.uuid4().hex
-    store.append(POS_TOMBSTONES, ids.withColumn(_TOKEN, F.lit(token)))
-    _commit(store, POS_COMMITS, batch_id, token)
-    return True
-
-
-def fold_positional_deletes(store: TableStore, n_files: int = 8) -> int:
-    """Physical erasure for the positional index: drop tombstoned
-    postings, then clear the SNAPSHOTTED tombstones LAST (same
-    reader-consistent swap order and concurrent-delete-preserving
-    clear as ``fold_lexical_deletes``)."""
-    tomb, _cp = _tracked_checkpoint(read_positional_tombstones(store))
-    try:
-        if tomb.head() is None:
-            return 0
-        committed = _committed(
-            store, POS_POSTINGS, POS_COMMITS, keep_token=True
-        )
-        keep = committed.join(tomb, "doc_id", "left_anti")
-        # semi-join count ≡ committed − keep (one job, not two)
-        dropped = committed.join(tomb, "doc_id", "left_semi").count()
-        store.overwrite(POS_POSTINGS, keep.repartition(n_files))
-        store.overwrite(
-            POS_TOMBSTONES,
-            store.read(POS_TOMBSTONES)
-            .join(tomb, "doc_id", "left_anti")
-            .coalesce(1),
-        )
-        return dropped
-    finally:
-        _release_checkpoint(_cp)
+    return _live(store, POSITIONAL, POS_POSTINGS)
 
 
 def phrase_occurrences(positions: DataFrame, phrase: DataFrame) -> DataFrame:
@@ -776,6 +821,7 @@ def apply_lsh_batch(
     Returns applied-by-this-call (ADVICE r12 audit contract)."""
     from fabric_claims_spark.extensions.dedup import (
         _band_key_cols,
+        _eq_sum_expr,
         _minhash_mins,
         _near_dups_from_mins,
         _shingle_frame,
@@ -816,21 +862,11 @@ def apply_lsh_batch(
     bands_b = (
         store.read(LSH_BANDS).where(F.col(_TOKEN) == token).drop(_TOKEN)
     )
-    return _apply_lsh_batch_body(
-        store, batch_id, threshold, num_hashes, bands, hasher,
-        bucket_cap, mins_b, bands_b, token, _near_dups_from_mins,
-    )
-
-
-def _apply_lsh_batch_body(
-    store, batch_id, threshold, num_hashes, bands, hasher,
-    bucket_cap, mins_b, bands_b, token, _near_dups_from_mins,
-) -> bool:
     # batch-internal pairs (first batch: this IS the full build) —
     # derived from the JUST-WRITTEN batch signatures and band keys
     # (round 13/14, guide §1.2: never re-run the shingle scan + 64-way
     # minhash aggregate that the stored tables already hold)
-    internal = _near_dups_from_mins(
+    pairs_new = _near_dups_from_mins(
         mins_b,
         threshold=threshold,
         num_hashes=num_hashes,
@@ -839,24 +875,13 @@ def _apply_lsh_batch_body(
         bucket_cap=bucket_cap,
         banded=bands_b,
     )
-
-    pairs_new = internal
-    # cross pairs only against PRIOR committed increments — our own
-    # just-appended rows are invisible to _committed_rows (token not
-    # yet committed), so the first apply's cross leg folds to empty
-    commits = _read_commits(store, LSH_COMMITS)
-    has_corpus = (
-        bool(commits) if commits is not None else store.exists(LSH_BANDS)
-    )
-    if has_corpus:
-        # live corpus side only: an erased doc's band/signature rows
-        # must not pair against future batches (round 12)
-        _tomb_doc = read_lsh_tombstones(store).select(
-            F.col("doc_id").alias("doc")
-        )
-        bands_c = _committed_rows(store, LSH_BANDS, LSH_COMMITS).join(
-            _tomb_doc, "doc", "left_anti"
-        )
+    # cross pairs only against PRIOR committed increments (our own
+    # just-appended rows are invisible until the commit below), and
+    # only their live rows: an erased doc's band/signature rows must
+    # not pair against future batches (round 12)
+    if _read_commits(store, LSH_COMMITS):
+        tomb = read_tombstones(store, LSH)
+        bands_c = _live(store, LSH, LSH_BANDS, tomb)
         if bucket_cap is not None:
             w_bucket = Window.partitionBy("band_idx", "band_hash")
             bands_c = (
@@ -876,19 +901,14 @@ def _apply_lsh_batch_body(
             .select("doc", "_cdoc")
             .distinct()
         )
-        mins_c = _committed_rows(store, LSH_MINS, LSH_COMMITS).join(
-            _tomb_doc, "doc", "left_anti"
-        )
         ma = mins_b.select(
             F.col("doc").alias("_bdoc"),
             *[F.col(f"h{i}").alias(f"ha{i}") for i in range(num_hashes)],
         )
-        mb = mins_c.select(
+        mb = _live(store, LSH, LSH_MINS, tomb).select(
             F.col("doc").alias("_cdoc"),
             *[F.col(f"h{i}").alias(f"hb{i}") for i in range(num_hashes)],
         )
-        from fabric_claims_spark.extensions.dedup import _eq_sum_expr
-
         eq_sum = _eq_sum_expr(num_hashes)
         cross = (
             cand.join(ma, cand["doc"] == ma["_bdoc"])
@@ -913,108 +933,11 @@ def _apply_lsh_batch_body(
     return True
 
 
-def read_lsh_tombstones(store: TableStore) -> DataFrame:
-    """(doc_id) — committed erasure set for the near-dup store."""
-    if not store.exists(LSH_TOMBSTONES):
-        return local_frame(store.spark, [], "doc_id long")
-    return (
-        _committed_rows(store, LSH_TOMBSTONES, LSH_COMMITS)
-        .select("doc_id")
-        .distinct()
-    )
-
-
 def read_lsh_pairs(store: TableStore) -> DataFrame:
     """(doc_a, doc_b, est_jaccard) — committed, live rows only: a
     pair leaves the view when EITHER endpoint is erased (a cluster
     consumer must never link through a forgotten doc)."""
-    tomb = read_lsh_tombstones(store)
-    return (
-        _committed_rows(store, LSH_PAIRS, LSH_COMMITS)
-        .join(
-            tomb.select(F.col("doc_id").alias("doc_a")),
-            "doc_a",
-            "left_anti",
-        )
-        .join(
-            tomb.select(F.col("doc_id").alias("doc_b")),
-            "doc_b",
-            "left_anti",
-        )
-    )
-
-
-def apply_lsh_deletes(
-    store: TableStore,
-    doc_ids: DataFrame,
-    batch_id: int,
-    id_col: str = "doc_id",
-) -> bool:
-    """Erasure increment for the near-dup store — token-stamped
-    tombstones + commit (O(deleted ids)). Signatures, band keys, and
-    pairs touching an erased doc all leave the reader views at the
-    commit; ``fold_lsh_deletes`` drops the bytes. Note the candidate
-    contract stays sound: a FUTURE batch's band keys can no longer
-    pair against an erased doc (its band rows are masked), which is
-    exactly right — a forgotten doc must not influence future dedup
-    either. Returns applied-by-this-call (ADVICE r12 audit
-    contract)."""
-    if _applied(store, LSH_COMMITS, batch_id):
-        return False
-    ids = (
-        doc_ids.select(F.col(id_col).alias("doc_id"))
-        .distinct()
-        .join(read_lsh_tombstones(store), "doc_id", "left_anti")
-    )
-    token = uuid.uuid4().hex
-    store.append(LSH_TOMBSTONES, ids.withColumn(_TOKEN, F.lit(token)))
-    _commit(store, LSH_COMMITS, batch_id, token)
-    return True
-
-
-def fold_lsh_deletes(store: TableStore, n_files: int = 8) -> int:
-    """Physical erasure for the near-dup store: drop tombstoned rows
-    from mins/bands (keyed ``doc``) and pairs (either endpoint), then
-    clear the SNAPSHOTTED tombstones LAST (the reader-consistent swap
-    order and concurrent-delete-preserving clear of
-    ``fold_lexical_deletes``)."""
-    tomb, _cp = _tracked_checkpoint(read_lsh_tombstones(store))
-    if tomb.head() is None:
-        _release_checkpoint(_cp)
-        return 0
-    dropped = 0
-    plans = [
-        (LSH_MINS, lambda r: r.join(
-            tomb.select(F.col("doc_id").alias("doc")), "doc", "left_anti"
-        )),
-        (LSH_BANDS, lambda r: r.join(
-            tomb.select(F.col("doc_id").alias("doc")), "doc", "left_anti"
-        )),
-        (LSH_PAIRS, lambda r: r.join(
-            tomb.select(F.col("doc_id").alias("doc_a")), "doc_a",
-            "left_anti",
-        ).join(
-            tomb.select(F.col("doc_id").alias("doc_b")), "doc_b",
-            "left_anti",
-        )),
-    ]
-    try:
-        for table, mask in plans:
-            if not store.exists(table):
-                continue
-            committed = _committed(store, table, LSH_COMMITS, keep_token=True)
-            keep = mask(committed)
-            dropped += committed.count() - keep.count()
-            store.overwrite(table, keep.repartition(n_files))
-        store.overwrite(
-            LSH_TOMBSTONES,
-            store.read(LSH_TOMBSTONES)
-            .join(tomb, "doc_id", "left_anti")
-            .coalesce(1),
-        )
-        return dropped
-    finally:
-        _release_checkpoint(_cp)
+    return _live(store, LSH, LSH_PAIRS)
 
 
 # -- IVF vector index ----------------------------------------------------------
@@ -1156,11 +1079,10 @@ def rebuild_ivf_index(
     # tokens are un-committed by it): snapshot them now, re-append
     # under the rebuild token below. Tombstoned vectors' rows drop
     # here — the rebuild is their physical erasure, mapping included.
-    live_docmap, _cp_docmap = None, []
+    live_docmap, cp_docmap = None, []
     if store.exists(IVF_DOCMAP):
-        live_docmap, _cp_docmap = _tracked_checkpoint(
-            _committed_rows(store, IVF_DOCMAP, IVF_COMMITS)
-            .join(read_ivf_tombstones(store), "vec_id", "left_anti")
+        live_docmap, cp_docmap = _tracked_checkpoint(
+            _live(store, IVF, IVF_DOCMAP)
         )
     cents = kmeans_centroids(
         committed,
@@ -1171,9 +1093,8 @@ def rebuild_ivf_index(
         sample_cap=sample_cap,
         assign=train_assign,
     )
-    spark = store.spark
     cent_df = local_frame(
-        spark,
+        store.spark,
         [(int(cid), [float(x) for x in cv]) for cid, cv in cents],
         "centroid_id long, cv array<double>",
     )
@@ -1187,53 +1108,21 @@ def rebuild_ivf_index(
     store.append(IVF_CENTROIDS, cent_df.withColumn(_TOKEN, F.lit(token)))
     if live_docmap is not None:
         store.append(IVF_DOCMAP, live_docmap.withColumn(_TOKEN, F.lit(token)))
-    commits = _read_commits(store, IVF_COMMITS)
-    if commits is not None:
-        # driver-side swap: every committed batch_id re-points at the
-        # rebuild token in one metadata write
-        _write_commits(
-            store, IVF_COMMITS, {b: token for b in commits}
-        )
-    else:
-        prior = [
-            int(r["batch_id"])
-            for r in store.read(IVF_COMMITS).select("batch_id").collect()
-        ]
-        swapped = local_frame(
-            spark, [(b, token) for b in prior],
-            "batch_id long, token string",
-        )
-        store.overwrite(IVF_COMMITS, swapped.coalesce(1))
-    vacuum_uncommitted(store, IVF_VECS, IVF_COMMITS)
-    vacuum_uncommitted(store, IVF_CENTROIDS, IVF_COMMITS)
-    # the swap re-pointed every batch_id at the rebuild token, which
-    # un-commits the tombstone rows' own tokens: erased vectors were
-    # already excluded from the reassignment (read_ivf_index is
-    # live-only), so the stale tombstones are orphans — reclaim them.
-    # Their batch_ids stay committed, so redelivery remains a no-op.
-    vacuum_uncommitted(store, IVF_TOMBSTONES, IVF_COMMITS)
-    if live_docmap is not None:
-        # pre-rebuild docmap rows are orphans now (their tokens were
-        # un-committed by the swap); the live snapshot re-landed above
-        # under the rebuild token — this is the mapping's physical
-        # erasure for tombstoned vectors
-        vacuum_uncommitted(store, IVF_DOCMAP, IVF_COMMITS)
-        _release_checkpoint(_cp_docmap)
-    return cents
-
-
-def read_ivf_tombstones(store: TableStore) -> DataFrame:
-    """(vec_id) — committed erasure set for the vector index. Empty
-    before the first delete, and empty again after a rebuild (the
-    swap rewrites the index from live rows only, so a rebuild IS the
-    physical fold)."""
-    if not store.exists(IVF_TOMBSTONES):
-        return local_frame(store.spark, [], "vec_id long")
-    return (
-        _committed_rows(store, IVF_TOMBSTONES, IVF_COMMITS)
-        .select("vec_id")
-        .distinct()
+    # driver-side swap: every committed batch_id re-points at the
+    # rebuild token in one metadata write
+    _write_commits(
+        store, IVF_COMMITS, dict.fromkeys(_read_commits(store, IVF_COMMITS), token)
     )
+    # Everything appended before the swap is an orphan now: the old
+    # vectors and quantizer, the old docmap rows (the live snapshot
+    # re-landed above — the mapping's physical erasure for tombstoned
+    # vectors), and the tombstones themselves (erased vectors were
+    # never reassigned; their batch_ids stay committed, so redelivery
+    # remains a no-op). Reclaim them all.
+    for table in family_tables(IVF):
+        vacuum_uncommitted(store, table, IVF_COMMITS)
+    _release_checkpoint(cp_docmap)
+    return cents
 
 
 def read_ivf_index(store: TableStore) -> DataFrame:
@@ -1243,39 +1132,7 @@ def read_ivf_index(store: TableStore) -> DataFrame:
     written bucketed on ``assigned_centroid`` (operators/bucketing.py)
     so a probe reads only its buckets; the gate consumers filter on
     the column, which partition-prunes the same way."""
-    return _committed_rows(store, IVF_VECS, IVF_COMMITS).join(
-        read_ivf_tombstones(store), "vec_id", "left_anti"
-    )
-
-
-def apply_ivf_deletes(
-    store: TableStore,
-    vec_ids: DataFrame,
-    batch_id: int,
-    id_col: str = "vec_id",
-) -> bool:
-    """Fold one ERASURE increment into the stored IVF index (round
-    12). Token-stamped tombstone append + commit — O(deleted ids),
-    the index itself is untouched. Every consumer reads through
-    ``read_ivf_index`` (probes, ``ivf_bucket_skew``, the rebuild's
-    retrain/reassign), so erased vectors leave search results, the
-    skew measurement, AND the next retrain's training set atomically
-    at the commit swap. Deletions concentrate in buckets too — the
-    skew trigger fires on delete-drift exactly as on insert-drift —
-    and the fired rebuild rewrites the index from live rows only,
-    which is the physical erasure. Returns applied-by-this-call
-    (ADVICE r12 audit contract)."""
-    if _applied(store, IVF_COMMITS, batch_id):
-        return False
-    ids = (
-        vec_ids.select(F.col(id_col).alias("vec_id"))
-        .distinct()
-        .join(read_ivf_tombstones(store), "vec_id", "left_anti")
-    )
-    token = uuid.uuid4().hex
-    store.append(IVF_TOMBSTONES, ids.withColumn(_TOKEN, F.lit(token)))
-    _commit(store, IVF_COMMITS, batch_id, token)
-    return True
+    return _live(store, IVF, IVF_VECS)
 
 
 def read_ivf_docmap(store: TableStore) -> DataFrame:
@@ -1288,9 +1145,7 @@ def read_ivf_docmap(store: TableStore) -> DataFrame:
     vector family without the caller holding the mapping."""
     if not store.exists(IVF_DOCMAP):
         return local_frame(store.spark, [], "vec_id long, doc_id long")
-    return _committed_rows(store, IVF_DOCMAP, IVF_COMMITS).join(
-        read_ivf_tombstones(store), "vec_id", "left_anti"
-    )
+    return _live(store, IVF, IVF_DOCMAP)
 
 
 def read_ivf_centroids(store: TableStore) -> DataFrame:
@@ -1305,25 +1160,19 @@ def read_ivf_centroids(store: TableStore) -> DataFrame:
         return local_frame(
             store.spark, [], "centroid_id long, cv array<double>"
         )
-    return _committed_rows(store, IVF_CENTROIDS, IVF_COMMITS)
+    return _committed(store, IVF_CENTROIDS, IVF_COMMITS)
 
 
 def stored_quantizer_size(store: TableStore) -> int:
     """Committed centroid count — k rows of BOUNDED metadata-class
-    state, so the parquet fallback reads it driver-side (read_local +
-    token filter, zero Spark jobs; round 14, guide §1.2/§5: the
-    rebuild policy and the maintenance runner each paid a full count
-    job here per decision). Delta stores keep the Spark path."""
+    state, read driver-side (``read_local`` + token filter; round 14,
+    guide §1.2/§5: the rebuild policy and the maintenance runner each
+    paid a full count job here per decision)."""
     if not store.exists(IVF_CENTROIDS):
         return 0
-    commits = _read_commits(store, IVF_COMMITS)
-    if commits is not None:
-        if not commits:
-            return 0
-        toks = set(commits.values())
-        col = store.read_local(IVF_CENTROIDS).column(_TOKEN).to_pylist()
-        return sum(1 for v in col if v in toks)
-    return read_ivf_centroids(store).count()
+    toks = set(_read_commits(store, IVF_COMMITS).values())
+    col = store.read_local(IVF_CENTROIDS).column(_TOKEN).to_pylist()
+    return sum(1 for v in col if v in toks)
 
 
 def ivf_bucket_skew(store: TableStore, k: int | None = None) -> float:

@@ -221,75 +221,58 @@ class IndexMaintenance:
 
     def _run_post_apply(self, si) -> dict[str, Any]:
         out: dict[str, Any] = {}
-        folds = [
-            ("lexical", si.LEX_POSTINGS, si.read_lexical_tombstones,
-             si.fold_lexical_deletes),
-            ("positional", si.POS_POSTINGS, si.read_positional_tombstones,
-             si.fold_positional_deletes),
-            ("lsh", si.LSH_MINS, si.read_lsh_tombstones,
-             si.fold_lsh_deletes),
-        ]
-        for family, probe_table, read_tombs, fold in folds:
-            if not self.store.exists(probe_table):
+        for fam in si.FAMILIES:
+            # looked up on ``si`` at call time, so a wrapped module
+            # attribute is what runs; IVF has no fold — its skew-fired
+            # rebuild (below) is the physical erasure
+            fold = getattr(si, f"fold_{fam.name}_deletes", None)
+            if fold is None or not self.store.exists(fam.data[0][0]):
                 continue
-            n_tombs = read_tombs(self.store).count()
-            if n_tombs >= self.fold_min_tombstones:
-                dropped = fold(self.store, n_files=self.compact_n_files)
-                self._audit(f"fold:{family}", True,
-                            f"tombstones={n_tombs}", dropped)
-                out[f"fold:{family}"] = {"fired": True, "tombstones": n_tombs,
-                                         "rows_dropped": dropped}
-            else:
-                self._audit(f"fold:{family}", False,
-                            f"tombstones={n_tombs}", 0)
-                out[f"fold:{family}"] = {"fired": False, "tombstones": n_tombs}
+            n_tombs = si.read_tombstones(self.store, fam).count()
+            fired = n_tombs >= self.fold_min_tombstones
+            decision = out[f"fold:{fam.name}"] = {
+                "fired": fired, "tombstones": n_tombs,
+            }
+            if fired:
+                decision["rows_dropped"] = fold(
+                    self.store, n_files=self.compact_n_files
+                )
+            self._audit(f"fold:{fam.name}", fired, f"tombstones={n_tombs}",
+                        decision.get("rows_dropped", 0))
 
-        compactions = [
-            (si.LEX_POSTINGS, si.LEX_COMMITS),
-            (si.LEX_DOCLEN, si.LEX_COMMITS),
-            (si.POS_POSTINGS, si.POS_COMMITS),
-            (si.LSH_MINS, si.LSH_COMMITS),
-            (si.LSH_BANDS, si.LSH_COMMITS),
-            (si.LSH_PAIRS, si.LSH_COMMITS),
-            (si.IVF_VECS, si.IVF_COMMITS),
-        ]
-        for table, commits in compactions:
-            if not self.store.exists(table):
-                continue
-            fc, compacted = si.maybe_compact_index_table(
-                self.store,
-                table,
-                commits,
-                file_threshold=self.compact_file_threshold,
-                n_files=self.compact_n_files,
-            )
-            self._audit(f"compact:{table}", compacted, f"files={fc}",
-                        fc if compacted else 0)
-            out[f"compact:{table}"] = {"fired": compacted, "files": fc}
+        for fam in si.FAMILIES:
+            for table, _cols in fam.data:
+                if not self.store.exists(table):
+                    continue
+                fc, compacted = si.maybe_compact_index_table(
+                    self.store,
+                    table,
+                    fam.commits,
+                    file_threshold=self.compact_file_threshold,
+                    n_files=self.compact_n_files,
+                )
+                self._audit(f"compact:{table}", compacted, f"files={fc}",
+                            fc if compacted else 0)
+                out[f"compact:{table}"] = {"fired": compacted, "files": fc}
 
         if self.vacuum:
             # reclaim rows whose append token never committed (torn
-            # apply). Tombstone tables ride the same commit protocol,
-            # so they vacuum identically.
-            vacuums = compactions + [
-                (si.LEX_TOMBSTONES, si.LEX_COMMITS),
-                (si.POS_TOMBSTONES, si.POS_COMMITS),
-                (si.LSH_TOMBSTONES, si.LSH_COMMITS),
-                (si.IVF_TOMBSTONES, si.IVF_COMMITS),
-                (si.IVF_DOCMAP, si.IVF_COMMITS),
-                (si.IVF_CENTROIDS, si.IVF_COMMITS),
-            ]
-            for table, commits in vacuums:
-                if not self.store.exists(table):
-                    continue
-                reclaimed = si.vacuum_uncommitted(self.store, table, commits)
-                self._audit(
-                    f"vacuum:{table}", reclaimed > 0,
-                    f"orphans={reclaimed}", reclaimed,
-                )
-                out[f"vacuum:{table}"] = {
-                    "fired": reclaimed > 0, "rows_reclaimed": reclaimed,
-                }
+            # apply). Tombstone and side tables ride the same commit
+            # protocol, so they vacuum identically.
+            for fam in si.FAMILIES:
+                for table in si.family_tables(fam):
+                    if not self.store.exists(table):
+                        continue
+                    reclaimed = si.vacuum_uncommitted(
+                        self.store, table, fam.commits
+                    )
+                    self._audit(
+                        f"vacuum:{table}", reclaimed > 0,
+                        f"orphans={reclaimed}", reclaimed,
+                    )
+                    out[f"vacuum:{table}"] = {
+                        "fired": reclaimed > 0, "rows_reclaimed": reclaimed,
+                    }
 
         if self.store.exists(si.IVF_VECS):
             has_quantizer = si.stored_quantizer_size(self.store) > 0

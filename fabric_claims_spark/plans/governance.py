@@ -538,102 +538,83 @@ def forget_documents(
     and no ``vec_ids`` were given, this raises instead of silently
     leaving the subject's embeddings queryable.
 
+    ``doc_ids`` names the documents in its ``doc_id`` column; a
+    single-column frame is taken as-is whatever its column is called,
+    and a multi-column frame without ``doc_id`` raises.
+
     Returns {family: ids_requested} for applied legs (skipped legs
     report 0)."""
-    from fabric_claims_spark.operators.serving_index import next_batch_id
-    from fabric_claims_spark.sources.audit import (
-        append_audit_rows,
-        build_audit_row,
-    )
     from fabric_claims_spark.extensions.bpe import (
         _release_checkpoint,
         _tracked_checkpoint,
     )
+    from fabric_claims_spark.operators import serving_index as si
+    from fabric_claims_spark.sources.audit import (
+        append_audit_rows,
+        build_audit_row,
+    )
 
+    if "doc_id" in doc_ids.columns:
+        id_col = "doc_id"
+    elif len(doc_ids.columns) == 1:
+        id_col = doc_ids.columns[0]
+    else:
+        raise ValueError(
+            "forget_documents: doc_ids must carry a doc_id column or "
+            f"be a single-column frame, got {doc_ids.columns}"
+        )
     if batch_id is None:
-        batch_id = next_batch_id(index_store)
+        batch_id = si.next_batch_id(index_store)
     # materialize the request ONCE (round 14, guide §1.2): each family
     # leg re-derived doc_ids from its source plan (4+ rescans of the
-    # kill-set derivation); the count below doubles as the checkpoint's
-    # materializing action. Non-distinct, preserving the requested-count
-    # semantics exactly.
-    doc_ids, _cp_ids = _tracked_checkpoint(
-        doc_ids.select(F.col(doc_ids.columns[0]).alias("doc_id"))
+    # kill-set derivation). localCheckpoint is eager, so the cost is
+    # paid here; the count below only reuses the truncated lineage.
+    # Non-distinct, preserving the requested-count semantics exactly.
+    doc_ids, cp = _tracked_checkpoint(
+        doc_ids.select(F.col(id_col).alias("doc_id"))
     )
     try:
-        return _forget_documents_body(
-            index_store, doc_ids, batch_id, vec_ids, audit_pipeline,
-            append_audit_rows, build_audit_row,
-        )
+        n_docs = doc_ids.count()
+        results: dict[str, int] = {}
+        audit_rows = []
+        for fam in si.FAMILIES:
+            ids, n = doc_ids, n_docs
+            if fam is si.IVF:
+                if vec_ids is None and index_store.exists(si.IVF_VECS):
+                    docmap = si.read_ivf_docmap(index_store)
+                    if docmap.isEmpty():
+                        raise ValueError(
+                            "forget_documents: an IVF index exists but "
+                            "carries no doc→vec mapping and no vec_ids "
+                            "were given — the subject's embeddings would "
+                            "stay queryable. Either build the index with "
+                            "apply_ivf_batch(doc_col=...) or pass vec_ids "
+                            "explicitly."
+                        )
+                    vec_ids = docmap.join(doc_ids, "doc_id", "left_semi").select(
+                        "vec_id"
+                    )
+                if vec_ids is None:
+                    continue
+                ids, n = vec_ids, vec_ids.count()
+            elif not index_store.exists(fam.data[0][0]):
+                continue
+            applied = getattr(si, f"apply_{fam.name}_deletes")(
+                index_store, ids, batch_id
+            )
+            results[fam.name] = int(n) if applied else 0
+            audit_rows.append(
+                build_audit_row(
+                    pipeline=audit_pipeline,
+                    layer="governance",
+                    status="Succeeded" if applied else "Skipped",
+                    rows_written=results[fam.name],
+                    target_object=f"serving_index:{fam.name}",
+                )
+            )
+        # one append for the whole fan-out (round 13): per-family rows
+        # land with per-row timestamps in leg order, one table version
+        append_audit_rows(index_store.spark, index_store, audit_rows)
+        return results
     finally:
-        _release_checkpoint(_cp_ids)
-
-
-def _forget_documents_body(
-    index_store,
-    doc_ids: DataFrame,
-    batch_id: int,
-    vec_ids: DataFrame | None,
-    audit_pipeline: str,
-    append_audit_rows,
-    build_audit_row,
-) -> dict[str, int]:
-    from fabric_claims_spark.operators.serving_index import (
-        IVF_VECS,
-        LEX_POSTINGS,
-        LSH_MINS,
-        POS_POSTINGS,
-        apply_ivf_deletes,
-        apply_lexical_deletes,
-        apply_lsh_deletes,
-        apply_positional_deletes,
-        read_ivf_docmap,
-    )
-
-    n_docs = doc_ids.count()
-    legs: list[tuple[str, bool, int]] = []
-    if index_store.exists(LEX_POSTINGS):
-        applied = apply_lexical_deletes(index_store, doc_ids, batch_id)
-        legs.append(("lexical", applied, n_docs))
-    if index_store.exists(POS_POSTINGS):
-        applied = apply_positional_deletes(index_store, doc_ids, batch_id)
-        legs.append(("positional", applied, n_docs))
-    if index_store.exists(LSH_MINS):
-        applied = apply_lsh_deletes(index_store, doc_ids, batch_id)
-        legs.append(("lsh", applied, n_docs))
-    if vec_ids is None and index_store.exists(IVF_VECS):
-        docmap = read_ivf_docmap(index_store)
-        if docmap.isEmpty():
-            raise ValueError(
-                "forget_documents: an IVF index exists but carries no "
-                "doc→vec mapping and no vec_ids were given — the "
-                "subject's embeddings would stay queryable. Either "
-                "build the index with apply_ivf_batch(doc_col=...) or "
-                "pass vec_ids explicitly."
-            )
-        vec_ids = docmap.join(
-            doc_ids.select(F.col(doc_ids.columns[0]).alias("doc_id")),
-            "doc_id",
-            "left_semi",
-        ).select("vec_id")
-    if vec_ids is not None:
-        n_vecs = vec_ids.count()
-        applied = apply_ivf_deletes(index_store, vec_ids, batch_id)
-        legs.append(("ivf", applied, n_vecs))
-    results: dict[str, int] = {}
-    audit_rows = []
-    for family, applied, n in legs:
-        results[family] = int(n) if applied else 0
-        audit_rows.append(
-            build_audit_row(
-                pipeline=audit_pipeline,
-                layer="governance",
-                status="Succeeded" if applied else "Skipped",
-                rows_written=int(n) if applied else 0,
-                target_object=f"serving_index:{family}",
-            )
-        )
-    # one append for the whole fan-out (round 13): per-family rows
-    # land with per-row timestamps in leg order, one table version
-    append_audit_rows(index_store.spark, index_store, audit_rows)
-    return results
+        _release_checkpoint(cp)

@@ -43,6 +43,14 @@ _CURRENT = "_CURRENT"
 _KEEP_VERSIONS = 3
 
 
+def _new_version_id() -> str:
+    """A version dir name that sorts lexicographically in commit order:
+    mtime alone ties on coarse-granularity filesystems, which would
+    let ``versions()`` return old/new in arbitrary order and invert a
+    CDC diff built on ``versions()[-2:]``."""
+    return f"v_{time.time_ns():020d}_{uuid.uuid4().hex[:6]}"
+
+
 @dataclass
 class MergeStats:
     """Parity with the SP's @@ROWCOUNT accounting (sp_upsert_claims.sql:105-113)."""
@@ -159,23 +167,26 @@ class TableStore:
             return
         self._commit_version(name, df)
 
-    # -- driver-side metadata I/O (parquet fallback only) -----------------
+    # -- driver-side metadata I/O ------------------------------------------
     #
     # Commit/watermark tables are BOUNDED metadata (one row per batch).
     # Reading or rewriting them through a Spark job pays full job
     # scheduling for a few hundred bytes; Delta itself keeps this class
-    # of state in driver-written log files for the same reason. These
-    # two methods move such tables through pyarrow on the driver under
-    # the identical version-dir + pointer-swap commit, so readers (and
-    # Spark, which reads the same parquet) observe nothing different.
-    # Callers own the "this table is bounded" claim — data tables keep
-    # going through Spark.
+    # of state in driver-written log files for the same reason. On the
+    # parquet store these two methods move such tables through pyarrow
+    # on the driver under the identical version-dir + pointer-swap
+    # commit, so readers (and Spark, which reads the same parquet)
+    # observe nothing different. On Delta they go through Spark, so
+    # callers keep one code path for both backends. Callers own the
+    # "this table is bounded" claim — data tables keep going through
+    # Spark.
 
     def read_local(self, name: str):
         """Current version of a small table as one pyarrow Table —
-        no Spark job. Raises on Delta (callers fall back to Spark)."""
+        no Spark job on the parquet store; Delta collects it through
+        Spark (``toArrow``)."""
         if self.use_delta:
-            raise NotImplementedError("read_local: parquet fallback only")
+            return self.read(name).toArrow()
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -200,17 +211,17 @@ class TableStore:
 
     def overwrite_local(self, name: str, table) -> None:
         """Atomic overwrite of a small table from a pyarrow Table —
-        one data file, no Spark job, same pointer-swap commit and
-        vacuum as every Spark write. Parquet fallback only."""
+        on the parquet store one data file, no Spark job, same
+        pointer-swap commit and vacuum as every Spark write; Delta
+        overwrites through Spark (``createDataFrame``)."""
         if self.use_delta:
-            raise NotImplementedError(
-                "overwrite_local: parquet fallback only"
-            )
+            self.overwrite(name, self.spark.createDataFrame(table))
+            return
         import pyarrow.parquet as pq
 
         table_dir = self._dir(name)
         os.makedirs(table_dir, exist_ok=True)
-        version = f"v_{time.time_ns():020d}_{uuid.uuid4().hex[:6]}"
+        version = _new_version_id()
         new_dir = os.path.join(table_dir, version)
         os.makedirs(new_dir)
         pq.write_table(
@@ -286,10 +297,13 @@ class TableStore:
         removed = 0
         for fname in files:
             meta = pq.ParquetFile(os.path.join(vdir, fname)).metadata
-            try:
-                idx = meta.schema.to_arrow_schema().names.index(column)
-            except ValueError:
+            # statistics are per LEAF column: resolve ``column`` by its
+            # leaf path — a struct ahead of it shifts the leaf index
+            # away from the top-level arrow index
+            leaves = [meta.schema.column(i).path for i in range(meta.num_columns)]
+            if column not in leaves:
                 return None
+            idx = leaves.index(column)
             values: set[str] = set()
             for g in range(meta.num_row_groups):
                 st = meta.row_group(g).column(idx).statistics
@@ -312,7 +326,7 @@ class TableStore:
             return 0
         if not kept:
             return None  # empty result needs a schema-carrying write
-        new_version = f"v_{time.time_ns():020d}_{uuid.uuid4().hex[:6]}"
+        new_version = _new_version_id()
         new_dir = os.path.join(self._dir(name), new_version)
         os.makedirs(new_dir)
         for fname in kept:
@@ -610,7 +624,7 @@ class TableStore:
         # partition dirs hardlink over from the current version.
         table_dir = self._dir(name)
         cur_version = self._current_version(name)
-        new_version = f"v_{uuid.uuid4().hex[:12]}"
+        new_version = _new_version_id()
         new_dir = os.path.join(table_dir, new_version)
         merged_slice.write.mode("overwrite").partitionBy(partition_col).parquet(new_dir)
         # Untouched = not rewritten by Spark just now. Deriving the
@@ -636,11 +650,7 @@ class TableStore:
                             os.path.join(src_part, fname),
                             os.path.join(dst_part, fname),
                         )
-        tmp_ptr = os.path.join(table_dir, f".{_CURRENT}.{uuid.uuid4().hex[:6]}")
-        with open(tmp_ptr, "w") as f:
-            f.write(new_version)
-        os.replace(tmp_ptr, self._pointer(name))
-        self._vacuum(name, keep=new_version)
+        self._swap_current(name, new_version)
         j.unpersist()
         return MergeStats(
             inserted=int(counts["ins"] or 0), updated=int(counts["upd"] or 0)
@@ -673,11 +683,7 @@ class TableStore:
     ) -> None:
         table_dir = self._dir(name)
         os.makedirs(table_dir, exist_ok=True)
-        # nanosecond-prefixed ids sort lexicographically in commit
-        # order: mtime alone ties on coarse-granularity filesystems,
-        # which would let versions() return old/new in arbitrary
-        # order and invert a CDC diff built on versions()[-2:]
-        version = f"v_{time.time_ns():020d}_{uuid.uuid4().hex[:6]}"
+        version = _new_version_id()
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(partition_by)
@@ -716,9 +722,10 @@ class TableStore:
     def _vacuum(self, name: str, keep: str) -> None:
         """Prune old version dirs, keeping the newest few for readers
         mid-scan (Delta vacuum analog, drastically simplified).
-        "Newest" by directory mtime — version names are random hex, so
-        a lexicographic sort would retain arbitrary versions and could
-        delete the one a reader just opened."""
+        "Newest" by directory mtime. Every writer now names versions
+        by their nanosecond commit stamp (``_new_version_id``), but a
+        store may still hold random-hex ids written before the stamp,
+        and mtime orders both shapes."""
         table_dir = self._dir(name)
 
         def _mtime(d: str) -> float:

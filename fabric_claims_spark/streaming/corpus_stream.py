@@ -4,8 +4,10 @@ twin of ``extensions/dedup.py:incremental_dedup``.
 A training-data pipeline at 100 TB doesn't re-dedup the corpus per
 crawl; it dedups each arriving micro-batch against the stored corpus
 and appends only the genuinely new documents. This module is that
-loop: ``readStream`` over a document directory → ``foreachBatch`` →
-batch-vs-store incremental dedup → append survivors.
+loop: a streaming read of a document directory → ``foreachBatch``
+→ batch-vs-store incremental dedup → append survivors. Every stream
+here drains its source the same way (``_drain``: AvailableNow, one
+file per micro-batch).
 
 Delivery semantics: ``foreachBatch`` is at-least-once, and a blind
 append would duplicate a redelivered batch — so every appended row
@@ -29,6 +31,8 @@ Delta the same sink is an O(batch) transactional append.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
@@ -37,6 +41,14 @@ from fabric_claims_spark.extensions.dedup import incremental_dedup
 from fabric_claims_spark.sources.merge import TableStore
 
 INGEST_BATCH_COL = "_ingest_batch_id"
+
+# family -> the ``serving_index`` reader ``index_stream`` returns
+_SERVED = {
+    "lexical": "read_lexical_index",
+    "positional": "read_positional_index",
+    "lsh": "read_lsh_pairs",
+    "ivf": "read_ivf_index",
+}
 
 
 def ingest_batch(
@@ -102,12 +114,6 @@ def corpus_ingest_stream(
     """Drain ``docs_dir`` (AvailableNow) into a deduped corpus store;
     returns the stored corpus (bookkeeping column dropped)."""
     store = TableStore(spark, store_root)
-    schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
-    )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         ingest_batch(
@@ -121,14 +127,7 @@ def corpus_ingest_stream(
             hasher=hasher,
         )
 
-    (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(spark, docs_dir, checkpoint_dir, sink, max_files_per_trigger)
     if not store.exists(table):
         raise ValueError("no batches processed")
     return store.read(table).drop(INGEST_BATCH_COL)
@@ -166,12 +165,6 @@ def dsir_monitor_stream(
     )
 
     store = TableStore(spark, f"{checkpoint_dir}_table")
-    schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         maintain_additive_rollup_idempotent(
@@ -183,153 +176,49 @@ def dsir_monitor_stream(
             count_col="c",
         )
 
-    (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(spark, docs_dir, checkpoint_dir, sink)
     if not store.exists(query_name):
         raise ValueError("no batches processed")
     dc = store.read(query_name).drop(APPLIED_BATCH_COL)
     return dsir_weights_from_bucket_counts(dc)
 
 
-def lexical_index_stream(
+def index_stream(
     spark: SparkSession,
-    docs_dir: str,
+    src_dir: str,
     checkpoint_dir: str,
     store_root: str,
+    family: str,
+    **apply_kwargs,
 ):
-    """Continuously maintained lexical serving index — the streaming
-    face of ``operators/serving_index.apply_lexical_batch``: each
-    arriving corpus file folds into the stored postings / df-rollup /
-    doc-length frames at O(batch) cost. The apply is already
-    idempotent on batch_id with exactly-once visibility (token-stamped
-    appends behind the atomic commit table), so foreachBatch's
-    at-least-once redelivery needs no extra guard here — a torn
-    commit re-runs the apply and the batch-id check makes it a no-op.
+    """Continuously maintained serving index of one ``family``
+    (``lexical`` / ``positional`` / ``lsh`` / ``ivf``) — the streaming
+    face of ``operators/serving_index.apply_<family>_batch``: each
+    arriving file folds into the stored index at O(batch) cost, with
+    ``apply_kwargs`` passed through to the apply (``ivf`` needs its
+    fixed ``centroids``; ``lsh`` takes ``threshold``/``hasher``). The
+    apply is idempotent on batch_id with exactly-once visibility
+    (token-stamped appends behind the atomic commit table), so
+    foreachBatch's at-least-once redelivery needs no extra guard — a
+    torn commit re-runs the apply and the batch-id check makes it a
+    no-op.
 
-    Returns the served (postings, df, doclen) triple — committed rows
-    only, the exact frames ``docs_hybrid_rrf_served`` scores over."""
-    from fabric_claims_spark.operators.serving_index import (
-        apply_lexical_batch,
-        read_lexical_index,
-    )
+    Returns the served view — committed live rows only, the exact
+    frames the served gates read: the lexical (postings, df, doclen)
+    triple, the positional (doc_id, term, pos) frame, the LSH pair
+    table, or the IVF assignment table."""
+    from fabric_claims_spark.operators import serving_index as si
 
+    if family not in _SERVED:
+        raise ValueError(f"unknown index family: {family!r}")
     store = TableStore(spark, store_root)
-    schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
+    apply = getattr(si, f"apply_{family}_batch")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        apply_lexical_batch(store, batch_df, batch_id)
+        apply(store, batch_df, batch_id, **apply_kwargs)
 
-    (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    return read_lexical_index(store)
-
-
-def lsh_index_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    checkpoint_dir: str,
-    store_root: str,
-    threshold: float = 0.5,
-    hasher: str = "xxhash64",
-) -> DataFrame:
-    """Continuously maintained LSH near-dup index — the streaming
-    face of ``operators/serving_index.apply_lsh_batch``: each
-    arriving corpus file signs O(batch) documents, probes the STORED
-    band table for batch-vs-corpus pairs, appends batch-internal
-    pairs, all idempotent per batch_id with exactly-once visibility
-    (same commit-table discipline as the lexical index, so
-    foreachBatch redelivery needs no extra guard).
-
-    Returns the served pair table — the exact frame
-    ``docs_dup_clusters_served`` runs connected components over."""
-    from fabric_claims_spark.operators.serving_index import (
-        apply_lsh_batch,
-        read_lsh_pairs,
-    )
-
-    store = TableStore(spark, store_root)
-    schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        apply_lsh_batch(
-            store, batch_df, batch_id, threshold=threshold, hasher=hasher
-        )
-
-    (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    return read_lsh_pairs(store)
-
-
-def ivf_index_stream(
-    spark: SparkSession,
-    vecs_dir: str,
-    checkpoint_dir: str,
-    store_root: str,
-    centroids: DataFrame,
-) -> DataFrame:
-    """Continuously maintained IVF vector index — the streaming face
-    of ``operators/serving_index.apply_ivf_batch``: each arriving
-    vector file is assigned to its nearest FIXED coarse centroid
-    (O(batch·k); the quantizer never moves between increments — a
-    re-train is an index rebuild by contract) and appended with
-    exactly-once visibility, so foreachBatch's at-least-once
-    redelivery needs no extra guard.
-
-    Returns the served assignment table — the exact frame
-    ``embeddings_ivf_search_served`` probes."""
-    from fabric_claims_spark.operators.serving_index import (
-        apply_ivf_batch,
-        read_ivf_index,
-    )
-
-    store = TableStore(spark, store_root)
-    schema = spark.read.parquet(vecs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(vecs_dir)
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        apply_ivf_batch(store, batch_df, batch_id, centroids)
-
-    (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    return read_ivf_index(store)
+    _drain(spark, src_dir, checkpoint_dir, sink)
+    return getattr(si, _SERVED[family])(store)
 
 
 def dsir_pipeline_stream(
@@ -363,12 +252,6 @@ def dsir_pipeline_stream(
     )
 
     store = TableStore(spark, f"{checkpoint_dir}_table")
-    schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         maintain_additive_rollup_idempotent(
@@ -390,60 +273,13 @@ def dsir_pipeline_stream(
             count_col="_one",
         )
 
-    (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(spark, docs_dir, checkpoint_dir, sink)
     if not store.exists(query_name):
         raise ValueError("no batches processed")
     dc = store.read(query_name).drop(APPLIED_BATCH_COL)
     w = dsir_weights_from_bucket_counts(dc)
     srcs = store.read(f"{query_name}_sources").select("doc_id", "source")
     return dsir_select_from_weights(w, srcs)
-
-
-def positional_index_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    checkpoint_dir: str,
-    store_root: str,
-) -> DataFrame:
-    """Continuously maintained positional index — the streaming face
-    of ``operators/serving_index.apply_positional_batch`` (same
-    contract as lexical_index_stream: the apply is idempotent on
-    batch_id with exactly-once visibility, so at-least-once
-    foreachBatch redelivery needs no extra guard). Returns the served
-    (doc_id, term, pos) frame — committed rows only, the exact frame
-    ``docs_phrase_search_served`` answers phrase queries over."""
-    from fabric_claims_spark.operators.serving_index import (
-        apply_positional_batch,
-        read_positional_index,
-    )
-
-    store = TableStore(spark, store_root)
-    schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        apply_positional_batch(store, batch_df, batch_id)
-
-    (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    return read_positional_index(store)
 
 
 def corpus_mutation_stream(
@@ -491,78 +327,23 @@ def corpus_mutation_stream(
     Returns the served lexical (postings, df, doclen) triple when
     ``lexical`` is maintained, else None — live rows only; the other
     families are read through their own ``read_*`` functions."""
-    from fabric_claims_spark.operators.serving_index import (
-        apply_lexical_batch,
-        apply_lexical_deletes,
-        apply_lsh_batch,
-        apply_lsh_deletes,
-        apply_positional_batch,
-        apply_positional_deletes,
-        read_lexical_index,
-    )
+    from fabric_claims_spark.operators import serving_index as si
 
-    unknown = set(families) - {"lexical", "positional", "lsh"}
+    legs = {
+        "lexical": (si.apply_lexical_batch, si.apply_lexical_deletes),
+        "positional": (si.apply_positional_batch, si.apply_positional_deletes),
+        "lsh": (partial(si.apply_lsh_batch, hasher="md5"), si.apply_lsh_deletes),
+    }
+    unknown = set(families) - set(legs)
     if unknown:
         raise ValueError(f"unknown index families: {sorted(unknown)}")
-    if maintenance is not None and maintenance_every < 1:
-        raise ValueError(
-            f"maintenance_every must be >= 1, got {maintenance_every}"
-        )
     store = TableStore(spark, store_root)
-    schema = spark.read.parquet(mutations_dir).schema
-    if "op" not in schema.names:
-        raise ValueError("mutation log must carry an 'op' column")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(mutations_dir)
+    _drain_mutations(
+        spark, mutations_dir, checkpoint_dir, store,
+        [legs[f] for f in legs if f in families], "doc_id",
+        maintenance, maintenance_every,
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        adds = batch_df.where(F.col("op") == "add").drop("op")
-        dels = batch_df.where(F.col("op") == "del").select("doc_id")
-        # one pass over the micro-batch decides which legs exist
-        # (ADVICE r12): an adds-only batch must not rewrite the df
-        # rollup state, append an empty tombstone file, and grow
-        # every family's commit table through an empty delete leg —
-        # and symmetrically for a dels-only batch. Skipping an empty
-        # leg is idempotence-neutral: its redelivery is equally
-        # empty, and the 2b/2b+1 id sequence stays monotonic with
-        # the skipped id simply never applied.
-        flags = batch_df.agg(
-            F.max((F.col("op") == "add").cast("int")).alias("a"),
-            F.max((F.col("op") == "del").cast("int")).alias("d"),
-        ).first()
-        has_adds = bool(flags["a"])
-        has_dels = bool(flags["d"])
-        a_id, d_id = 2 * batch_id, 2 * batch_id + 1
-        if "lexical" in families:
-            if has_adds:
-                apply_lexical_batch(store, adds, a_id)
-            if has_dels:
-                apply_lexical_deletes(store, dels, d_id)
-        if "positional" in families:
-            if has_adds:
-                apply_positional_batch(store, adds, a_id)
-            if has_dels:
-                apply_positional_deletes(store, dels, d_id)
-        if "lsh" in families:
-            if has_adds:
-                apply_lsh_batch(store, adds, a_id, hasher="md5")
-            if has_dels:
-                apply_lsh_deletes(store, dels, d_id)
-        if maintenance is not None and (batch_id + 1) % maintenance_every == 0:
-            maintenance.run_post_apply()
-
-    (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    return read_lexical_index(store) if "lexical" in families else None
+    return si.read_lexical_index(store) if "lexical" in families else None
 
 
 def embedding_mutation_stream(
@@ -605,47 +386,85 @@ def embedding_mutation_stream(
     fold through the rebuild).
 
     Returns the committed live index frame (``read_ivf_index``)."""
-    from fabric_claims_spark.operators.serving_index import (
-        apply_ivf_batch,
-        apply_ivf_deletes,
-        read_ivf_index,
-    )
+    from fabric_claims_spark.operators import serving_index as si
 
-    if maintenance is not None and maintenance_every < 1:
-        raise ValueError(
-            f"maintenance_every must be >= 1, got {maintenance_every}"
-        )
     store = TableStore(spark, store_root)
-    schema = spark.read.parquet(mutations_dir).schema
-    if "op" not in schema.names:
-        raise ValueError("mutation log must carry an 'op' column")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(mutations_dir)
+    adds = partial(si.apply_ivf_batch, centroids=centroids, doc_col=doc_col)
+    _drain_mutations(
+        spark, mutations_dir, checkpoint_dir, store,
+        [(adds, si.apply_ivf_deletes)], "vec_id",
+        maintenance, maintenance_every,
     )
+    return si.read_ivf_index(store)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        flags = batch_df.agg(
-            F.max((F.col("op") == "add").cast("int")).alias("a"),
-            F.max((F.col("op") == "del").cast("int")).alias("d"),
-        ).first()
-        a_id, d_id = 2 * batch_id, 2 * batch_id + 1
-        if flags["a"]:
-            adds = batch_df.where(F.col("op") == "add").drop("op")
-            apply_ivf_batch(store, adds, a_id, centroids, doc_col=doc_col)
-        if flags["d"]:
-            dels = batch_df.where(F.col("op") == "del").select("vec_id")
-            apply_ivf_deletes(store, dels, d_id)
-        if maintenance is not None and (batch_id + 1) % maintenance_every == 0:
-            maintenance.run_post_apply()
 
+def _drain(
+    spark: SparkSession,
+    src_dir: str,
+    checkpoint_dir: str,
+    sink,
+    max_files_per_trigger: int = 1,
+) -> None:
+    """Run ``sink(batch_df, batch_id)`` over every parquet file in
+    ``src_dir`` not yet in the checkpoint (AvailableNow, one file per
+    micro-batch by default), then return."""
     (
-        stream.writeStream.foreachBatch(sink)
+        spark.readStream.schema(spark.read.parquet(src_dir).schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(src_dir)
+        .writeStream.foreachBatch(sink)
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
         .awaitTermination()
     )
-    return read_ivf_index(store)
+
+
+def _drain_mutations(
+    spark: SparkSession,
+    mutations_dir: str,
+    checkpoint_dir: str,
+    store: TableStore,
+    legs,
+    del_col: str,
+    maintenance,
+    maintenance_every: int,
+) -> None:
+    """The one mutation-log sink behind ``corpus_mutation_stream`` and
+    ``embedding_mutation_stream``. ``legs`` is a list of
+    ``(apply_adds, apply_deletes)`` pairs, applied in order; micro-batch
+    b applies its ``op='add'`` rows under id 2b and the ``del_col`` ids
+    of its ``op='del'`` rows under 2b+1, then runs ``maintenance``
+    every ``maintenance_every`` micro-batches."""
+    if maintenance is not None and maintenance_every < 1:
+        raise ValueError(
+            f"maintenance_every must be >= 1, got {maintenance_every}"
+        )
+    if "op" not in spark.read.parquet(mutations_dir).columns:
+        raise ValueError("mutation log must carry an 'op' column")
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        # one pass over the micro-batch decides which legs exist
+        # (ADVICE r12): an adds-only batch must not rewrite the df
+        # rollup state, append an empty tombstone file, and grow
+        # every family's commit table through an empty delete leg —
+        # and symmetrically for a dels-only batch. Skipping an empty
+        # leg is idempotence-neutral: its redelivery is equally
+        # empty, and the 2b/2b+1 id sequence stays monotonic with
+        # the skipped id simply never applied.
+        flags = batch_df.agg(
+            F.max((F.col("op") == "add").cast("int")).alias("a"),
+            F.max((F.col("op") == "del").cast("int")).alias("d"),
+        ).first()
+        adds = batch_df.where(F.col("op") == "add").drop("op")
+        dels = batch_df.where(F.col("op") == "del").select(del_col)
+        for apply_adds, apply_deletes in legs:
+            if flags["a"]:
+                apply_adds(store, adds, 2 * batch_id)
+            if flags["d"]:
+                apply_deletes(store, dels, 2 * batch_id + 1)
+        if maintenance is not None and (batch_id + 1) % maintenance_every == 0:
+            maintenance.run_post_apply()
+
+    _drain(spark, mutations_dir, checkpoint_dir, sink)

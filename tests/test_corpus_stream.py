@@ -230,9 +230,7 @@ def test_lexical_index_stream_matches_oneshot(spark, tmp_path):
         read_lexical_index,
     )
     from fabric_claims_spark.sources.merge import TableStore
-    from fabric_claims_spark.streaming.corpus_stream import (
-        lexical_index_stream,
-    )
+    from fabric_claims_spark.streaming.corpus_stream import index_stream
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     # two files -> two micro-batches
@@ -251,8 +249,8 @@ def test_lexical_index_stream_matches_oneshot(spark, tmp_path):
         )
 
     ckpt = str(tmp_path / "ckpt_lex")
-    td, dfc, dn = lexical_index_stream(
-        spark, str(docs_dir), ckpt, str(tmp_path / "store_s")
+    td, dfc, dn = index_stream(
+        spark, str(docs_dir), ckpt, str(tmp_path / "store_s"), "lexical"
     )
 
     one = TableStore(spark, str(tmp_path / "store_1"))
@@ -268,8 +266,8 @@ def test_lexical_index_stream_matches_oneshot(spark, tmp_path):
 
     # torn commit: redelivered batch folds nothing twice
     _tear_last_commit(ckpt)
-    td2, dfc2, dn2 = lexical_index_stream(
-        spark, str(docs_dir), ckpt, str(tmp_path / "store_s")
+    td2, dfc2, dn2 = index_stream(
+        spark, str(docs_dir), ckpt, str(tmp_path / "store_s"), "lexical"
     )
     assert rows(td2) == rows(td1)
     assert rows(dfc2) == rows(dfc1)
@@ -292,9 +290,7 @@ def test_lsh_index_stream_matches_oneshot_and_survives_tear(
         read_lsh_pairs,
     )
     from fabric_claims_spark.sources.merge import TableStore
-    from fabric_claims_spark.streaming.corpus_stream import (
-        lsh_index_stream,
-    )
+    from fabric_claims_spark.streaming.corpus_stream import index_stream
 
     rows = [
         (1, BASE_A),
@@ -316,8 +312,8 @@ def test_lsh_index_stream_matches_oneshot_and_survives_tear(
         )
 
     ckpt = str(tmp_path / "ckpt_lsh")
-    got = lsh_index_stream(
-        spark, str(docs_dir), ckpt, str(tmp_path / "store_s")
+    got = index_stream(
+        spark, str(docs_dir), ckpt, str(tmp_path / "store_s"), "lsh"
     )
 
     one = TableStore(spark, str(tmp_path / "store_1"))
@@ -333,8 +329,8 @@ def test_lsh_index_stream_matches_oneshot_and_survives_tear(
     assert (1, 3) in found and (2, 5) in found
 
     _tear_last_commit(ckpt)
-    again = lsh_index_stream(
-        spark, str(docs_dir), ckpt, str(tmp_path / "store_s")
+    again = index_stream(
+        spark, str(docs_dir), ckpt, str(tmp_path / "store_s"), "lsh"
     )
     assert pairs(again) == pairs(want)
 
@@ -355,7 +351,7 @@ def test_ivf_index_stream_matches_oneshot_and_survives_tear(
         read_ivf_index,
     )
     from fabric_claims_spark.sources.merge import TableStore
-    from fabric_claims_spark.streaming.corpus_stream import ivf_index_stream
+    from fabric_claims_spark.streaming.corpus_stream import index_stream
 
     rows = [
         (i, [float((i * 7 + j * 3) % 11) for j in range(4)])
@@ -377,8 +373,9 @@ def test_ivf_index_stream_matches_oneshot_and_survives_tear(
         )
 
     ckpt = str(tmp_path / "ckpt_ivf")
-    got = ivf_index_stream(
-        spark, str(vecs_dir), ckpt, str(tmp_path / "vstore_s"), cent
+    got = index_stream(
+        spark, str(vecs_dir), ckpt, str(tmp_path / "vstore_s"), "ivf",
+        centroids=cent,
     )
 
     one = TableStore(spark, str(tmp_path / "vstore_1"))
@@ -395,8 +392,9 @@ def test_ivf_index_stream_matches_oneshot_and_survives_tear(
     assert len(asg(got)) == 12  # every vector exactly once
 
     _tear_last_commit(ckpt)
-    again = ivf_index_stream(
-        spark, str(vecs_dir), ckpt, str(tmp_path / "vstore_s"), cent
+    again = index_stream(
+        spark, str(vecs_dir), ckpt, str(tmp_path / "vstore_s"), "ivf",
+        centroids=cent,
     )
     assert asg(again) == asg(want)
 
@@ -456,9 +454,7 @@ def test_positional_index_stream_matches_oneshot(spark, tmp_path):
         read_positional_index,
     )
     from fabric_claims_spark.sources.merge import TableStore
-    from fabric_claims_spark.streaming.corpus_stream import (
-        positional_index_stream,
-    )
+    from fabric_claims_spark.streaming.corpus_stream import index_stream
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     docs_dir = tmp_path / "docs"
@@ -474,11 +470,12 @@ def test_positional_index_stream_matches_oneshot(spark, tmp_path):
             docs_dir / f"{name}.parquet",
         )
 
-    streamed = positional_index_stream(
+    streamed = index_stream(
         spark,
         str(docs_dir),
         str(tmp_path / "ckpt_pos"),
         str(tmp_path / "store_s"),
+        "positional",
     )
     one = TableStore(spark, str(tmp_path / "store_1"))
     apply_positional_batch(one, docs, 0)

@@ -105,3 +105,43 @@ def test_delta_merge_null_safe_change_detection(delta_spark, store):
     # NULL -> value is a change
     stats = store.merge("t", _df(delta_spark, [("a", 1, "now-set")]), keys=["k"])
     assert (stats.inserted, stats.updated) == (0, 1)
+
+
+def test_delta_serving_lsh_apply_delete_and_pairs(delta_spark, store, tmp_path):
+    """The serving-index commit protocol on Delta: its commit tables
+    move through ``read_local``/``overwrite_local``, which go through
+    Spark on this backend. The FIRST apply must succeed on an empty
+    store, and after a second batch and one delete the pair table
+    must equal the same lifecycle on the parquet store."""
+    from fabric_claims_spark.localframe import local_frame
+    from fabric_claims_spark.operators.serving_index import (
+        apply_lsh_batch,
+        apply_lsh_deletes,
+        read_lsh_pairs,
+    )
+
+    base = "the quick brown fox jumps over the lazy dog by the river bank"
+    docs = delta_spark.createDataFrame(
+        [
+            (1, base),
+            (2, "an unrelated sentence about tables and their storage"),
+            (3, base + " again"),
+            (4, "yet another line of text with different tokens"),
+            (5, "an unrelated sentence about tables and their storage!"),
+        ],
+        "doc_id long, text string",
+    )
+    parquet = TableStore(delta_spark, str(tmp_path / "parquet"))
+    got = {}
+    for s in (store, parquet):
+        assert apply_lsh_batch(s, docs.where("doc_id <= 2"), 0)
+        assert apply_lsh_batch(s, docs.where("doc_id > 2"), 1)
+        assert not apply_lsh_batch(s, docs.where("doc_id <= 2"), 0)
+        before = {(r["doc_a"], r["doc_b"]) for r in read_lsh_pairs(s).collect()}
+        assert {(1, 3), (2, 5)} <= before
+        kill = local_frame(delta_spark, [(5,)], "doc_id long")
+        assert apply_lsh_deletes(s, kill, 2)
+        got[s.use_delta] = sorted(tuple(r) for r in read_lsh_pairs(s).collect())
+    assert got[True] == got[False]
+    assert all(5 not in (a, b) for a, b, _ in got[True])
+    assert (1, 3) in {(a, b) for a, b, _ in got[True]}

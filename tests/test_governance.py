@@ -372,6 +372,39 @@ def test_forget_documents_cascades_across_serving_families(
     assert read_lexical_index(store)[1].count() == before
 
 
+def test_forget_documents_selects_doc_id_by_name(spark, tmp_path):
+    """An erasure request may carry more than the doc ids: a
+    (vec_id, doc_id) frame erases the docs named in ``doc_id`` — not
+    whatever column comes first — and a multi-column frame without a
+    ``doc_id`` column is rejected instead of guessed at."""
+    import pytest
+
+    from fabric_claims_spark.localframe import local_frame
+    from fabric_claims_spark.operators.serving_index import (
+        apply_lexical_batch,
+        read_lexical_index,
+    )
+    from fabric_claims_spark.plans.governance import forget_documents
+    from fabric_claims_spark.sources.merge import TableStore
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "gamma delta"), (3, "eps zeta"),
+         (4, "eta theta")],
+        "doc_id long, text string",
+    )
+    store = TableStore(spark, str(tmp_path / "idx"))
+    apply_lexical_batch(store, docs, 0)
+
+    req = local_frame(spark, [(3, 1)], "vec_id long, doc_id long")
+    assert forget_documents(store, req) == {"lexical": 1}
+    live = {r["doc_id"] for r in read_lexical_index(store)[2].collect()}
+    assert live == {2, 3, 4}
+
+    bad = local_frame(spark, [(3, 4)], "vec_id long, other long")
+    with pytest.raises(ValueError, match="doc_id"):
+        forget_documents(store, bad)
+
+
 def test_forget_documents_resolves_vectors_from_docmap(spark, tmp_path):
     """Round 13 (VERDICT r12 item 4): complete-by-default erasure.
     When the IVF index was built with ``doc_col``, a forget carrying

@@ -200,3 +200,34 @@ def test_file_count_triggered_compaction_policy(spark, tmp_path):
         maybe_compact_index_table(
             store, LEX_POSTINGS, LEX_COMMITS, file_threshold=0
         )
+
+
+def test_vacuum_reads_token_stats_by_leaf_path_past_a_struct(
+    spark, tmp_path
+):
+    """The file-level vacuum decides each file from its ``_token``
+    footer statistics. Statistics are per parquet LEAF column, so a
+    struct column written ahead of ``_token`` shifts the leaf index
+    away from the top-level one; the struct's second leaf here is
+    constant per file, so reading the wrong leaf would keep the
+    orphan file and drop a committed one."""
+    from fabric_claims_spark.operators.serving_index import _write_commits
+
+    store = TableStore(spark, str(tmp_path / "nested"))
+    schema = "s struct<a: string, b: string>, _token string, v long"
+    files = [  # (s.b, _token, rows): one constant of each per file
+        ("t1", "t1", [1, 2]),
+        ("zz", "t2", [3, 4, 5]),
+        ("t1", "orphan", [6]),
+    ]
+    for sb, tok, vals in files:
+        store.append(
+            "t",
+            spark.createDataFrame(
+                [(("x", sb), tok, v) for v in vals], schema
+            ).coalesce(1),
+        )
+    _write_commits(store, "t_commits", {0: "t1", 1: "t2"})
+
+    assert vacuum_uncommitted(store, "t", "t_commits") == 1
+    assert sorted(r["v"] for r in store.read("t").collect()) == [1, 2, 3, 4, 5]
