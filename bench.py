@@ -18,6 +18,8 @@ earlier — r8's audit trail showed host load escalating mid-run, which
 made the 631 s total undecomposable). Every record this script prints
 is also persisted to ``BENCH_full_r{N}.json`` beside this file, so
 the driver's tail-truncated capture stops eating the per-query dict.
+Two records compare offline, drift-normalized by the canary basket:
+``python tools/bench_compare.py OLD.json NEW.json``.
 """
 
 from __future__ import annotations
@@ -40,8 +42,7 @@ def _current_round(here: str) -> int:
     round's capture. When the driver HAS already written BENCH_r{N}
     (a re-run inside the same round), the env override is the
     authoritative label; without it the inference points one past the
-    recorded rounds, which is still a PRIOR-round-exclusive bound for
-    baseline selection."""
+    recorded rounds."""
     import glob as _glob
     import re as _re
 
@@ -59,9 +60,8 @@ def _current_round(here: str) -> int:
 def _full_record_path(here: str) -> str:
     """Non-clobbering path for this run's full-suite record. The
     canonical name is BENCH_full_r{N:02d}.json; if a record for this
-    round already exists (an earlier run this round — possibly the
-    very baseline the compare just used), suffix _run2, _run3, …
-    instead of overwriting it."""
+    round already exists (an earlier run this round), suffix _run2,
+    _run3, … instead of overwriting it."""
     n = _current_round(here)
     base = os.path.join(here, f"BENCH_full_r{n:02d}")
     if not os.path.exists(base + ".json"):
@@ -215,33 +215,11 @@ def main() -> None:
         for name in registry:
             if name not in timings:
                 run_one(name)
-        # Robust baseline mode (round 11): a single-pass per-query
-        # record is one transient host stall away from a poisoned
-        # baseline (three r11 windows, three different pollution
-        # patterns: a 5.9→26.5 s mid-suite hiccup, then a 3× loaded
-        # headline window). Contention noise is one-sided — it only
-        # ADDS time — so min-of-2-passes is the robust per-query
-        # estimator for a committed baseline-of-record. Opt-in
-        # (SPARK_GRAFT_BENCH_ROBUST=1): the driver's informational
-        # windows stay single-pass.
-        robust = os.environ.get("SPARK_GRAFT_BENCH_ROBUST") == "1"
-        if robust:
-            second: dict[str, float] = {}
-            for name in registry:
-                run_one(name, second)
-            for name, t2 in second.items():
-                if name in timings:
-                    timings[name] = min(timings[name], t2)
         emit(
             {
                 "metric": "headline_suite_total",
                 "value": total,
                 "unit": "sec",
-                **(
-                    {"per_query_stat": "min_of_2_passes"}
-                    if robust
-                    else {}
-                ),
                 "queries": timings,
                 "full_suite_total": round(sum(timings.values()), 3),
                 **canary,
@@ -286,327 +264,6 @@ def main() -> None:
             }
         )
 
-    # Host-drift defense, machine-readable (VERDICT r5 item 7): the
-    # same commit has benched 12.0 s and 17.6 s on this host under
-    # different contention, so a raw cross-round ratio is noise.
-    # Emit tools/bench_compare.normalized_verdict against the newest
-    # recorded round (and round 1) as its own JSON line — the judge
-    # can read the canary-normalized ratio instead of re-deriving it.
-    try:
-        import glob as _glob
-        import re as _re
-
-        from tools.bench_compare import load as _bc_load
-        from tools.bench_compare import normalized_verdict as _bc_verdict
-
-        here = os.path.dirname(os.path.abspath(__file__))
-        rounds = sorted(_glob.glob(os.path.join(here, "BENCH_r*.json")))
-        for ref in {rounds[0], rounds[-1]} if rounds else set():
-            emit(
-                {
-                    "metric": "bench_compare_normalized",
-                    "vs": os.path.basename(ref),
-                    **_bc_verdict(_bc_load(ref), timings),
-                }
-            )
-        # Full-suite cross-round comparison (VERDICT r8 item 2
-        # follow-through): BENCH_full_r{N}.json files carry the
-        # COMPLETE per-query dict plus both canary windows, so from
-        # round 10 on the full-suite total itself gets a normalized
-        # ratio against the newest prior full record — computed over
-        # the shared-query intersection, so registry growth doesn't
-        # masquerade as regression.
-        # Baselines must be PRIOR rounds only: comparing against a
-        # same-round file (e.g. an earlier run of this very suite, or
-        # the thin record a headline-only run used to leave behind)
-        # self-compares and then gets clobbered — the committed r9
-        # record shows 'vs': its own filename. Exclude every full
-        # record belonging to the current round.
-        cur_round = _current_round(here)
-        # Baseline-of-record selection (VERDICT r10 item 6): each
-        # round's CANONICAL full record — BENCH_full_r{N:02d}.json,
-        # no _runK suffix, i.e. the round's first full run, which is
-        # the builder's committed quiet window — is the compare
-        # baseline; the driver's later _runK windows are
-        # informational (the r10 records showed ±20% methodology
-        # spread across windows of one round). Fall back to the
-        # newest _runK only when a round has no canonical record.
-        by_round: dict[int, list[str]] = {}
-        for p in _glob.glob(os.path.join(here, "BENCH_full_r*.json")):
-            m = _re.search(
-                r"BENCH_full_r(\d+)(?:_run\d+)?\.json$",
-                os.path.basename(p),
-            )
-            if m and int(m.group(1)) < cur_round:
-                by_round.setdefault(int(m.group(1)), []).append(p)
-        if full and by_round:
-            import statistics as _stats
-
-            prior_round_files = sorted(by_round[max(by_round)])
-            canonical = [
-                p
-                for p in prior_round_files
-                if "_run" not in os.path.basename(p)
-            ]
-            prior = canonical[0] if canonical else prior_round_files[-1]
-            prior_is_baseline = bool(canonical)
-            prev = _bc_load(prior)
-            shared = [
-                q
-                for q in set(prev) & set(timings)
-                if prev[q] > 0.05  # sub-50ms timings are noise
-            ]
-
-            # Drift basis: the END-of-suite canaries from BOTH runs.
-            # The headline-window canary misnormalizes the suite —
-            # the two windows can drift oppositely within one run
-            # (measured within_run_drift 0.29-0.46 this round), which
-            # manufactures fake per-query regressions. Fall back to
-            # the headline-canary verdict only when the prior record
-            # predates the end-canary instrumentation.
-            def _end_canary(recs: list[dict]) -> dict[str, float]:
-                for r in recs:
-                    if r.get("metric") == "full_suite_drift":
-                        return dict(r.get("canary_end_queries") or {})
-                return {}
-
-            with open(prior) as f:
-                prior_recs = [
-                    json.loads(ln)
-                    for ln in f
-                    if ln.strip().startswith("{")
-                ]
-            prev_end = _end_canary(prior_recs)
-            now_end = _end_canary(records)
-            end_ratios = [
-                now_end[q] / prev_end[q]
-                for q in prev_end
-                if q in now_end and prev_end[q] > 0
-            ]
-            # Basis stability (round 11): the end-canary basis
-            # normalizes correctly only when each run's host held
-            # roughly steady ACROSS its own suite pass — the r11
-            # quiet-window run measured within_run_drift 0.544 (host
-            # sped up 2× mid-run), and dividing the whole suite's
-            # flat raw ratios (0.93) by that end window's 0.474
-            # manufactured 2-3× "normalized regressions" on dozens of
-            # queries that actually ran under the slower early-run
-            # host. When either run's two canary windows disagree by
-            # more than 1.5× in either direction, the normalized
-            # ratios (including the median-confirmed bits, which
-            # share the same host divisor) are basis-bounded noise,
-            # not code signals — the record says so machine-readably
-            # and the raw ratio is authoritative.
-            def _within_drift(recs: list[dict]) -> float | None:
-                for r in recs:
-                    if r.get("metric") == "full_suite_drift":
-                        return r.get("within_run_drift")
-                return None
-
-            from tools.bench_compare import basis_state as _basis_state
-            from tools.bench_compare import (
-                confirmation_host as _confirm_host,
-            )
-
-            # ADVICE r11: None/0.0 drift readings must not silently
-            # count as stable — an unmeasured basis is its own state
-            # and is NOT normalizable.
-            basis = _basis_state(
-                [_within_drift(prior_recs), _within_drift(records)]
-            )
-            basis_stable = basis == "stable"
-            if shared and end_ratios:
-                host = _stats.median(end_ratios)
-                worst = sorted(
-                    (
-                        ((timings[q] / prev[q]) / host, q)
-                        for q in shared
-                        if prev[q] > 0
-                    ),
-                    reverse=True,
-                )
-                tot_prev = sum(prev[q] for q in shared)
-                tot_now = sum(timings[q] for q in shared)
-                # Median confirmation (VERDICT r9 item 7): within-run
-                # drift 0.29–0.46 makes a single suite-pass timing too
-                # noisy to call a >1.5× flag a regression (r9: 9 fake
-                # flags on identical trees). Re-run each flagged query
-                # solo 3× and recompute the ratio from the median —
-                # the flag carries a median-confirmed bit, so only
-                # flags that survive re-measurement read as code
-                # regressions. Bounded to the 8 worst to cap re-run
-                # cost.
-                flags = []
-                confirm_host: float | None = None
-                confirm_host_basis = "none"
-                for n, q in worst:
-                    if n <= 1.5:
-                        break
-                    entry = [q, round(n, 3)]
-                    # Median confirmation: on a stable basis the
-                    # re-run ratio is host-normalized; on an unstable
-                    # basis the host divisor is itself the artifact,
-                    # so confirm against the RAW ratio instead (the
-                    # solo re-runs happen NOW, in the same window as
-                    # the end canary — a transient mid-suite stall,
-                    # e.g. r11's 5.9→26.5 s hiccup on one query,
-                    # shows up as raw_median_ratio ≈ 1 and reads
-                    # unconfirmed). flag_ratio_basis names which.
-                    #
-                    # VERDICT r11 nit: the suite-pass host factor
-                    # cannot normalize re-runs taken minutes later —
-                    # the driver's r11 run2 window stamped three
-                    # 5.8-8.9× "confirmations" on queries that were
-                    # FASTER than r10 in the canonical record,
-                    # because the confirmer re-measured the same
-                    # loaded host against an unloaded baseline. So
-                    # before the first confirmation, re-measure the
-                    # CANARY basket in this same window (median of 3
-                    # solo passes per query) and divide by the
-                    # baseline run's end-canary: a same-window
-                    # re-measure of the baseline side. Falls back to
-                    # the suite host factor only when the prior
-                    # record has no end-canary to re-measure against.
-                    if len(flags) < 8:
-                        if basis_stable and confirm_host is None:
-                            solo_c: dict[str, list[float]] = {}
-                            for _ in range(3):
-                                for cq in prev_end:
-                                    if cq not in timings:
-                                        continue
-                                    scr: dict[str, float] = {}
-                                    run_one(cq, scr)
-                                    solo_c.setdefault(cq, []).append(
-                                        scr[cq]
-                                    )
-                            confirm_host = _confirm_host(
-                                {
-                                    cq: sorted(v)[1]
-                                    for cq, v in solo_c.items()
-                                },
-                                prev_end,
-                            )
-                            if confirm_host is None:
-                                confirm_host = host
-                                confirm_host_basis = (
-                                    "suite-end canary (no shared "
-                                    "canary to re-measure)"
-                                )
-                            else:
-                                confirm_host_basis = (
-                                    "confirmation-window canary vs "
-                                    "baseline end-canary"
-                                )
-                        solo: list[float] = []
-                        for _ in range(3):
-                            scratch: dict[str, float] = {}
-                            run_one(q, scratch)
-                            solo.append(scratch[q])
-                        med = sorted(solo)[1]
-                        med_ratio = (med / prev[q]) / (
-                            confirm_host if basis_stable else 1.0
-                        )
-                        entry += [
-                            round(med_ratio, 3),
-                            bool(med_ratio > 1.5),
-                        ]
-                    flags.append(entry)
-                emit(
-                    {
-                        "metric": "full_suite_compare_normalized",
-                        "vs": os.path.basename(prior),
-                        "vs_is_baseline_of_record": prior_is_baseline,
-                        "drift_basis": "end-of-suite canary",
-                        "basis_stable": basis_stable,
-                        "basis_state": basis,
-                        **(
-                            {}
-                            if basis_stable
-                            else {
-                                "basis_note": (
-                                    "a run's canary windows disagree "
-                                    ">1.5x — normalized ratios and "
-                                    "median-confirmed bits are "
-                                    "basis-bounded noise; read "
-                                    "raw_total_ratio"
-                                )
-                                if basis == "unstable"
-                                else (
-                                    "a compared run carries no "
-                                    "within-run drift reading — the "
-                                    "basis is unmeasured, so "
-                                    "normalized ratios are untrusted; "
-                                    "read raw_total_ratio"
-                                )
-                            }
-                        ),
-                        **(
-                            {
-                                "confirm_window_host": round(
-                                    confirm_host, 3
-                                ),
-                                "confirm_host_basis": (
-                                    confirm_host_basis
-                                ),
-                                "confirm_vs_suite_host": round(
-                                    confirm_host / host, 3
-                                )
-                                if host
-                                else None,
-                            }
-                            if confirm_host is not None
-                            else {}
-                        ),
-                        "raw_total_ratio": round(tot_now / tot_prev, 3)
-                        if tot_prev
-                        else None,
-                        "host_drift": round(host, 3),
-                        "shared_queries": len(shared),
-                        "shared_total_prev": round(tot_prev, 3),
-                        "shared_total_now": round(tot_now, 3),
-                        "normalized_total_ratio": round(
-                            (tot_now / tot_prev) / host, 3
-                        )
-                        if tot_prev
-                        else None,
-                        "worst_normalized": [
-                            [q, round(n, 3)] for n, q in worst[:5]
-                        ],
-                        # entries: [q, suite_ratio] or
-                        # [q, suite_ratio, median_ratio, confirmed]
-                        "flag_ratio_basis": "normalized"
-                        if basis_stable
-                        else "raw",
-                        "regressions_over_1p5x": flags,
-                    }
-                )
-            elif shared:
-                verdict = _bc_verdict(
-                    {q: prev[q] for q in shared},
-                    {q: timings[q] for q in shared},
-                )
-                emit(
-                    {
-                        "metric": "full_suite_compare_normalized",
-                        "vs": os.path.basename(prior),
-                        "vs_is_baseline_of_record": prior_is_baseline,
-                        "shared_total_prev": round(
-                            sum(prev[q] for q in shared), 3
-                        ),
-                        "shared_total_now": round(
-                            sum(timings[q] for q in shared), 3
-                        ),
-                        **verdict,
-                    }
-                )
-    except Exception as e:  # the compare must never sink the bench
-        print(
-            json.dumps(
-                {"metric": "bench_compare_normalized", "error": str(e)[:200]}
-            ),
-            flush=True,
-        )
-
     # The capture that records this run keeps the TAIL of the output,
     # so the compact headline record must also be the very LAST line —
     # printing it only first loses it whenever the full-suite record
@@ -626,10 +283,10 @@ def main() -> None:
     # BENCH_r{N}.json keeps only a head-truncated tail of stdout (r8
     # lost all but 14 of 248 per-query timings), so the audit copy is
     # written here and committed with the round. FULL runs only — a
-    # headline-only run would leave a thin record that a later full
-    # compare mistakes for a complete prior baseline — and never
-    # clobbering: a second full run in the same round gets a _runK
-    # suffix instead of overwriting the file the compare just read.
+    # headline-only run would leave a thin record that an offline
+    # compare (tools/bench_compare.py OLD NEW) mistakes for a complete
+    # one — and never clobbering: a second full run in the same round
+    # gets a _runK suffix instead of overwriting the first.
     if full:
         try:
             here = os.path.dirname(os.path.abspath(__file__))

@@ -124,38 +124,25 @@ def applied_watermark(store: TableStore, table: str) -> int | None:
     statistics — read them driver-side instead of paying a Spark
     aggregate job per protocol check (the same metadata-not-jobs rule
     the commit tables follow). Any file without usable stats falls
-    back to the one-row Spark aggregate; Delta stores always take the
-    Spark path."""
+    back to the one-row Spark aggregate, and so does every store
+    ``TableStore.footer_stats`` cannot answer (Delta, partitioned)."""
     if not store.exists(table):
         return None
-    if not store.use_delta:
-        try:
-            import os
-
-            import pyarrow.parquet as pq
-
-            version = store._current_version(table)
-            vdir = os.path.join(store._dir(table), version or "")
+    try:
+        stats = store.footer_stats(table, APPLIED_BATCH_COL)
+        if stats is not None:
             mx: int | None = None
-            for fname in os.listdir(vdir):
-                path = os.path.join(vdir, fname)
-                if fname.startswith(("_", ".")) or not os.path.isfile(path):
-                    continue
-                md = pq.ParquetFile(path).metadata
-                names = md.schema.to_arrow_schema().names
-                idx = names.index(APPLIED_BATCH_COL)
-                for rg in range(md.num_row_groups):
-                    grp = md.row_group(rg)
-                    if grp.num_rows == 0:
+            for groups in stats.values():
+                for rows, st in groups:
+                    if rows == 0:
                         continue
-                    st = grp.column(idx).statistics
                     if st is None or not st.has_min_max:
                         raise LookupError("no footer stats")
                     v = int(st.max)
                     mx = v if mx is None else max(mx, v)
             return mx
-        except Exception:
-            pass  # unreadable footer/stats: authoritative Spark path
+    except Exception:
+        pass  # unreadable footer/stats: authoritative Spark path
     row = store.read(table).select(F.max(APPLIED_BATCH_COL)).head()
     return None if row is None or row[0] is None else int(row[0])
 

@@ -1182,8 +1182,8 @@ def ivf_bucket_skew(store: TableStore, k: int | None = None) -> float:
     groupBy — at most k rows out of the aggregate — instead of paying
     for a recall evaluation). The mean is n/k over ALL quantizer
     buckets: an empty bucket is skew evidence, not a missing row, and
-    this matches the measured crossover table
-    (tools/scale_round10.py ``ivf_crossover``).
+    this matches the measured crossover table (SCALING.md "IVF
+    maintenance vs REBUILD crossover").
 
     ``k`` comes from the stored quantizer when a rebuild has
     published one (``read_ivf_centroids``); before the first rebuild

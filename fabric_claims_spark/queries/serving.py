@@ -263,7 +263,8 @@ def docs_hybrid_rrf_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     posting / df / doc-length frames are READ from a TableStore
     serving index built in two increments instead of derived in-plan.
     In production the store is built once and every query amortizes
-    it (tools/scale_round8.py measures the amortized rerun cost);
+    it (SCALING.md "Materialized serving indexes: amortized rerun
+    cost");
     the oracle — and therefore the hash — is the in-plan twin's."""
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")

@@ -2786,14 +2786,14 @@ def docs_decontaminated_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 5): the uncapped removal above joins train grams to eval grams on
 # equality — linear on real data, but a boilerplate 8-gram (license
 # header, nav chrome) shared by every eval doc AND a large train
-# slice makes that key quadratic-hot (measured: tools/
-# scale_round10.decon_skew). The production lever is a
-# document-frequency cutoff on the PROBE side: an eval gram matching
-# more than ``_DECON_DF_CAP`` train documents is boilerplate, not
-# contamination evidence — exactly the LSH bucket-cap discipline
-# (extensions/dedup.incremental_dedup). The cap bounds every gram's
-# join fan-out, so the candidate table is ≤ cap·|eval grams| rows by
-# construction.
+# slice makes that key quadratic-hot (measured: SCALING.md
+# "Decontamination hot-gram skew and the df cap"). The production
+# lever is a document-frequency cutoff on the PROBE side: an eval
+# gram matching more than ``_DECON_DF_CAP`` train documents is
+# boilerplate, not contamination evidence — exactly the LSH
+# bucket-cap discipline (extensions/dedup.incremental_dedup). The
+# cap bounds every gram's join fan-out, so the candidate table is
+# ≤ cap·|eval grams| rows by construction.
 #
 # _DECON_DF_CAP = 1 pins the MECHANISM at a value the fixture can
 # exercise (natural df maxes at 2 here: the capped release keeps the

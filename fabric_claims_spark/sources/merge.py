@@ -262,6 +262,40 @@ class TableStore:
                 ).metadata.num_rows
         return total
 
+    def footer_stats(
+        self, name: str, column: str
+    ) -> dict[str, list[tuple[int, object]]] | None:
+        """``column``'s parquet footer statistics in the current
+        version, read driver-side: ``{data file path: [(rows,
+        statistics) per row group]}``. Statistics are per LEAF column,
+        so ``column`` is resolved by its leaf path — a struct ahead of
+        it shifts the leaf index away from the top-level arrow index.
+        Returns ``None`` when flat footers cannot answer: Delta store,
+        missing table, partitioned layout, or a file without
+        ``column``."""
+        version = None if self.use_delta else self._current_version(name)
+        if version is None:
+            return None
+        import pyarrow.parquet as pq
+
+        vdir = os.path.join(self._dir(name), version)
+        entries = sorted(os.listdir(vdir))
+        if any(os.path.isdir(os.path.join(vdir, e)) for e in entries):
+            return None  # partitioned layout: not flat-file decidable
+        out: dict[str, list[tuple[int, object]]] = {}
+        for fname in entries:
+            if fname.startswith(("_", ".")) or not fname.endswith(".parquet"):
+                continue
+            path = os.path.join(vdir, fname)
+            meta = pq.ParquetFile(path).metadata
+            leaves = [meta.schema.column(i).path for i in range(meta.num_columns)]
+            if column not in leaves:
+                return None
+            idx = leaves.index(column)
+            groups = [meta.row_group(g) for g in range(meta.num_row_groups)]
+            out[path] = [(g.num_rows, g.column(idx).statistics) for g in groups]
+        return out
+
     def prune_files_by_value(
         self, name: str, column: str, keep_values: set[str]
     ) -> int | None:
@@ -279,34 +313,14 @@ class TableStore:
         with multiple values / missing stats / nulls in ``column``, or
         every file dropping (an empty version needs a schema-carrying
         write) — and the caller falls back to the row-level path."""
-        if self.use_delta or not self.exists(name):
+        stats = self.footer_stats(name, column)
+        if stats is None:
             return None
-        import pyarrow.parquet as pq
-
-        version = self._current_version(name)
-        vdir = os.path.join(self._dir(name), version)
-        entries = sorted(os.listdir(vdir))
-        if any(os.path.isdir(os.path.join(vdir, e)) for e in entries):
-            return None  # partitioned layout: not flat-file decidable
-        files = [
-            e
-            for e in entries
-            if e.endswith(".parquet") and not e.startswith(("_", "."))
-        ]
         kept: list[str] = []
         removed = 0
-        for fname in files:
-            meta = pq.ParquetFile(os.path.join(vdir, fname)).metadata
-            # statistics are per LEAF column: resolve ``column`` by its
-            # leaf path — a struct ahead of it shifts the leaf index
-            # away from the top-level arrow index
-            leaves = [meta.schema.column(i).path for i in range(meta.num_columns)]
-            if column not in leaves:
-                return None
-            idx = leaves.index(column)
+        for path, groups in stats.items():
             values: set[str] = set()
-            for g in range(meta.num_row_groups):
-                st = meta.row_group(g).column(idx).statistics
+            for _rows, st in groups:
                 if (
                     st is None
                     or not st.has_min_max
@@ -319,9 +333,9 @@ class TableStore:
             if len(values) != 1:
                 return None
             if next(iter(values)) in keep_values:
-                kept.append(fname)
+                kept.append(path)
             else:
-                removed += meta.num_rows
+                removed += sum(rows for rows, _st in groups)
         if removed == 0:
             return 0
         if not kept:
@@ -329,10 +343,8 @@ class TableStore:
         new_version = _new_version_id()
         new_dir = os.path.join(self._dir(name), new_version)
         os.makedirs(new_dir)
-        for fname in kept:
-            os.link(
-                os.path.join(vdir, fname), os.path.join(new_dir, fname)
-            )
+        for path in kept:
+            os.link(path, os.path.join(new_dir, os.path.basename(path)))
         self._swap_current(name, new_version)
         return removed
 

@@ -75,9 +75,9 @@ def test_aqe_skew_split_blind_to_inline_aggregate_build_side(skew_session):
     shuffle: OptimizeSkewedJoin pattern-matches Sort-over-shuffle-
     stage children only, so the pattern never matches regardless of
     thresholds. Staging the aggregate as its own materialization
-    boundary restores the split. Measured by
-    tools/scale_round6_skew.aqe_skew_probe (SCALING.md round-7
-    table: inline 32 tasks / 85k-row hot task at every threshold;
+    boundary restores the split. Measured in SCALING.md "AQE
+    skew-split: the measured truth" (round-7 table: inline 32 tasks /
+    85k-row hot task at every threshold;
     staged 107 tasks / 5.5k-row max). This pins the reason the
     grouped join-back's memory-safety argument rests on the STREAMING
     merge join, not on AQE splitting."""

@@ -6,6 +6,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from pyspark.sql import functions as F
 
+from fabric_claims_spark.extensions.dedup import minhash_near_dups
 from fabric_claims_spark.operators.dedup import dedup_latest
 from fabric_claims_spark.operators.quality import Rule, split_by_rules
 from fabric_claims_spark.sources.merge import TableStore
@@ -549,6 +550,44 @@ def test_star_contraction_equals_propagation_property(spark, edges):
 
 
 # -- cascade stage-order equivalence ----------------------------------------
+def _lsh_pairs(docs):
+    return minhash_near_dups(
+        docs, "doc_id", "text", threshold=0.5, num_hashes=64, bands=16,
+        hasher="md5",
+    ).select("doc_a", "doc_b")
+
+
+def cascade_survivors(docs, lsh_over_raw: bool):
+    """Reference implementation of both dedup-cascade orderings
+    (SCALING.md round 7), returning the near-stage survivor ids — the
+    part the reorder affects."""
+    exact_surv = docs.groupBy(F.md5("text")).agg(
+        F.min("doc_id").alias("doc_id")
+    )
+    if lsh_over_raw:
+        # signatures over the raw corpus, pairs post-filtered to exact
+        # survivors on both endpoints
+        pairs = _lsh_pairs(docs)
+        a = exact_surv.select(F.col("doc_id").alias("doc_a"))
+        b = exact_surv.select(F.col("doc_id").alias("doc_b"))
+        dropped = (
+            pairs.join(a, "doc_a").join(b, "doc_b")
+            .select(F.col("doc_b").alias("doc_id"))
+            .distinct()
+        )
+    else:
+        # signatures over the exact survivors only
+        surv_docs = docs.join(
+            exact_surv.select("doc_id"), "doc_id", "semi"
+        )
+        dropped = (
+            _lsh_pairs(surv_docs)
+            .select(F.col("doc_b").alias("doc_id"))
+            .distinct()
+        )
+    return exact_surv.join(dropped, "doc_id", "left_anti").select("doc_id")
+
+
 doc_st = st.lists(
     # tiny word alphabet + short docs → exact copies AND near-dups
     st.lists(st.sampled_from(["alpha", "beta", "gamma", "delta"]),
@@ -567,8 +606,6 @@ def test_cascade_reorder_equivalence_property(spark, docs):
     copies carry identical text, hence identical signatures, so
     running the signature stage on survivors only drops pairs whose
     endpoint was already gone with its exact copy."""
-    from tools.scale_round7 import cascade_survivors
-
     d = spark.createDataFrame(
         [(i, " ".join(words)) for i, words in enumerate(docs)],
         "doc_id long, text string",

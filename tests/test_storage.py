@@ -282,6 +282,43 @@ def test_idempotent_rollup_skips_redelivered_batch(spark, tmp_path):
     assert APPLIED_BATCH_COL not in state.columns
 
 
+def test_applied_watermark_reads_stats_by_leaf_path_past_a_struct(
+    spark, tmp_path
+):
+    """The applied-batch watermark comes from the parquet footer
+    statistics of ``_applied_batch_id``. Statistics are per LEAF
+    column, so a struct key ahead of it shifts the leaf index away
+    from the top-level one: reading by the top-level index returns
+    the statistics of ``v`` (999), and every later batch would then
+    read as already applied and be skipped."""
+    from fabric_claims_spark.operators.rollup import (
+        applied_watermark,
+        maintain_additive_rollup_idempotent,
+    )
+
+    store = TableStore(spark, str(tmp_path / "nested"))
+    store.overwrite(
+        "w",
+        spark.createDataFrame(
+            [((1, 2), 999, 3)],
+            "k struct<a: long, b: long>, v long, _applied_batch_id long",
+        ),
+    )
+    assert applied_watermark(store, "w") == 3
+
+    df = spark.createDataFrame(
+        [((1, 2), 999)], "k struct<a: long, b: long>, v long"
+    )
+    maintain_additive_rollup_idempotent(
+        store, "r", df, 3, keys=["k"], sum_cols=["v"]
+    )
+    assert applied_watermark(store, "r") == 3
+    state = maintain_additive_rollup_idempotent(
+        store, "r", df, 4, keys=["k"], sum_cols=["v"]
+    )
+    assert [(r["n"], r["v"]) for r in state.collect()] == [(2, 1998)]
+
+
 def test_versions_and_read_version_time_travel(spark, tmp_path):
     from fabric_claims_spark.sources.merge import TableStore
 

@@ -79,49 +79,6 @@ def load(path: str) -> dict[str, float]:
     return {k: float(v) for k, v in best.items()}
 
 
-def basis_state(drifts: list) -> str:
-    """Classify the normalization basis from the two compared runs'
-    ``within_run_drift`` readings (each may be None when a record
-    predates the drift instrumentation, or 0.0 only on a degenerate
-    zero-length canary).
-
-    ADVICE r11: the old truthiness filter (``if d``) dropped a 0.0
-    reading exactly like a missing one, and two missing readings
-    defaulted to "stable" — an unmeasurable basis was trusted. Now:
-    any missing (or degenerate non-positive) reading makes the basis
-    ``unmeasured``; a present reading outside [2/3, 1.5] makes it
-    ``unstable``; only fully-measured in-band runs are ``stable``.
-    Callers must treat anything but "stable" as not-normalizable
-    (raw ratios authoritative).
-    """
-    if not drifts or any(d is None or d <= 0 for d in drifts):
-        return "unmeasured"
-    return (
-        "stable"
-        if all(2 / 3 <= d <= 1.5 for d in drifts)
-        else "unstable"
-    )
-
-
-def confirmation_host(
-    canary_now: dict[str, float], canary_prev: dict[str, float]
-) -> float | None:
-    """Host factor for median-confirmation re-runs (VERDICT r11 nit):
-    the suite-pass host factor cannot normalize solo re-runs taken
-    minutes later on a possibly different load, so the confirmer
-    re-measures the canary basket in ITS OWN window and divides by
-    the baseline run's end-canary — a same-window re-measure of the
-    baseline side. Returns the median ratio, or None when the runs
-    share no positively-timed canary (caller must then fall back and
-    say so)."""
-    ratios = [
-        canary_now[q] / canary_prev[q]
-        for q in canary_prev
-        if q in canary_now and canary_prev[q] > 0 and canary_now[q] > 0
-    ]
-    return statistics.median(ratios) if ratios else None
-
-
 def main() -> int:
     if len(sys.argv) != 3:
         raise SystemExit(__doc__.strip().splitlines()[-2].strip())
@@ -167,41 +124,3 @@ def main() -> int:
 if __name__ == "__main__":
     sys.exit(main())
 
-
-def normalized_verdict(
-    old: dict[str, float], new: dict[str, float]
-) -> dict:
-    """The comparison as data (for embedding in bench output): canary
-    host-drift ratio, the normalized headline-equivalent ratio, and
-    the worst normalized per-query changes."""
-    ratios = [
-        new[q] / old[q] for q in CANARY if q in old and q in new and old[q] > 0
-    ]
-    label = "canary"
-    if not ratios:
-        ratios = [
-            new[q] / old[q]
-            for q in set(old) & set(new)
-            if old[q] > 0.05
-        ]
-        label = "all-shared-median"
-    if not ratios:
-        return {"error": "no overlap"}
-    host = statistics.median(ratios)
-    shared = [q for q in set(old) & set(new) if old[q] > 0]
-    norm = sorted(
-        ((round((new[q] / old[q]) / host, 3), q) for q in shared),
-        reverse=True,
-    )
-    return {
-        "host_drift": round(host, 3),
-        "drift_basis": label,
-        "shared_queries": len(shared),
-        "normalized_total_ratio": round(
-            (sum(new[q] for q in shared) / sum(old[q] for q in shared))
-            / host,
-            3,
-        ),
-        "worst_normalized": [[q, r] for r, q in norm[:5]],
-        "regressions_over_1p5x": [[q, r] for r, q in norm if r > 1.5],
-    }
