@@ -18,14 +18,17 @@ and a 10-row write drops from ~5 s to ~0.2 s.
 ``local_frame`` is the drop-in: rows are normalized to object-dtype
 pandas columns (None stays None — never NaN-coerced) and handed to
 ``createDataFrame`` with the caller's schema, falling back to the
-classic path if the conversion cannot represent the rows. Requires
-``spark.sql.execution.arrow.pyspark.enabled`` (set by
+classic path if the conversion cannot represent the rows. Rows holding
+a float NaN at any depth take the classic path too: an object column
+cannot tell NaN from missing, so Arrow would land the NaN as NULL.
+Requires ``spark.sql.execution.arrow.pyspark.enabled`` (set by
 ``session.get_spark``) for the Arrow fast path; without it the values
 are still correct, just slower.
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,6 +46,17 @@ def _field_names(schema: StructType | str) -> list[str]:
     return list(parsed.names)
 
 
+def _has_nan(value) -> bool:
+    """True if ``value`` is, or nests in a list/tuple/dict, a float NaN."""
+    if isinstance(value, float):
+        return math.isnan(value)
+    if isinstance(value, dict):
+        return any(_has_nan(v) for v in value.values())
+    if isinstance(value, (list, tuple)):
+        return any(_has_nan(v) for v in value)
+    return False
+
+
 def local_frame(
     spark: SparkSession,
     rows: Iterable[Sequence],
@@ -57,6 +71,8 @@ def local_frame(
     # consumed it, so a generator argument whose Arrow conversion
     # threw would silently land as an EMPTY frame.
     data = [tuple(r) for r in rows]
+    if _has_nan(data):
+        return spark.createDataFrame(data, schema)
     try:
         # pandas import inside the try: a missing/broken pandas takes
         # the documented always-correct classic path instead of

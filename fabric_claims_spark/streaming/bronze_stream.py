@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from fabric_claims_spark.pipeline.bronze import run_bronze_on_df
 from fabric_claims_spark.schemas import CLAIMS_RAW_SCHEMA, CORRUPT_COL
 from fabric_claims_spark.sources.merge import TableStore
+from fabric_claims_spark.streaming import drain
 
 
 def run_bronze_streaming(
@@ -52,11 +53,5 @@ def run_bronze_streaming(
         )
         batch_metrics.append(metrics)
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(stream, checkpoint_dir, sink=process_batch)
     return batch_metrics

@@ -6,8 +6,9 @@ crawl; it dedups each arriving micro-batch against the stored corpus
 and appends only the genuinely new documents. This module is that
 loop: a streaming read of a document directory → ``foreachBatch``
 → batch-vs-store incremental dedup → append survivors. Every stream
-here drains its source the same way (``_drain``: AvailableNow, one
-file per micro-batch).
+here reads its source the same way (``_read``: one parquet file per
+micro-batch) and runs it with ``streaming.drain`` (AvailableNow) or,
+for a pure count fold, ``streaming.fold``.
 
 Delivery semantics: ``foreachBatch`` is at-least-once, and a blind
 append would duplicate a redelivered batch — so every appended row
@@ -38,7 +39,17 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from fabric_claims_spark.extensions.dedup import incremental_dedup
+from fabric_claims_spark.operators import serving_index as si
+from fabric_claims_spark.operators.dsir import (
+    dsir_bucket_rows,
+    dsir_weights_from_bucket_counts,
+)
+from fabric_claims_spark.operators.rollup import (
+    APPLIED_BATCH_COL,
+    maintain_additive_rollup_idempotent,
+)
 from fabric_claims_spark.sources.merge import TableStore
+from fabric_claims_spark.streaming import drain, fold
 
 INGEST_BATCH_COL = "_ingest_batch_id"
 
@@ -127,7 +138,9 @@ def corpus_ingest_stream(
             hasher=hasher,
         )
 
-    _drain(spark, docs_dir, checkpoint_dir, sink, max_files_per_trigger)
+    drain(
+        _read(spark, docs_dir, max_files_per_trigger), checkpoint_dir, sink=sink
+    )
     if not store.exists(table):
         raise ValueError("no batches processed")
     return store.read(table).drop(INGEST_BATCH_COL)
@@ -155,31 +168,13 @@ def dsir_monitor_stream(
     recompute the B-row llr and the weight join over the bounded
     count table (fold counts, recompute statistics at read: the
     z-score monitor discipline)."""
-    from fabric_claims_spark.operators.dsir import (
-        dsir_bucket_rows,
-        dsir_weights_from_bucket_counts,
+    dc = fold(
+        dsir_bucket_rows(_read(spark, docs_dir)),
+        checkpoint_dir,
+        query_name,
+        keys=["doc_id", "bucket", "tgt"],
+        count_col="c",
     )
-    from fabric_claims_spark.operators.rollup import (
-        APPLIED_BATCH_COL,
-        maintain_additive_rollup_idempotent,
-    )
-
-    store = TableStore(spark, f"{checkpoint_dir}_table")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        maintain_additive_rollup_idempotent(
-            store,
-            query_name,
-            dsir_bucket_rows(batch_df),
-            batch_id,
-            keys=["doc_id", "bucket", "tgt"],
-            count_col="c",
-        )
-
-    _drain(spark, docs_dir, checkpoint_dir, sink)
-    if not store.exists(query_name):
-        raise ValueError("no batches processed")
-    dc = store.read(query_name).drop(APPLIED_BATCH_COL)
     return dsir_weights_from_bucket_counts(dc)
 
 
@@ -207,8 +202,6 @@ def index_stream(
     frames the served gates read: the lexical (postings, df, doclen)
     triple, the positional (doc_id, term, pos) frame, the LSH pair
     table, or the IVF assignment table."""
-    from fabric_claims_spark.operators import serving_index as si
-
     if family not in _SERVED:
         raise ValueError(f"unknown index family: {family!r}")
     store = TableStore(spark, store_root)
@@ -217,7 +210,7 @@ def index_stream(
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         apply(store, batch_df, batch_id, **apply_kwargs)
 
-    _drain(spark, src_dir, checkpoint_dir, sink)
+    drain(_read(spark, src_dir), checkpoint_dir, sink=sink)
     return getattr(si, _SERVED[family])(store)
 
 
@@ -239,14 +232,6 @@ def dsir_pipeline_stream(
     map the mixture stage needs is folded per batch into a
     (doc_id, source) side table under the same idempotent batch-id
     discipline, so reads never re-scan raw text."""
-    from fabric_claims_spark.operators.dsir import (
-        dsir_bucket_rows,
-        dsir_weights_from_bucket_counts,
-    )
-    from fabric_claims_spark.operators.rollup import (
-        APPLIED_BATCH_COL,
-        maintain_additive_rollup_idempotent,
-    )
     from fabric_claims_spark.queries.text_docs import (
         dsir_select_from_weights,
     )
@@ -273,7 +258,7 @@ def dsir_pipeline_stream(
             count_col="_one",
         )
 
-    _drain(spark, docs_dir, checkpoint_dir, sink)
+    drain(_read(spark, docs_dir), checkpoint_dir, sink=sink)
     if not store.exists(query_name):
         raise ValueError("no batches processed")
     dc = store.read(query_name).drop(APPLIED_BATCH_COL)
@@ -327,8 +312,6 @@ def corpus_mutation_stream(
     Returns the served lexical (postings, df, doclen) triple when
     ``lexical`` is maintained, else None — live rows only; the other
     families are read through their own ``read_*`` functions."""
-    from fabric_claims_spark.operators import serving_index as si
-
     legs = {
         "lexical": (si.apply_lexical_batch, si.apply_lexical_deletes),
         "positional": (si.apply_positional_batch, si.apply_positional_deletes),
@@ -386,8 +369,6 @@ def embedding_mutation_stream(
     fold through the rebuild).
 
     Returns the committed live index frame (``read_ivf_index``)."""
-    from fabric_claims_spark.operators import serving_index as si
-
     store = TableStore(spark, store_root)
     adds = partial(si.apply_ivf_batch, centroids=centroids, doc_col=doc_col)
     _drain_mutations(
@@ -398,26 +379,15 @@ def embedding_mutation_stream(
     return si.read_ivf_index(store)
 
 
-def _drain(
-    spark: SparkSession,
-    src_dir: str,
-    checkpoint_dir: str,
-    sink,
-    max_files_per_trigger: int = 1,
-) -> None:
-    """Run ``sink(batch_df, batch_id)`` over every parquet file in
-    ``src_dir`` not yet in the checkpoint (AvailableNow, one file per
-    micro-batch by default), then return."""
-    (
+def _read(
+    spark: SparkSession, src_dir: str, max_files_per_trigger: int = 1
+) -> DataFrame:
+    """The parquet files of ``src_dir`` as a stream, one file per
+    micro-batch by default (schema probed from the files once)."""
+    return (
         spark.readStream.schema(spark.read.parquet(src_dir).schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(src_dir)
-        .writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
     )
 
 
@@ -467,4 +437,4 @@ def _drain_mutations(
         if maintenance is not None and (batch_id + 1) % maintenance_every == 0:
             maintenance.run_post_apply()
 
-    _drain(spark, mutations_dir, checkpoint_dir, sink)
+    drain(_read(spark, mutations_dir), checkpoint_dir, sink=sink)

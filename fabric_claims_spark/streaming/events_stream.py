@@ -2,9 +2,10 @@
 stateful operator (SURVEY.md §2.9 — the built-ins the reference's
 hand-rolled protocol never needed, provided for stream-shaped data).
 
-Both run with Trigger.AvailableNow over a file source, so the same
-code serves batch backfill and continuous operation; the checkpoint
-carries watermark + operator state across restarts.
+Every stream here runs through ``streaming.drain`` (or its rollup
+form ``streaming.fold``) with Trigger.AvailableNow over a file source,
+so the same code serves batch backfill and continuous operation; the
+checkpoint carries watermark + operator state across restarts.
 
 events.ts arrives as TIMESTAMP(NANOS) or timestamp[us] depending on
 the data-generator generation; _read_events_stream probes the batch
@@ -17,7 +18,7 @@ from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -29,7 +30,16 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from fabric_claims_spark.localframe import local_frame  # noqa: E402
+from fabric_claims_spark.extensions.dedup import md5_long
+from fabric_claims_spark.localframe import local_frame
+from fabric_claims_spark.operators.anomaly import modified_zscore_from_counts
+from fabric_claims_spark.operators.funnel import windowed_funnel
+from fabric_claims_spark.operators.rollup import (
+    APPLIED_BATCH_COL,
+    applied_watermark,
+)
+from fabric_claims_spark.sources.merge import TableStore
+from fabric_claims_spark.streaming import drain, fold
 
 EVENTS_LONG_TS_SCHEMA = StructType(
     [
@@ -101,16 +111,7 @@ def hourly_counts_stream(
             "value_sum",
         )
     )
-    (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    return spark.table(query_name)
+    return drain(agg, checkpoint_dir, output_mode, query_name=query_name)
 
 
 def hopping_counts_stream(
@@ -150,16 +151,7 @@ def hopping_counts_stream(
             "value_sum",
         )
     )
-    (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    return spark.table(query_name)
+    return drain(agg, checkpoint_dir, output_mode, query_name=query_name)
 
 
 _STATE_SCHEMA = "last_ts timestamp, n long, total double"
@@ -219,32 +211,33 @@ def running_user_totals_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    # foreachBatch sink (the memory sink cannot recover from a
-    # checkpoint): each micro-batch's update rows MERGE into a
-    # TableStore keyed on user_id — latest-per-user lands distributed,
-    # idempotent under batch re-delivery, and nothing accumulates on
-    # the driver (a collect()-into-dict sink would be a scale-killer).
-    from fabric_claims_spark.sources.merge import TableStore
+    return _merge_on_user(result, checkpoint_dir, query_name, _OUTPUT_SCHEMA)
 
+
+def _merge_on_user(
+    result: DataFrame, checkpoint_dir: str, query_name: str, schema: StructType
+) -> DataFrame:
+    """Drain a stateful operator's update rows into the TableStore
+    table ``query_name`` at ``{checkpoint_dir}_table``, MERGEd on
+    user_id; an empty ``schema`` frame for a zero-batch stream.
+
+    A foreachBatch sink because the memory sink cannot recover from a
+    checkpoint: latest-per-user lands distributed, idempotent under
+    batch re-delivery, and nothing accumulates on the driver (a
+    collect()-into-dict sink would be a scale-killer)."""
+    spark = result.sparkSession
     store = TableStore(spark, f"{checkpoint_dir}_table")
-    table_name = query_name
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        store.merge(
-            table_name, batch_df, keys=["user_id"], update_only_changed=False
-        )
-
-    (
-        result.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain(
+        result,
+        checkpoint_dir,
+        "update",
+        sink=lambda batch_df, _: store.merge(
+            query_name, batch_df, keys=["user_id"], update_only_changed=False
+        ),
     )
-    if not store.exists(table_name):  # zero-batch stream
-        return local_frame(spark, [], _OUTPUT_SCHEMA)
-    return store.read(table_name)
+    if not store.exists(query_name):  # zero-batch stream
+        return local_frame(spark, [], schema)
+    return store.read(query_name)
 
 
 def deduped_events_stream(
@@ -270,16 +263,7 @@ def deduped_events_stream(
     deduped = stream.dropDuplicatesWithinWatermark(list(dedup_keys)).select(
         "event_id", "user_id", "event_type", "value", "event_ts"
     )
-    (
-        deduped.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    return spark.table(query_name)
+    return drain(deduped, checkpoint_dir, query_name=query_name)
 
 
 def views_with_recent_purchase_stream(
@@ -329,16 +313,7 @@ def views_with_recent_purchase_stream(
         & (F.col("purchase_ts") <= F.col("view_ts"))
         & (F.col("purchase_ts") >= F.col("view_ts") - F.expr(f"INTERVAL {lookback}")),
     ).select("view_id", "user_id", "view_ts", "purchase_id", "purchase_ts", "purchase_value")
-    (
-        joined.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    return spark.table(query_name)
+    return drain(joined, checkpoint_dir, query_name=query_name)
 
 
 def rollup_maintenance_stream(
@@ -361,45 +336,19 @@ def rollup_maintenance_stream(
     redeliveries — so AvailableNow restarts cannot double-count. The
     equivalence test pins stream == one-shot batch aggregate; the
     redelivery test pins the skip."""
-    from pyspark.sql import functions as F2
-
-    from fabric_claims_spark.operators.rollup import (
-        APPLIED_BATCH_COL,
-        maintain_additive_rollup_idempotent,
-    )
-    from fabric_claims_spark.sources.merge import TableStore
-
-    store = TableStore(spark, f"{checkpoint_dir}_table")
+    v = F.col("value").cast("decimal(18,4)")
     stream = _read_events_stream(spark, events_dir).select(
-        "event_type",
-        F2.col("value").cast("decimal(18,4)").alias("v"),
-        F2.col("value").cast("decimal(18,4)").alias("v_min"),
-        F2.col("value").cast("decimal(18,4)").alias("v_max"),
+        "event_type", v.alias("v"), v.alias("v_min"), v.alias("v_max")
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        maintain_additive_rollup_idempotent(
-            store,
-            query_name,
-            batch_df,
-            batch_id,
-            keys=["event_type"],
-            sum_cols=["v"],
-            min_cols=["v_min"],
-            max_cols=["v_max"],
-        )
-
-    (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    return fold(
+        stream,
+        checkpoint_dir,
+        query_name,
+        keys=["event_type"],
+        sum_cols=["v"],
+        min_cols=["v_min"],
+        max_cols=["v_max"],
     )
-    if not store.exists(query_name):  # zero-batch stream
-        raise ValueError("no batches processed")
-    return store.read(query_name).drop(APPLIED_BATCH_COL)
 
 
 def heavy_hitters_stream(
@@ -429,8 +378,6 @@ def heavy_hitters_stream(
     Returns (key, lower_bound, total_rows) — candidates for an exact
     confirmation pass (the batch twin's pass 2).
     """
-    from fabric_claims_spark.sources.merge import TableStore
-
     store = TableStore(spark, f"{checkpoint_dir}_table")
     # CONTRACT: NULL keys are excluded from heavy-hitter counting —
     # the batch twin already does this implicitly (pandas value_counts
@@ -507,14 +454,7 @@ def heavy_hitters_stream(
         )
         store.overwrite(query_name, state)
 
-    (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(stream, checkpoint_dir, sink=sink)
     if not store.exists(query_name):
         raise ValueError("no batches processed")
     return (
@@ -566,16 +506,7 @@ def segment_value_stream(
             F.round(F.sum("v"), 4).cast("double").alias("value_sum"),
         )
     )
-    (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    return spark.table(query_name)
+    return drain(agg, checkpoint_dir, "complete", query_name=query_name)
 
 
 def changepoint_monitor_stream(
@@ -597,47 +528,12 @@ def changepoint_monitor_stream(
     are skipped (the rollup_maintenance_stream rule) — an AvailableNow
     restart cannot change the result.
     """
-    from pyspark.sql import Window
-
-    from fabric_claims_spark.sources.merge import TableStore
-
-    store = TableStore(spark, f"{checkpoint_dir}_table")
     stream = _read_events_stream(spark, events_dir).select(
         F.col("ts").cast("date").alias("day")
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if store.exists(query_name):
-            cur = store.read(query_name)
-            applied = cur.select(F.max("_applied_batch_id")).head()[0]
-            if applied is not None and batch_id <= applied:
-                return
-            prev = cur.select("day", "cnt")
-        else:
-            prev = None
-        counts = batch_df.groupBy("day").agg(F.count(F.lit(1)).alias("cnt"))
-        merged = (
-            prev.unionByName(counts) if prev is not None else counts
-        ).groupBy("day").agg(F.sum("cnt").alias("cnt"))
-        store.overwrite(
-            query_name,
-            merged.withColumn(
-                "_applied_batch_id", F.lit(batch_id).cast("long")
-            ),
-        )
-
-    (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    if not store.exists(query_name):
-        raise ValueError("no batches processed")
-
-    d = store.read(query_name).select("day", "cnt")
+    d = fold(
+        stream, checkpoint_dir, query_name, keys=["day"], count_col="cnt"
+    ).select("day", "cnt")
     t = d.agg(F.count(F.lit(1)).alias("dd"), F.sum("cnt").alias("tot"))
     wc = Window.orderBy("day").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -681,68 +577,26 @@ def hll_users_stream(
     read with the same exact shifted-integer harmonic sum as the
     batch query — stream and batch agree bit-for-bit.
     """
-    from fabric_claims_spark.extensions.dedup import md5_long
-    from fabric_claims_spark.sources.merge import TableStore
-
-    store = TableStore(spark, f"{checkpoint_dir}_table")
-    stream = _read_events_stream(spark, events_dir).select(
-        "event_type", "user_id"
+    h = _read_events_stream(spark, events_dir).select(
+        "event_type",
+        md5_long(F.col("user_id").cast("string")).alias("hv"),
     )
-
-    def regs_of(df: DataFrame) -> DataFrame:
-        h = df.select(
-            "event_type",
-            md5_long(F.col("user_id").cast("string")).alias("hv"),
+    # one (event_type, register, rank) row per event; the fold keeps
+    # the max rank per register
+    regs = h.select(
+        "event_type",
+        (F.col("hv") % 256).alias("j"),
+        F.when(
+            F.expr("hv div 256") > 0,
+            F.lit(53) - F.length(F.bin(F.expr("hv div 256"))),
         )
-        return (
-            h.select(
-                "event_type",
-                (F.col("hv") % 256).alias("j"),
-                F.when(
-                    F.expr("hv div 256") > 0,
-                    F.lit(53) - F.length(F.bin(F.expr("hv div 256"))),
-                )
-                .otherwise(F.lit(53))
-                .alias("rho"),
-            )
-            .groupBy("event_type", "j")
-            .agg(F.max("rho").alias("mj"))
-        )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_regs = regs_of(batch_df)
-        if store.exists(query_name):
-            cur = store.read(query_name)
-            applied = cur.select(F.max("_applied_batch_id")).head()[0]
-            if applied is not None and batch_id <= applied:
-                return
-            prev = cur.select("event_type", "j", "mj")
-            merged = (
-                prev.unionByName(batch_regs)
-                .groupBy("event_type", "j")
-                .agg(F.max("mj").alias("mj"))
-            )
-        else:
-            merged = batch_regs
-        store.overwrite(
-            query_name,
-            merged.withColumn(
-                "_applied_batch_id", F.lit(batch_id).cast("long")
-            ),
-        )
-
-    (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .otherwise(F.lit(53))
+        .alias("mj"),
     )
-    if not store.exists(query_name):
-        raise ValueError("no batches processed")
-
-    m = store.read(query_name).select("event_type", "j", "mj")
+    m = fold(
+        regs, checkpoint_dir, query_name,
+        keys=["event_type", "j"], max_cols=["mj"],
+    ).select("event_type", "j", "mj")
     agg = m.groupBy("event_type").agg(
         F.sum(F.expr("shiftleft(cast(1 as bigint), cast(53 - mj as int))"))
         .alias("s_obs"),
@@ -881,26 +735,7 @@ def user_value_machine_stream(
             outputMode="Update",
             timeMode="None",
         )
-        from fabric_claims_spark.sources.merge import TableStore
-
-        store = TableStore(spark, f"{checkpoint_dir}_table")
-
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            store.merge(
-                query_name, batch_df, keys=["user_id"], update_only_changed=False
-            )
-
-        (
-            result.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        if not store.exists(query_name):  # zero-batch stream
-            return local_frame(spark, [], out_schema)
-        return store.read(query_name)
+        return _merge_on_user(result, checkpoint_dir, query_name, out_schema)
     finally:
         if prev_provider is None:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
@@ -945,16 +780,12 @@ def join_view_stream(
     production so the delta joins stay co-located; the equivalence
     and torn-batch tests pin stream == one-shot batch join.
     """
-    from pyspark.sql import functions as F2
-
-    from fabric_claims_spark.sources.merge import TableStore
-
     store = TableStore(spark, f"{checkpoint_dir}_table")
     stream = _read_events_stream(spark, events_dir).select(
         "event_id",
         "user_id",
         "event_type",
-        F2.col("event_ts").alias("ts"),  # normalized by the reader
+        F.col("event_ts").alias("ts"),  # normalized by the reader
         "value",
     )
 
@@ -965,29 +796,28 @@ def join_view_stream(
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if store.exists(query_name):
-            cur = store.read(query_name)
-            applied = cur.agg(F2.max("_applied_batch_id")).head()[0]
+            applied = applied_watermark(store, query_name)
             if applied is not None and batch_id <= applied:
                 return
-            cur = cur.drop("_applied_batch_id")
+            cur = store.read(query_name).drop(APPLIED_BATCH_COL)
         else:
             cur = local_frame(spark, [], empty_state)
 
-        d_l = batch_df.where(F2.col("event_type") == "purchase").select(
+        d_l = batch_df.where(F.col("event_type") == "purchase").select(
             "user_id",
-            F2.col("event_id").alias("p_event_id"),
-            F2.col("ts").alias("p_ts"),
+            F.col("event_id").alias("p_event_id"),
+            F.col("ts").alias("p_ts"),
             "value",
         )
-        d_r = batch_df.where(F2.col("event_type") == "signup").select(
+        d_r = batch_df.where(F.col("event_type") == "signup").select(
             "user_id",
-            F2.col("event_id").alias("s_event_id"),
-            F2.col("ts").alias("s_ts"),
+            F.col("event_id").alias("s_event_id"),
+            F.col("ts").alias("s_ts"),
         )
-        l_old = cur.where(F2.col("side") == "L").select(
+        l_old = cur.where(F.col("side") == "L").select(
             "user_id", "p_event_id", "p_ts", "value"
         )
-        r_old = cur.where(F2.col("side") == "R").select(
+        r_old = cur.where(F.col("side") == "R").select(
             "user_id", "s_event_id", "s_ts"
         )
         # ΔV: three delta joins — new-left x old-right, old-left x
@@ -1001,14 +831,14 @@ def join_view_stream(
         )
 
         def tag(df: DataFrame, side: str) -> DataFrame:
-            out = df.withColumn("side", F2.lit(side))
+            out = df.withColumn("side", F.lit(side))
             for col, typ in (
                 ("p_event_id", "long"), ("s_event_id", "long"),
                 ("p_ts", "timestamp"), ("s_ts", "timestamp"),
                 ("value", "double"),
             ):
                 if col not in df.columns:
-                    out = out.withColumn(col, F2.lit(None).cast(typ))
+                    out = out.withColumn(col, F.lit(None).cast(typ))
             return out.select(
                 "side", "user_id", "p_event_id", "s_event_id",
                 "p_ts", "s_ts", "value",
@@ -1018,18 +848,11 @@ def join_view_stream(
             cur.unionByName(tag(d_l, "L"))
             .unionByName(tag(d_r, "R"))
             .unionByName(tag(d_v, "V"))
-            .withColumn("_applied_batch_id", F2.lit(batch_id).cast("long"))
+            .withColumn(APPLIED_BATCH_COL, F.lit(batch_id).cast("long"))
         )
         store.overwrite(query_name, state)
 
-    (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(stream, checkpoint_dir, sink=sink)
     if not store.exists(query_name):
         raise ValueError("no batches processed")
     return (
@@ -1057,31 +880,23 @@ def cms_maintenance_stream(
 
     Returns the cell table (i, bucket, n).
     """
-    from pyspark.sql import functions as F2
-
-    from fabric_claims_spark.operators.rollup import (
-        APPLIED_BATCH_COL,
-        maintain_additive_rollup_idempotent,
-    )
     from fabric_claims_spark.queries.stats import _CMS_D, _CMS_W
-    from fabric_claims_spark.sources.merge import TableStore
 
-    store = TableStore(spark, f"{checkpoint_dir}_table")
-    seeds = F2.array(*[F2.lit(i) for i in range(_CMS_D)])
+    seeds = F.array(*[F.lit(i) for i in range(_CMS_D)])
     stream = (
         _read_events_stream(spark, events_dir)
-        .select(F2.col(key_col).alias("key"))
-        .withColumn("i", F2.explode(seeds))
+        .select(F.col(key_col).alias("key"))
+        .withColumn("i", F.explode(seeds))
         .select(
             "i",
             (
-                F2.conv(
-                    F2.substring(
-                        F2.md5(
-                            F2.concat(
-                                F2.col("i").cast("string"),
-                                F2.lit(":"),
-                                F2.col("key").cast("string"),
+                F.conv(
+                    F.substring(
+                        F.md5(
+                            F.concat(
+                                F.col("i").cast("string"),
+                                F.lit(":"),
+                                F.col("key").cast("string"),
                             )
                         ),
                         1,
@@ -1094,23 +909,7 @@ def cms_maintenance_stream(
             ).alias("bucket"),
         )
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        maintain_additive_rollup_idempotent(
-            store, query_name, batch_df, batch_id, keys=["i", "bucket"]
-        )
-
-    (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    if not store.exists(query_name):
-        raise ValueError("no batches processed")
-    return store.read(query_name).drop(APPLIED_BATCH_COL)
+    return fold(stream, checkpoint_dir, query_name, keys=["i", "bucket"])
 
 
 def psi_monitor_stream(
@@ -1138,16 +937,6 @@ def psi_monitor_stream(
     drift is measured AGAINST it, so it is read, binned once per
     call, and never folded.
     """
-    from pyspark.sql import functions as F2
-
-    from fabric_claims_spark.operators.rollup import (
-        APPLIED_BATCH_COL,
-        maintain_additive_rollup_idempotent,
-    )
-    from fabric_claims_spark.sources.merge import TableStore
-
-    store = TableStore(spark, f"{checkpoint_dir}_table")
-
     # Binning must be total over real inputs, or the monitor lies:
     # least() skips NULLs (least(9, NULL) = 9 — NULL mass silently
     # lands in the TOP bin) and negative values floor to negative bin
@@ -1157,78 +946,61 @@ def psi_monitor_stream(
     # with greatest() — in BOTH the live and baseline binning, since
     # an asymmetric fix would register the fix itself as drift.
     def bin_col(c):
-        return F2.least(
-            F2.lit(n_bins - 1),
-            F2.greatest(
-                F2.lit(0),
-                F2.floor(c / F2.lit(bin_width)).cast("int"),
+        return F.least(
+            F.lit(n_bins - 1),
+            F.greatest(
+                F.lit(0),
+                F.floor(c / F.lit(bin_width)).cast("int"),
             ),
         )
 
     stream = (
         _read_events_stream(spark, events_dir)
-        .where(F2.col("value").isNotNull())
-        .select(bin_col(F2.col("value")).alias("bin"))
+        .where(F.col("value").isNotNull())
+        .select(bin_col(F.col("value")).alias("bin"))
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        maintain_additive_rollup_idempotent(
-            store, query_name, batch_df, batch_id, keys=["bin"]
-        )
-
-    (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    if not store.exists(query_name):
-        raise ValueError("no batches processed")
-
-    live = store.read(query_name).drop(APPLIED_BATCH_COL).select(
-        "bin", F2.col("n").alias("cb")
+    live = fold(stream, checkpoint_dir, query_name, keys=["bin"]).select(
+        "bin", F.col("n").alias("cb")
     )
     base = (
         spark.read.parquet(baseline_path)
-        .where(F2.col("value").isNotNull())
-        .select(bin_col(F2.col("value")).alias("bin"))
+        .where(F.col("value").isNotNull())
+        .select(bin_col(F.col("value")).alias("bin"))
         .groupBy("bin")
-        .agg(F2.count(F2.lit(1)).alias("ca"))
+        .agg(F.count(F.lit(1)).alias("ca"))
     )
-    bins = spark.range(n_bins).select(F2.col("id").cast("int").alias("bin"))
+    bins = spark.range(n_bins).select(F.col("id").cast("int").alias("bin"))
     h = (
         bins.join(base, "bin", "left")
         .join(live, "bin", "left")
         .select(
             "bin",
-            F2.coalesce("ca", F2.lit(0)).alias("ca"),
-            F2.coalesce("cb", F2.lit(0)).alias("cb"),
+            F.coalesce("ca", F.lit(0)).alias("ca"),
+            F.coalesce("cb", F.lit(0)).alias("cb"),
         )
     )
-    t = h.agg(F2.sum("ca").alias("na"), F2.sum("cb").alias("nb"))
-    p = (F2.col("ca") + 1).cast("double") / (F2.col("na") + n_bins)
-    q = (F2.col("cb") + 1).cast("double") / (F2.col("nb") + n_bins)
-    term_nano = F2.round(
-        (p - q) * F2.round(F2.log(p / q), 6) * F2.lit(1_000_000_000), 0
+    t = h.agg(F.sum("ca").alias("na"), F.sum("cb").alias("nb"))
+    p = (F.col("ca") + 1).cast("double") / (F.col("na") + n_bins)
+    q = (F.col("cb") + 1).cast("double") / (F.col("nb") + n_bins)
+    term_nano = F.round(
+        (p - q) * F.round(F.log(p / q), 6) * F.lit(1_000_000_000), 0
     ).cast("long")
-    terms = h.crossJoin(F2.broadcast(t)).select(
+    terms = h.crossJoin(F.broadcast(t)).select(
         "bin", "ca", "cb", term_nano.alias("term_nano")
     )
-    psi = terms.agg(F2.sum("term_nano").alias("nano"))
+    psi = terms.agg(F.sum("term_nano").alias("nano"))
     return (
-        terms.crossJoin(F2.broadcast(psi))
+        terms.crossJoin(F.broadcast(psi))
         .select(
-            F2.col("bin").cast("long").alias("bin"),
-            F2.col("ca").cast("long").alias("baseline_count"),
-            F2.col("cb").cast("long").alias("live_count"),
+            F.col("bin").cast("long").alias("bin"),
+            F.col("ca").cast("long").alias("baseline_count"),
+            F.col("cb").cast("long").alias("live_count"),
             "term_nano",
-            (F2.col("nano").cast("double") / 1_000_000_000.0).alias(
+            (F.col("nano").cast("double") / 1_000_000_000.0).alias(
                 "psi_total"
             ),
-            F2.when(F2.col("nano") < 100_000_000, "stable")
-            .when(F2.col("nano") < 250_000_000, "moderate_shift")
+            F.when(F.col("nano") < 100_000_000, "stable")
+            .when(F.col("nano") < 250_000_000, "moderate_shift")
             .otherwise("shifted")
             .alias("verdict"),
         )
@@ -1261,17 +1033,6 @@ def zscore_monitor_stream(
     events stream here — a bucket monitor measures the time
     distribution; missingness is a different alarm).
     """
-    from fabric_claims_spark.operators.anomaly import (
-        modified_zscore_from_counts,
-    )
-    from fabric_claims_spark.operators.rollup import (
-        APPLIED_BATCH_COL,
-        maintain_additive_rollup_idempotent,
-    )
-    from fabric_claims_spark.sources.merge import TableStore
-
-    store = TableStore(spark, f"{checkpoint_dir}_table")
-
     stream = (
         _read_events_stream(spark, events_dir)
         .where(F.col("ts").isNotNull())
@@ -1280,26 +1041,9 @@ def zscore_monitor_stream(
             F.date_trunc("day", F.col("ts")).cast("date").alias("day"),
         )
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        maintain_additive_rollup_idempotent(
-            store, query_name, batch_df, batch_id,
-            keys=["event_type", "day"],
-        )
-
-    (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    if not store.exists(query_name):
-        raise ValueError("no batches processed")
-    d = store.read(query_name).drop(APPLIED_BATCH_COL).select(
-        "event_type", "day", F.col("n").alias("cnt")
-    )
+    d = fold(
+        stream, checkpoint_dir, query_name, keys=["event_type", "day"]
+    ).select("event_type", "day", F.col("n").alias("cnt"))
     return modified_zscore_from_counts(d)
 
 
@@ -1336,37 +1080,14 @@ def funnel_monitor_stream(
     never reads. The read-time funnel costs rollup-sized work; the
     EVENTS SCAN is strictly incremental.
     """
-    from fabric_claims_spark.operators.funnel import windowed_funnel
-    from fabric_claims_spark.operators.rollup import (
-        APPLIED_BATCH_COL,
-        maintain_additive_rollup_idempotent,
-    )
-    from fabric_claims_spark.sources.merge import TableStore
-
     steps = steps or FUNNEL_STEPS
-    store = TableStore(spark, f"{checkpoint_dir}_table")
-
     stream = (
         _read_events_stream(spark, events_dir)
         .where(F.col("ts").isNotNull() & F.col("event_type").isin(steps))
         .select("user_id", "event_type", "ts")
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        maintain_additive_rollup_idempotent(
-            store, query_name, batch_df, batch_id,
-            keys=["user_id", "event_type", "ts"],
-        )
-
-    (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    if not store.exists(query_name):
-        raise ValueError("no batches processed")
-    e = store.read(query_name).select("user_id", "event_type", "ts")
+    e = fold(
+        stream, checkpoint_dir, query_name,
+        keys=["user_id", "event_type", "ts"],
+    ).select("user_id", "event_type", "ts")
     return windowed_funnel(e, steps, window_h)

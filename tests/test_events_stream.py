@@ -611,6 +611,36 @@ def test_join_view_stream_torn_batch_recovery(spark, events_dir, tmp_path):
     assert again == first
 
 
+@pytest.mark.parametrize(
+    "stream_fn",
+    ["changepoint_monitor_stream", "hll_users_stream", "cms_maintenance_stream"],
+)
+def test_fold_stream_torn_batch_restart_is_exact(
+    spark, events_dir, tmp_path, stream_fn
+):
+    """Torn-commit recovery for the streams that fold through
+    ``streaming.fold``: the restart redelivers batch 0 under the SAME
+    batch id (a re-delivered file would get a new one), so only the
+    rollup's applied-batch-id skip keeps it from folding twice — the
+    result equals the pre-tear result and the state still records
+    batch 0."""
+    from fabric_claims_spark.sources.merge import TableStore
+    from fabric_claims_spark.streaming import events_stream
+
+    run = getattr(events_stream, stream_fn)
+    ckpt = str(tmp_path / "ckpt_fold_torn")
+
+    def result():
+        rows = run(spark, str(events_dir), ckpt, query_name="t_fold_torn")
+        return sorted(map(tuple, rows.collect()), key=str)
+
+    first = result()
+    _tear_last_commit(ckpt)
+    assert result() == first and len(first) > 0
+    state = TableStore(spark, f"{ckpt}_table").read("t_fold_torn")
+    assert state.agg(F.max("_applied_batch_id")).head()[0] == 0
+
+
 def test_cms_stream_cells_match_batch_sketch(spark, events_dir, tmp_path):
     """The streamed CMS cell table equals the batch-built sketch (cell
     counters are mergeable across micro-batch boundaries), estimates

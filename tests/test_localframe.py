@@ -8,6 +8,7 @@ exhausted-iterator input must never silently land as an empty frame
 from __future__ import annotations
 
 import datetime
+import math
 
 from pyspark.sql import functions as F
 
@@ -39,15 +40,27 @@ def test_local_frame_matches_classic_path_values(spark):
     ).schema
 
 
-def test_local_frame_nan_normalizes_to_null(spark):
-    """Documented divergence: pandas object columns cannot represent
-    NaN distinctly from missing, so a float NaN lands as NULL on the
-    Arrow path (the classic path keeps a double NaN). The oracle
-    canonicalizer hashes NaN and NULL identically (check_correctness
-    ``canonical``), so the difference is hash-invisible; no engine
-    call site passes NaN today."""
-    got = local_frame(spark, [(float("nan"),)], "x double").collect()
-    assert got[0]["x"] is None
+def test_local_frame_keeps_float_nan(spark):
+    """A float NaN stays NaN and a None stays NULL, at the top level
+    and nested in arrays, maps and structs: pandas object columns
+    cannot tell NaN from missing, so the Arrow path alone would land
+    every NaN here as NULL, unlike the classic path."""
+    nan = float("nan")
+    rows = [
+        (nan, [1.0, nan], {"a": nan}, (nan, 1)),
+        (None, [None], {"a": None}, (None, 2)),
+    ]
+    schema = (
+        "x double, v array<double>, m map<string,double>, "
+        "s struct<a:double,b:long>"
+    )
+    got = sorted(
+        local_frame(spark, rows, schema).collect(), key=lambda r: r["s"]["b"]
+    )
+    assert math.isnan(got[0]["x"]) and math.isnan(got[0]["v"][1])
+    assert math.isnan(got[0]["m"]["a"]) and math.isnan(got[0]["s"]["a"])
+    assert got[1]["x"] is None and got[1]["v"] == [None]
+    assert got[1]["m"]["a"] is None and got[1]["s"]["a"] is None
 
 
 def test_local_frame_lands_as_local_relation(spark):

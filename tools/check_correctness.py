@@ -22,11 +22,12 @@ import os
 import sys
 import time
 import traceback
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from fabric_claims_spark.queries import load_all_queries  # noqa: E402
 from fabric_claims_spark.schemas import TESTDATA_TABLES  # noqa: E402
