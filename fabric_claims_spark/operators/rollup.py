@@ -60,24 +60,27 @@ def partial_rollup(
         if weight_col is None
         else F.sum(weight_col)
     )
-    aggs = [count_measure.cast("long").alias(count_col)]
-    aggs += [F.sum(c).alias(c) for c in (sum_cols or [])]
-    aggs += [F.min(c).alias(c) for c in (min_cols or [])]
-    aggs += [F.max(c).alias(c) for c in (max_cols or [])]
-    return batch.groupBy(*keys).agg(*aggs)
+    return batch.groupBy(*keys).agg(
+        *_aggs(count_measure, count_col, sum_cols, min_cols, max_cols)
+    )
 
 
-def _merge_aggs(
+def _aggs(
+    count,
     count_col: str,
     sum_cols: list[str] | None,
     min_cols: list[str] | None,
     max_cols: list[str] | None,
 ) -> list:
-    aggs = [F.sum(count_col).cast("long").alias(count_col)]
-    aggs += [F.sum(c).alias(c) for c in (sum_cols or [])]
-    aggs += [F.min(c).alias(c) for c in (min_cols or [])]
-    aggs += [F.max(c).alias(c) for c in (max_cols or [])]
-    return aggs
+    """The rollup's measures, each named after its column: ``count``
+    as a long, then sums, mins and maxes — one list for a batch's
+    partials and for folding partials into the state."""
+    return [
+        count.cast("long").alias(count_col),
+        *(F.sum(c).alias(c) for c in sum_cols or []),
+        *(F.min(c).alias(c) for c in min_cols or []),
+        *(F.max(c).alias(c) for c in max_cols or []),
+    ]
 
 
 def maintain_additive_rollup(
@@ -101,7 +104,7 @@ def maintain_additive_rollup(
         partial = (
             cur.unionByName(partial)
             .groupBy(*keys)
-            .agg(*_merge_aggs(count_col, sum_cols, min_cols, max_cols))
+            .agg(*_aggs(F.sum(count_col), count_col, sum_cols, min_cols, max_cols))
         )
     store.overwrite(table, partial)
     return store.read(table)
@@ -183,7 +186,7 @@ def maintain_additive_rollup_idempotent(
             cur.drop(APPLIED_BATCH_COL)
             .unionByName(partial)
             .groupBy(*keys)
-            .agg(*_merge_aggs(count_col, sum_cols, min_cols, max_cols))
+            .agg(*_aggs(F.sum(count_col), count_col, sum_cols, min_cols, max_cols))
         )
     else:
         state = partial_rollup(

@@ -27,7 +27,11 @@ from fabric_claims_spark.pipeline import watermark as wmgate
 from fabric_claims_spark.pipeline.bronze import run_bronze
 from fabric_claims_spark.pipeline.gold import run_gold
 from fabric_claims_spark.pipeline.silver import run_silver
-from fabric_claims_spark.sources.audit import append_audit_row, last_gold_success
+from fabric_claims_spark.sources.audit import (
+    append_audit_rows,
+    build_audit_row,
+    last_gold_success,
+)
 from fabric_claims_spark.sources.merge import TableStore
 from fabric_claims_spark.sources.state import WatermarkStore, file_modified_utc
 
@@ -100,29 +104,37 @@ class ClaimsRunner:
         if not WatermarkStore.is_newer(silver_wm, gold_wm):
             # Skip path logs an audit row (reference logs 'Failed' as
             # its skip marker, PL_GOLD:114-150).
-            append_audit_row(
+            append_audit_rows(
                 self.spark,
                 self.gold,
-                pipeline="claims_gold",
-                layer="Gold",
-                status="Failed",
-                error="skipped: silver watermark not newer",
-                wm_before=gold_wm,
-                wm_after=gold_wm,
-                finished_at=self._clock(),
+                [
+                    build_audit_row(
+                        "claims_gold",
+                        "Gold",
+                        "Failed",
+                        error="skipped: silver watermark not newer",
+                        wm_before=gold_wm,
+                        wm_after=gold_wm,
+                        finished_at=self._clock(),
+                    )
+                ],
             )
             return {"status": "Skipped", "reason": "silver not newer"}
         result = run_gold(self.spark, self.silver, self.gold)
-        append_audit_row(
+        append_audit_rows(
             self.spark,
             self.gold,
-            pipeline="claims_gold",
-            layer="Gold",
-            status="Succeeded",
-            rows_written=result["rows_written"],
-            wm_before=gold_wm,
-            wm_after=silver_wm,
-            finished_at=self._clock(),
+            [
+                build_audit_row(
+                    "claims_gold",
+                    "Gold",
+                    "Succeeded",
+                    rows_written=result["rows_written"],
+                    wm_before=gold_wm,
+                    wm_after=silver_wm,
+                    finished_at=self._clock(),
+                )
+            ],
         )
         return result
 

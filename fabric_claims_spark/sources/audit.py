@@ -45,45 +45,6 @@ AUDIT_SCHEMA = StructType(
 )
 
 
-def append_audit_row(
-    spark: SparkSession,
-    store: TableStore,
-    pipeline: str,
-    layer: str,
-    status: str,
-    rows_written: int = 0,
-    wm_before: str | None = None,
-    wm_after: str | None = None,
-    target_object: str = "All",
-    error: str | None = None,
-    run_id: str | None = None,
-    trigger_type: str = "Manual",
-    finished_at: datetime | None = None,
-) -> None:
-    store.append(
-        AUDIT_TABLE,
-        local_frame(
-            spark,
-            [
-                build_audit_row(
-                    pipeline,
-                    layer,
-                    status,
-                    rows_written=rows_written,
-                    wm_before=wm_before,
-                    wm_after=wm_after,
-                    target_object=target_object,
-                    error=error,
-                    run_id=run_id,
-                    trigger_type=trigger_type,
-                    finished_at=finished_at,
-                )
-            ],
-            AUDIT_SCHEMA,
-        ).coalesce(1),
-    )
-
-
 def build_audit_row(
     pipeline: str,
     layer: str,
@@ -134,6 +95,15 @@ def append_audit_rows(
     store.append(
         AUDIT_TABLE, local_frame(spark, rows, AUDIT_SCHEMA).coalesce(1)
     )
+
+
+def append_audit_row(
+    spark: SparkSession, store: TableStore, *args, **kwargs
+) -> None:
+    """Append the one row ``build_audit_row(*args, **kwargs)``. The
+    engine calls ``append_audit_rows``; this name stays because
+    ``perfbench/layers.py`` traces the audit layer through it."""
+    append_audit_rows(spark, store, [build_audit_row(*args, **kwargs)])
 
 
 def last_gold_success(spark: SparkSession, store: TableStore) -> str:

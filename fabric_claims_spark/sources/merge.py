@@ -10,10 +10,16 @@ interface:
 * ``merge`` = whenMatchedUpdateAll (optionally only when a non-key
   column actually differs, null-safely — the SP's
   ``ISNULL(t.c,'') <> ISNULL(s.c,'')`` gate) + whenNotMatchedInsertAll.
-* Writes are atomic: a new version directory is written first, then a
-  one-line ``_CURRENT`` pointer file is swapped with ``os.replace``.
-  Readers of the old version are never disturbed (same contract as
-  Delta's log-pointer commit).
+* Writes are atomic. On the parquet fallback every write — overwrite,
+  append, delete, merge, compact, prune and the driver-side
+  ``overwrite_local`` — ends in ``TableStore._commit``, the only code
+  that creates a table version: it allocates a nanosecond-stamped
+  version id, creates the version directory, runs the write into it,
+  hardlinks the carried files of the current version in, then swaps
+  the one-line ``_CURRENT`` pointer file with ``os.replace`` and
+  vacuums. Readers of the old version are never disturbed (same
+  contract as Delta's log-pointer commit), and the version's data
+  files are listed in one place, ``TableStore._files``.
 
 At 100 TB this class is constructed with ``prefer_delta=True`` on a
 cluster with delta-spark installed and every call maps 1:1 onto Delta
@@ -26,6 +32,7 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -49,6 +56,12 @@ def _new_version_id() -> str:
     let ``versions()`` return old/new in arbitrary order and invert a
     CDC diff built on ``versions()[-2:]``."""
     return f"v_{time.time_ns():020d}_{uuid.uuid4().hex[:6]}"
+
+
+def _flat(files: list[str]) -> bool:
+    """No data file (``TableStore._files`` path) sits in a partition
+    directory."""
+    return not any(os.sep in f for f in files)
 
 
 @dataclass
@@ -165,7 +178,7 @@ class TableStore:
                 .save(self._dir(name))
             )
             return
-        self._commit_version(name, df)
+        self._commit(name, self._writer(name, df))
 
     # -- driver-side metadata I/O ------------------------------------------
     #
@@ -190,44 +203,30 @@ class TableStore:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        version = self._current_version(name)
-        if version is None:
+        vdir, files = self._files(name)
+        if not files or not _flat(files):
             raise FileNotFoundError(
-                f"table {name} does not exist under {self.root}"
+                f"table {name} holds no flat data files in {vdir}"
             )
-        vdir = os.path.join(self._dir(name), version)
-        parts = [
-            pq.read_table(os.path.join(vdir, f))
-            for f in sorted(os.listdir(vdir))
-            if f.endswith(".parquet")
-            and not f.startswith(("_", "."))
-            and os.path.isfile(os.path.join(vdir, f))
-        ]
-        if not parts:
-            raise FileNotFoundError(
-                f"table {name} version {version} holds no data files"
-            )
+        parts = [pq.read_table(os.path.join(vdir, f)) for f in files]
         return pa.concat_tables(parts, promote_options="default")
 
     def overwrite_local(self, name: str, table) -> None:
         """Atomic overwrite of a small table from a pyarrow Table —
         on the parquet store one data file, no Spark job, same
-        pointer-swap commit and vacuum as every Spark write; Delta
-        overwrites through Spark (``createDataFrame``)."""
+        ``_commit`` as every Spark write; Delta overwrites through
+        Spark (``createDataFrame``)."""
         if self.use_delta:
             self.overwrite(name, self.spark.createDataFrame(table))
             return
         import pyarrow.parquet as pq
 
-        table_dir = self._dir(name)
-        os.makedirs(table_dir, exist_ok=True)
-        version = _new_version_id()
-        new_dir = os.path.join(table_dir, version)
-        os.makedirs(new_dir)
-        pq.write_table(
-            table, os.path.join(new_dir, "part-00000-local.parquet")
+        self._commit(
+            name,
+            lambda d: pq.write_table(
+                table, os.path.join(d, "part-00000-local.parquet")
+            ),
         )
-        self._swap_current(name, version)
 
     def count_rows(self, name: str) -> int:
         """Exact row count of the CURRENT version from parquet footer
@@ -240,27 +239,11 @@ class TableStore:
             return self.read(name).count()
         import pyarrow.parquet as pq
 
-        version = self._current_version(name)
-        if version is None:
-            raise FileNotFoundError(
-                f"table {name} does not exist under {self.root}"
-            )
-        total = 0
-        for dirpath, _dirs, files in os.walk(
-            os.path.join(self._dir(name), version)
-        ):
-            for fname in files:
-                # only what the writer emits (ADVICE r13): a stray
-                # temp/partial file from an interrupted write must not
-                # fail the maintenance action — read() ignores it too
-                if fname.startswith(("_", ".")) or not fname.endswith(
-                    ".parquet"
-                ):
-                    continue
-                total += pq.ParquetFile(
-                    os.path.join(dirpath, fname)
-                ).metadata.num_rows
-        return total
+        vdir, files = self._files(name)
+        return sum(
+            pq.ParquetFile(os.path.join(vdir, f)).metadata.num_rows
+            for f in files
+        )
 
     def footer_stats(
         self, name: str, column: str
@@ -273,19 +256,15 @@ class TableStore:
         Returns ``None`` when flat footers cannot answer: Delta store,
         missing table, partitioned layout, or a file without
         ``column``."""
-        version = None if self.use_delta else self._current_version(name)
-        if version is None:
+        if self.use_delta or self._current_version(name) is None:
             return None
         import pyarrow.parquet as pq
 
-        vdir = os.path.join(self._dir(name), version)
-        entries = sorted(os.listdir(vdir))
-        if any(os.path.isdir(os.path.join(vdir, e)) for e in entries):
+        vdir, files = self._files(name)
+        if not _flat(files):
             return None  # partitioned layout: not flat-file decidable
         out: dict[str, list[tuple[int, object]]] = {}
-        for fname in entries:
-            if fname.startswith(("_", ".")) or not fname.endswith(".parquet"):
-                continue
+        for fname in files:
             path = os.path.join(vdir, fname)
             meta = pq.ParquetFile(path).metadata
             leaves = [meta.schema.column(i).path for i in range(meta.num_columns)]
@@ -340,12 +319,7 @@ class TableStore:
             return 0
         if not kept:
             return None  # empty result needs a schema-carrying write
-        new_version = _new_version_id()
-        new_dir = os.path.join(self._dir(name), new_version)
-        os.makedirs(new_dir)
-        for path in kept:
-            os.link(path, os.path.join(new_dir, os.path.basename(path)))
-        self._swap_current(name, new_version)
+        self._commit(name, carry=[os.path.basename(p) for p in kept])
         return removed
 
     def append(self, name: str, df: DataFrame) -> None:
@@ -369,26 +343,20 @@ class TableStore:
             # so a column-permuted batch is realigned, not slow-pathed.
             cur_fields = [(f.name, f.dataType) for f in current.schema.fields]
             new_fields = {(f.name, f.dataType) for f in df.schema.fields}
-            cur_dir = os.path.join(
-                self._dir(name), self._current_version(name) or ""
-            )
-            flat = all(
-                os.path.isfile(os.path.join(cur_dir, e))
-                for e in os.listdir(cur_dir)
-            )
+            _, files = self._files(name)
             if (
-                flat
+                _flat(files)
                 and len(df.schema.fields) == len(cur_fields)
                 and set(cur_fields) == new_fields
             ):
-                self._commit_version(
+                self._commit(
                     name,
-                    df.select([n for n, _ in cur_fields]),
-                    link_from=cur_dir,
+                    self._writer(name, df.select([n for n, _ in cur_fields])),
+                    carry=files,
                 )
                 return
             df = current.unionByName(df, allowMissingColumns=True)
-        self._commit_version(name, df)
+        self._commit(name, self._writer(name, df))
 
     def delete(self, name: str, condition: Column) -> int:
         """DELETE WHERE ``condition`` — the erasure sink (GDPR/CCPA
@@ -464,7 +432,7 @@ class TableStore:
         hits = current.where(is_hit).count()
         if hits == 0:
             return 0
-        self._commit_version(name, current.where(~is_hit))
+        self._commit(name, self._writer(name, current.where(~is_hit)))
         return hits
 
     def merge(
@@ -492,13 +460,16 @@ class TableStore:
         (no data movement). This is the 100 TB path — a daily batch
         touching 3 of 3,000 date partitions rewrites ~0.1% of the
         table. Requires the merge key to imply the partition (a key
-        never moves partitions), which holds for date-keyed facts.
+        never moves partitions), which holds for date-keyed facts. A
+        current version not laid out on ``partition_col`` (a plain
+        merge, an append, another column) is merged whole and re-laid
+        out partitioned by this commit.
         """
         if not self.exists(name):
-            if partition_col:
-                self._commit_version(name, source, partition_by=partition_col)
+            if partition_col and not self.use_delta:
+                self._commit(name, self._writer(name, source, partition_col))
             else:
-                self._write_new(name, source)
+                self.overwrite(name, source)
             # inserted == rows just written: read it from the new
             # version's parquet footers instead of re-running the
             # source plan for a count (round 14, guide §1.2 — for a
@@ -506,11 +477,6 @@ class TableStore:
             # whole aggregate). Delta keeps the source count.
             n = source.count() if self.use_delta else self.count_rows(name)
             return MergeStats(inserted=n, updated=0)
-
-        if partition_col and not self.use_delta:
-            return self._merge_partitioned(
-                name, source, keys, update_only_changed, compare_cols, partition_col
-            )
 
         target = self.read(name)
         non_keys = [
@@ -537,7 +503,32 @@ class TableStore:
                 updated=int(hist.get("numTargetRowsUpdated", 0)),
             )
 
-        # --- parquet fallback: ONE full-outer join resolves the merge ----
+        carry: list[str] = []
+        if partition_col:
+            vdir, files = self._files(name)
+            if all(f.startswith(f"{partition_col}=") for f in files):
+                # slice the target to the batch's partitions. isin() is
+                # null-unsafe: a null partition value in the source
+                # would slice out NO target rows, yet Spark writes its
+                # data under __HIVE_DEFAULT_PARTITION__ — the old null
+                # partition must be read-merged, not carried.
+                affected = [
+                    r[0] for r in source.select(partition_col).distinct().collect()
+                ]
+                non_null = [v for v in affected if v is not None]
+                slice_cond = F.col(partition_col).isin(non_null)
+                if len(non_null) < len(affected):
+                    slice_cond = slice_cond | F.col(partition_col).isNull()
+                target = target.where(slice_cond)
+                # every partition file and its checksum sidecar; the
+                # partitions the write produces replace theirs
+                crc = [
+                    os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+                    for f in files
+                ]
+                carry = files + [c for c in crc if os.path.exists(os.path.join(vdir, c))]
+
+        # --- ONE full-outer join resolves the merge ---------------------
         # (what Delta's MERGE does physically): target-only rows pass
         # through, matched-but-unchanged keep the target version
         # (preserves CreatedDate-style stamps), matched-and-changed and
@@ -573,100 +564,9 @@ class TableStore:
             for c in source.columns
         ]
         merged = j.select(out_cols)
-        self._commit_version(name, merged)
+        self._commit(name, self._writer(name, merged, partition_col), carry=carry)
         j.unpersist()
         return MergeStats(inserted=inserted, updated=updated)
-
-    def _merge_partitioned(
-        self,
-        name: str,
-        source: DataFrame,
-        keys: list[str],
-        update_only_changed: bool,
-        compare_cols: list[str] | None,
-        partition_col: str,
-    ) -> MergeStats:
-        """Partition-pruned merge: join only affected partitions,
-        hardlink the rest into the new version (see ``merge``)."""
-        affected = [
-            r[0] for r in source.select(partition_col).distinct().collect()
-        ]
-        # isin() is null-unsafe: a null partition value in the source
-        # would slice out NO target rows (null never matches isin) yet
-        # Spark writes its data under __HIVE_DEFAULT_PARTITION__ — the
-        # old null partition must be read-merged, not hardlinked.
-        non_null = [v for v in affected if v is not None]
-        slice_cond = F.col(partition_col).isin(non_null)
-        if len(non_null) < len(affected):
-            slice_cond = slice_cond | F.col(partition_col).isNull()
-        target_slice = self.read(name).where(slice_cond)
-
-        # same full-outer resolution as the unpartitioned path
-        t = target_slice.withColumn("_t", F.lit(True)).alias("t")
-        s = source.withColumn("_s", F.lit(True)).alias("s")
-        key_cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys]
-        j = t.join(s, key_cond, "full_outer").cache()
-        t_present = F.col("t._t").isNotNull()
-        s_present = F.col("s._s").isNotNull()
-        non_keys = [
-            c
-            for c in (compare_cols if compare_cols is not None else source.columns)
-            if c not in keys
-        ]
-        if update_only_changed and non_keys:
-            diff = F.lit(False)
-            for c in non_keys:
-                diff = diff | ~F.col(f"t.{c}").eqNullSafe(F.col(f"s.{c}"))
-        else:
-            diff = F.lit(True)
-        counts = j.agg(
-            F.sum((s_present & ~t_present).cast("long")).alias("ins"),
-            F.sum((s_present & t_present & diff).cast("long")).alias("upd"),
-        ).first()
-        take_source = s_present & (~t_present | diff)
-        out_cols = [
-            F.when(take_source, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
-            if c not in keys
-            else F.coalesce(F.col(f"s.{c}"), F.col(f"t.{c}")).alias(c)
-            for c in source.columns
-        ]
-        merged_slice = j.select(out_cols)
-
-        # new version: Spark writes the affected partitions; untouched
-        # partition dirs hardlink over from the current version.
-        table_dir = self._dir(name)
-        cur_version = self._current_version(name)
-        new_version = _new_version_id()
-        new_dir = os.path.join(table_dir, new_version)
-        merged_slice.write.mode("overwrite").partitionBy(partition_col).parquet(new_dir)
-        # Untouched = not rewritten by Spark just now. Deriving the
-        # affected dir names from the values would have to reproduce
-        # Spark's hive escaping (%XX special chars, nulls →
-        # __HIVE_DEFAULT_PARTITION__); instead, whatever Spark DID
-        # write is by definition the affected set — hardlink only
-        # partition dirs absent from the new version.
-        written_dirs = {
-            entry
-            for entry in os.listdir(new_dir)
-            if entry.startswith(f"{partition_col}=")
-        }
-        cur_dir = os.path.join(table_dir, cur_version)
-        for entry in os.listdir(cur_dir):
-            if entry.startswith(f"{partition_col}=") and entry not in written_dirs:
-                src_part = os.path.join(cur_dir, entry)
-                dst_part = os.path.join(new_dir, entry)
-                os.makedirs(dst_part, exist_ok=True)
-                for fname in os.listdir(src_part):
-                    if not fname.startswith("_"):
-                        os.link(
-                            os.path.join(src_part, fname),
-                            os.path.join(dst_part, fname),
-                        )
-        self._swap_current(name, new_version)
-        j.unpersist()
-        return MergeStats(
-            inserted=int(counts["ins"] or 0), updated=int(counts["upd"] or 0)
-        )
 
     def compact(self, name: str, target_partitions: int | None = None) -> int:
         """OPTIMIZE analog: rewrite the table into few large files
@@ -679,80 +579,89 @@ class TableStore:
             # input files (cheap metadata)
             n_files = len(df.inputFiles()) or 1
             target_partitions = max(1, n_files // 8)
-        self._commit_version(name, df.coalesce(target_partitions))
+        self.overwrite(name, df.coalesce(target_partitions))
         return target_partitions
 
-    # -- internals ----------------------------------------------------------
-    def _write_new(self, name: str, df: DataFrame) -> None:
-        self._commit_version(name, df)
+    # -- the one commit path --------------------------------------------------
+    def _files(self, name: str) -> tuple[str, list[str]]:
+        """The current version's directory and its data files as
+        sorted paths relative to it (``part=v/file`` when partitioned)
+        — only what the writers emit: a ``_``/``.``-prefixed marker or
+        checksum, or a stray temp file from an interrupted write, is
+        never a data file."""
+        version = self._current_version(name)
+        if version is None:
+            raise FileNotFoundError(f"table {name} does not exist under {self.root}")
+        vdir = os.path.join(self._dir(name), version)
+        files = [
+            os.path.relpath(os.path.join(dirpath, f), vdir)
+            for dirpath, _dirs, names in os.walk(vdir)
+            for f in names
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        ]
+        return vdir, sorted(files)
 
-    def _commit_version(
+    def _writer(
+        self, name: str, df: DataFrame, partition_by: str | None = None
+    ) -> Callable[[str], None]:
+        """A ``_commit`` write step: Spark writes ``df`` as parquet,
+        labelled with its table (guide §1.5) so store writes are
+        attributable in the UI/REST without guessing."""
+
+        def write(path: str) -> None:
+            writer = df.write.mode("overwrite")
+            if partition_by:
+                writer = writer.partitionBy(partition_by)
+            sc = self.spark.sparkContext
+            prev = sc.getLocalProperty("spark.job.description")
+            sc.setJobDescription(f"tablestore write: {name}")
+            try:
+                writer.parquet(path)
+            finally:
+                sc.setJobDescription(prev)
+
+        return write
+
+    def _commit(
         self,
         name: str,
-        df: DataFrame,
-        partition_by: str | None = None,
-        link_from: str | None = None,
+        write: Callable[[str], None] | None = None,
+        carry: Iterable[str] = (),
     ) -> None:
+        """Create a new version of ``name`` and make it current — the
+        only code that does. In order: allocate the ns-stamped version
+        id, create its directory, run ``write(new_dir)``, hardlink each
+        ``carry`` path (relative to the current version) into the same
+        place, swap the ``_CURRENT`` pointer, vacuum. Hardlinks move no
+        data, and part filenames embed a per-write-job UUID, so names
+        from different commits never collide; a carried path under a
+        top-level entry the write produced (a partition the write
+        rewrote) is not linked — the write wins."""
         table_dir = self._dir(name)
-        os.makedirs(table_dir, exist_ok=True)
+        cur_dir = os.path.join(table_dir, self._current_version(name) or "")
         version = _new_version_id()
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(partition_by)
         new_dir = os.path.join(table_dir, version)
-        # label the write job with its table (guide §1.5) so store
-        # writes are attributable in the UI/REST without guessing
-        sc = self.spark.sparkContext
-        prev = sc.getLocalProperty("spark.job.description")
-        sc.setJobDescription(f"tablestore write: {name}")
-        try:
-            writer.parquet(new_dir)
-        finally:
-            sc.setJobDescription(prev)
-        if link_from is not None:
-            # O(batch) append: carry the previous version's data files
-            # into the new version by hardlink (no data movement; part
-            # filenames embed a per-write-job UUID, so names from
-            # different commits can never collide)
-            for fname in os.listdir(link_from):
-                if not fname.startswith(("_", ".")):
-                    os.link(
-                        os.path.join(link_from, fname),
-                        os.path.join(new_dir, fname),
-                    )
-        self._swap_current(name, version)
-
-    def _swap_current(self, name: str, version: str) -> None:
-        table_dir = self._dir(name)
-        tmp_ptr = os.path.join(table_dir, f".{_CURRENT}.{uuid.uuid4().hex[:6]}"
-                               )
+        os.makedirs(new_dir)
+        if write is not None:
+            write(new_dir)
+        written = set(os.listdir(new_dir))
+        for rel in carry:
+            if rel.split(os.sep)[0] in written:
+                continue
+            dst = os.path.join(new_dir, rel)
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            os.link(os.path.join(cur_dir, rel), dst)
+        tmp_ptr = os.path.join(table_dir, f".{_CURRENT}.{uuid.uuid4().hex[:6]}")
         with open(tmp_ptr, "w") as f:
             f.write(version)
         os.replace(tmp_ptr, self._pointer(name))  # atomic commit
         self._vacuum(name, keep=version)
 
     def _vacuum(self, name: str, keep: str) -> None:
-        """Prune old version dirs, keeping the newest few for readers
-        mid-scan (Delta vacuum analog, drastically simplified).
-        "Newest" by directory mtime. Every writer now names versions
-        by their nanosecond commit stamp (``_new_version_id``), but a
-        store may still hold random-hex ids written before the stamp,
-        and mtime orders both shapes."""
-        table_dir = self._dir(name)
-
-        def _mtime(d: str) -> float:
-            try:
-                return os.stat(os.path.join(table_dir, d)).st_mtime
-            except OSError:
-                return 0.0
-
-        versions = sorted(
-            (
-                d
-                for d in os.listdir(table_dir)
-                if d.startswith("v_") and d != keep
-            ),
-            key=_mtime,
-        )
-        for stale in versions[:-_KEEP_VERSIONS]:
-            shutil.rmtree(os.path.join(table_dir, stale), ignore_errors=True)
+        """Prune old version dirs, keeping ``keep`` and the newest
+        ``_KEEP_VERSIONS`` others for readers mid-scan (Delta vacuum
+        analog, drastically simplified). "Newest" in ``versions()``
+        order: the embedded commit stamp, mtime for legacy ids."""
+        stale = [v for v in self.versions(name) if v != keep]
+        for v in stale[:-_KEEP_VERSIONS]:
+            shutil.rmtree(os.path.join(self._dir(name), v), ignore_errors=True)

@@ -118,6 +118,47 @@ def test_partitioned_merge_prunes_and_hardlinks(spark, store, tmp_path):
     assert store.read("t").count() == 5
 
 
+@pytest.mark.parametrize("first_write", ["merge", "append"])
+def test_partitioned_merge_over_flat_table_keeps_every_row(
+    spark, store, first_write
+):
+    """A partitioned merge into a table whose current version is flat
+    (created by a plain merge, or after any append) has no partition
+    directories to carry: it must merge the whole table and re-lay it
+    out on the partition column, not drop every row outside the
+    batch's partitions."""
+    import os
+
+    schema = "id int, month string, amt double"
+    base = spark.createDataFrame(
+        [(1, "2024-01", 10.0), (2, "2024-02", 20.0), (3, "2024-03", 30.0)],
+        schema,
+    )
+    if first_write == "merge":
+        store.merge("t", base, keys=["id"])
+    else:
+        store.append("t", base)
+
+    batch = spark.createDataFrame([(2, "2024-02", 99.0)], schema)
+    stats = store.merge("t", batch, keys=["id"], partition_col="month")
+    assert (stats.inserted, stats.updated) == (0, 1)
+
+    got = {r["id"]: (r["month"], r["amt"]) for r in store.read("t").collect()}
+    assert got == {
+        1: ("2024-01", 10.0), 2: ("2024-02", 99.0), 3: ("2024-03", 30.0),
+    }
+    vdir = os.path.join(store._dir("t"), store._current_version("t"))
+    assert sorted(d for d in os.listdir(vdir) if d.startswith("month=")) == [
+        "month=2024-01", "month=2024-02", "month=2024-03",
+    ]
+
+    # the re-laid-out table now takes the pruned path: the untouched
+    # partitions carry over, and the rows stay the same
+    stats = store.merge("t", batch, keys=["id"], partition_col="month")
+    assert (stats.inserted, stats.updated) == (0, 0)
+    assert store.read("t").count() == 3
+
+
 def test_partitioned_merge_null_and_escaped_partition_values(spark, store):
     """Null partition values land in __HIVE_DEFAULT_PARTITION__ and
     special characters hive-escape on disk; neither may be BOTH
@@ -176,6 +217,27 @@ def test_vacuum_keeps_newest_versions_by_mtime(spark, store):
     # the three mtime-newest fakes survive (_KEEP_VERSIONS = 3)
     assert {os.path.basename(d) for d in recent[1:]} <= left
     assert os.path.basename(recent[0]) not in left
+
+
+def test_vacuum_keeps_newest_versions_by_stamp(spark, store):
+    """Stamped version ids order by their nanosecond commit stamp,
+    not by mtime: a version whose directory mtime is older than the
+    others' (copied, restored, or touched out of order) is still the
+    newer commit and must survive the vacuum."""
+    import os
+
+    store.overwrite("t", _df(spark, [(1, "a", 1.0)]))
+    cur = store._current_version("t")
+    table_dir = os.path.join(store.root, "t")
+    # five stamped versions older than cur; mtimes run the other way
+    stamped = [f"v_{i:020d}_abcdef" for i in range(1, 6)]
+    for i, v in enumerate(stamped):
+        os.makedirs(os.path.join(table_dir, v))
+        os.utime(os.path.join(table_dir, v), (3_000_000 - i, 3_000_000 - i))
+
+    store._vacuum("t", keep=cur)
+    left = {d for d in os.listdir(table_dir) if d.startswith("v_")}
+    assert left == {cur, *stamped[2:]}
 
 
 def test_compact_preserves_data(spark, store):
