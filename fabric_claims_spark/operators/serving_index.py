@@ -293,10 +293,10 @@ def index_file_count(store: TableStore, table: str) -> int:
     """Data files in the table's CURRENT version — the read-side cost
     driver compaction exists to bound (each increment appends at
     least one file; scans pay per-file listing/open). Metadata-only:
-    ``inputFiles`` comes from the file index, no data read."""
+    ``TableStore.file_count``, no Spark job on the parquet store."""
     if not store.exists(table):
         return 0
-    return len(store.read(table).inputFiles())
+    return store.file_count(table)
 
 
 def maybe_compact_index_table(

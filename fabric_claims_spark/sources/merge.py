@@ -64,6 +64,18 @@ def _flat(files: list[str]) -> bool:
     return not any(os.sep in f for f in files)
 
 
+def _partition_col(files: list[str]) -> str | None:
+    """The column a version is laid out on: every data file
+    (``TableStore._files`` path) sits one ``col=value`` directory
+    deep, with the same ``col``. ``None`` for a flat, nested, mixed or
+    empty layout."""
+    cols = {
+        parts[0].split("=", 1)[0] if len(parts) == 2 and "=" in parts[0] else None
+        for parts in (f.split(os.sep) for f in files)
+    }
+    return cols.pop() if len(cols) == 1 else None
+
+
 @dataclass
 class MergeStats:
     """Parity with the SP's @@ROWCOUNT accounting (sp_upsert_claims.sql:105-113)."""
@@ -244,6 +256,15 @@ class TableStore:
             pq.ParquetFile(os.path.join(vdir, f)).metadata.num_rows
             for f in files
         )
+
+    def file_count(self, name: str) -> int:
+        """Data files in the CURRENT version. On the parquet store a
+        listing of ``_files`` — driver-side, no Spark job (a
+        ``read(name).inputFiles()`` pays a schema-inference job). Delta
+        stores count their snapshot's files through ``inputFiles``."""
+        if self.use_delta:
+            return len(self.read(name).inputFiles())
+        return len(self._files(name)[1])
 
     def footer_stats(
         self, name: str, column: str
@@ -506,7 +527,7 @@ class TableStore:
         carry: list[str] = []
         if partition_col:
             vdir, files = self._files(name)
-            if all(f.startswith(f"{partition_col}=") for f in files):
+            if _partition_col(files) == partition_col:
                 # slice the target to the batch's partitions. isin() is
                 # null-unsafe: a null partition value in the source
                 # would slice out NO target rows, yet Spark writes its
@@ -572,14 +593,18 @@ class TableStore:
         """OPTIMIZE analog: rewrite the table into few large files
         (append-heavy tables accrete small files; scans then pay
         per-file open cost). Returns the resulting partition count.
-        With Delta this maps to OPTIMIZE/auto-compaction."""
-        df = self.read(name)
+        A parquet version laid out on a partition column keeps that
+        layout, so later partition-pruned merges still prune. With
+        Delta this maps to OPTIMIZE/auto-compaction."""
         if target_partitions is None:
-            # ~128 MB files: estimate from current size via the scan's
-            # input files (cheap metadata)
-            n_files = len(df.inputFiles()) or 1
-            target_partitions = max(1, n_files // 8)
-        self.overwrite(name, df.coalesce(target_partitions))
+            # ~128 MB files: estimate from the current file count
+            target_partitions = max(1, self.file_count(name) // 8)
+        df = self.read(name).coalesce(target_partitions)
+        if self.use_delta:
+            self.overwrite(name, df)
+        else:
+            _, files = self._files(name)
+            self._commit(name, self._writer(name, df, _partition_col(files)))
         return target_partitions
 
     # -- the one commit path --------------------------------------------------

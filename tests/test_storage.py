@@ -248,6 +248,31 @@ def test_compact_preserves_data(spark, store):
     after_df = store.read("t")
     assert sorted(map(tuple, after_df.collect())) == before
     assert len(after_df.inputFiles()) == 1
+    assert store.file_count("t") == 1
+
+
+def test_compact_keeps_the_partition_layout(spark, store):
+    """A version laid out on ``month`` is compacted into the same
+    layout, so a later partitioned merge still prunes to the batch's
+    partitions instead of re-laying out the whole table."""
+    import os
+
+    schema = "id int, month string, amt double"
+    for month, ids in (("2024-01", (1, 2)), ("2024-02", (3, 4))):
+        batch = spark.createDataFrame(
+            [(i, month, float(i)) for i in ids], schema
+        )
+        store.merge("t", batch, keys=["id"], partition_col="month")
+    before = sorted(map(tuple, store.read("t").collect()))
+
+    store.compact("t", target_partitions=1)
+
+    assert sorted(map(tuple, store.read("t").collect())) == before
+    _, files = store._files("t")
+    assert sorted({f.split(os.sep)[0] for f in files}) == [
+        "month=2024-01", "month=2024-02",
+    ]
+    assert store.file_count("t") == len(files) == 2
 
 
 def test_watermark_store(tmp_path):
