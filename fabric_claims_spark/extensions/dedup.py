@@ -40,11 +40,6 @@ def md5_long(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def _mh_slot(base: Column, i: int) -> Column:
-    """i-th universal hash of a pre-folded base value."""
-    return (F.lit(MH_A[i]) * base + F.lit(MH_B[i])) % F.lit(MH_PRIME)
-
-
 # -- exact ------------------------------------------------------------------
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Hash-groupBy exact dedup: one canonical (min id) row per
@@ -59,13 +54,6 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 # -- MinHash ----------------------------------------------------------------
-def char_shingles(text: Column, k: int = 5) -> Column:
-    """Overlapping character k-grams via transform over an index
-    sequence (JVM-side; no explode until the caller wants one)."""
-    n = F.greatest(F.length(text) - F.lit(k - 1), F.lit(1))
-    return F.transform(F.sequence(F.lit(1), n), lambda i: text.substr(i, F.lit(k)))
-
-
 def word_shingles(text: Column, k: int = 3) -> Column:
     """Overlapping word k-grams (token windows joined with a space) —
     coarser than char shingles; preferred when token-level edits are
@@ -251,26 +239,6 @@ def lsh_candidate_pairs(
         )
         .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
         .distinct()
-    )
-
-
-def estimated_jaccard(signatures: DataFrame, pairs: DataFrame) -> DataFrame:
-    """MinHash Jaccard estimate for candidate pairs: fraction of equal
-    signature slots."""
-    sa = signatures.select(F.col("doc").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = signatures.select(F.col("doc").alias("doc_b"), F.col("sig").alias("sig_b"))
-    eq = F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int"))
-    return (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.aggregate(eq, F.lit(0), lambda acc, v: acc + v).cast("double")
-                / F.size("sig_a")
-            ).alias("est_jaccard"),
-        )
     )
 
 

@@ -1,9 +1,20 @@
-"""Similarity search over embedding columns (array<float>).
+"""Vector primitives over embedding columns (array<float>) — the one
+home of the cosine, the IVF coarse assignment, the probe and the
+rounded cosine top-k. The registry queries (queries/similarity.py,
+queries/serving.py) and the serving index (operators/serving_index.py)
+all call these, so the one-shot, stored and served paths share one
+set of expressions and cannot drift.
 
-Brute-force cosine is the correctness baseline; the scale path is
-IVF: assign every vector to its nearest of K broadcast centroids,
-then search only within the probe's bucket(s). Both paths use
-zip_with/aggregate higher-order functions — JVM-side, no UDFs.
+Brute-force cosine top-k is the correctness baseline; the scale path
+is IVF: assign every vector to its nearest of K broadcast centroids,
+then score only the probe's nprobe nearest bucket(s). Every
+similarity is the cosine rounded to 6 dp and every tie breaks on the
+smaller id — the expressions the DuckDB oracles spell in SQL. All of
+it is zip_with/aggregate higher-order functions — JVM-side, no UDFs.
+
+Frame conventions: vectors are ``(vec_id, ev: array<double>, ...)``,
+centroids ``(centroid_id, cv: array<double>)``, a query one row
+``(qv: array<double>)``.
 
 At 100 TB: centroids come from a sampled k-means (or are sampled
 rows, as here); vectors are written bucketed by ``assigned_centroid``
@@ -17,10 +28,11 @@ import random
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from fabric_claims_spark.localframe import local_frame
 
 
 def dot(a: Column, b: Column) -> Column:
+    """Sequential-fold dot product over double arrays — the op order of
+    DuckDB's list_dot_product, so both engines produce the same double."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
     )
@@ -35,84 +47,81 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
 
 
-def brute_force_topk(
-    vectors: DataFrame,
-    query: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_vec_col: str = "qv",
-) -> DataFrame:
-    """Top-k cosine neighbors of a (broadcastable) query set. Returns
-    one ranked frame per query row; the orderBy+limit compiles to
-    TakeOrderedAndProject (per-partition top-k, no global sort)."""
-    scored = vectors.join(F.broadcast(query)).select(
-        id_col,
-        cosine(as_double_array(vec_col), F.col(query_vec_col)).alias("score"),
-    )
-    return scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
+def _sim(a: str, b: str) -> Column:
+    return F.round(cosine(F.col(a), F.col(b)), 6)
 
 
-def ivf_assign(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id_col: str = "centroid_id",
-    centroid_vec_col: str = "cv",
-) -> DataFrame:
-    """Nearest-centroid assignment (IVF coarse quantizer): broadcast
-    centroids × vectors, argmax cosine with deterministic ties."""
-    scored = vectors.join(F.broadcast(centroids)).select(
-        id_col,
-        centroid_id_col,
-        cosine(as_double_array(vec_col), as_double_array(centroid_vec_col)).alias(
-            "score"
-        ),
+def ivf_assign(e: DataFrame, centroids: DataFrame) -> DataFrame:
+    """Nearest-centroid assignment (the IVF coarse quantizer):
+    ``(vec_id, ev)`` × broadcast ``(centroid_id, cv)`` →
+    ``(vec_id, ev, assigned_centroid, centroid_sim)``, the argmax of the
+    rounded cosine with ties to the smaller centroid_id. Broadcast-join
+    shaped: O(rows·k) work, O(1) plan size — no per-centroid literal
+    expressions, so it carries any k without the plan-cost wall
+    measured for the literal Lloyd path (SCALING.md round 9)."""
+    scored = e.join(F.broadcast(centroids)).select(
+        "vec_id", "ev", "centroid_id", _sim("ev", "cv").alias("sim")
     )
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("score").desc(), F.col(centroid_id_col).asc()
+    w = Window.partitionBy("vec_id").orderBy(
+        F.col("sim").desc(), F.col("centroid_id").asc()
     )
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
-        .select(id_col, F.col(centroid_id_col).alias("assigned_centroid"), "score")
+        .select(
+            "vec_id",
+            "ev",
+            F.col("centroid_id").alias("assigned_centroid"),
+            F.col("sim").alias("centroid_sim"),
+        )
+    )
+
+
+def ivf_probe(centroids: DataFrame, q: DataFrame, nprobe: int) -> DataFrame:
+    """Query routing: the ``nprobe`` centroid_ids nearest the query by
+    rounded cosine, ties to the smaller id (a k-row frame; callers
+    broadcast it into their bucket filter)."""
+    return (
+        centroids.join(F.broadcast(q))
+        .select("centroid_id", _sim("cv", "qv").alias("sim"))
+        .orderBy(F.col("sim").desc(), F.col("centroid_id").asc())
+        .limit(nprobe)
+        .select("centroid_id")
+    )
+
+
+def cosine_topk(e: DataFrame, q: DataFrame, k: int) -> DataFrame:
+    """The ``k`` rows of ``e`` most similar to the query: ``ev`` becomes
+    the rounded ``cosine_sim``, the caller's other columns are kept,
+    and rows order by cosine_sim descending, then vec_id ascending.
+    orderBy+limit compiles to TakeOrderedAndProject — per-partition
+    top-k, then a k-row merge on the driver, no global sort."""
+    keep = [c for c in e.columns if c != "ev"]
+    return (
+        e.join(F.broadcast(q))
+        .select(*keep, _sim("ev", "qv").alias("cosine_sim"))
+        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id").asc())
+        .limit(k)
     )
 
 
 def ivf_search(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    query: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    nprobe: int = 1,
+    e: DataFrame, centroids: DataFrame, q: DataFrame, nprobe: int = 1, k: int = 10
 ) -> DataFrame:
-    """IVF probe: route the query to its ``nprobe`` nearest centroid
-    buckets, then brute-force only within those buckets (assignments
+    """IVF read path: ``ivf_probe`` routes the query to its ``nprobe``
+    nearest buckets, ``ivf_assign`` keeps the vectors of ``e`` that
+    fall in them, and ``cosine_topk`` ranks only those (assignments
     computed inline here; a real index persists them bucketed).
 
     nprobe is the recall knob — nprobe=K degenerates to brute force;
-    tests/test_extensions.py pins recall@10 ≥ 0.8 at nprobe=2 on the
+    tests/test_extensions.py pins the recall at nprobe=2 on a
     synthetic table."""
-    assigned = ivf_assign(vectors, centroids, id_col, vec_col)
-    bucketed = vectors.join(assigned.select(id_col, "assigned_centroid"), id_col)
-    q = query.select(F.lit(-1).alias(id_col), F.col("qv").alias(vec_col))
-    q_scored = q.join(F.broadcast(centroids)).select(
-        cosine(as_double_array(vec_col), as_double_array("cv")).alias("score"),
-        F.col("centroid_id").alias("probe_centroid"),
+    hits = ivf_assign(e.select("vec_id", "ev"), centroids).join(
+        F.broadcast(ivf_probe(centroids, q, nprobe)),
+        F.col("assigned_centroid") == F.col("centroid_id"),
+        "left_semi",
     )
-    q_assigned = (
-        q_scored.orderBy(F.col("score").desc(), F.col("probe_centroid").asc())
-        .limit(nprobe)
-        .select("probe_centroid")
-    )
-    candidates = bucketed.join(
-        F.broadcast(q_assigned),
-        F.col("assigned_centroid") == F.col("probe_centroid"),
-    )
-    return brute_force_topk(candidates, query, k, id_col, vec_col)
+    return cosine_topk(e.join(hits.select("vec_id"), "vec_id", "left_semi"), q, k)
 
 
 # -- random-hyperplane LSH (SimHash for real vectors) ------------------------
@@ -294,124 +303,6 @@ def _lloyd_assign(
     )
 
 
-def _lloyd_assign_join(
-    ev: DataFrame, cents: list[tuple[int, list[float]]]
-) -> DataFrame:
-    """Join-based argmin assignment for paper-scale k (VERDICT r8
-    item 3): the centroids ride as a broadcast TABLE instead of k
-    literal expression subtrees, so the PLAN is O(1) in k — the
-    literal path's n-independent compile cost (k·dim literals per
-    row, the residual the SCALING r8 k-regime table measured at
-    37.8 s for k=80 and which won't compile at k in the thousands)
-    disappears. Shape: broadcast-nested-loop join (k rows, no
-    shuffle of the corpus) → per-row (d, cid) struct → min per
-    (vec_id, v). The groupBy keys on v too (functionally dependent
-    on vec_id) so no second join is needed to carry the vector;
-    partial aggregation collapses the k rows per vector map-side, so
-    the one shuffle moves n rows, not n·k.
-
-    Bit-identical to ``_lloyd_assign``: ``dot`` is the same
-    left-fold over zip_with whether the centroid array is a literal
-    or a column, and the (d, cid) struct-min tie-break is the same —
-    pinned by tests/test_extensions.py."""
-    spark = ev.sparkSession
-    cdf = local_frame(
-        spark,
-        [(int(cid), [float(x) for x in cv]) for cid, cv in cents],
-        "cid long, cv array<double>",
-    )
-    d = (
-        dot(F.col("v"), F.col("v"))
-        - F.lit(2.0) * dot(F.col("v"), F.col("cv"))
-        + dot(F.col("cv"), F.col("cv"))
-    )
-    s = F.struct(d.alias("d"), F.col("cid").alias("cid"))
-    return (
-        ev.crossJoin(F.broadcast(cdf))
-        .groupBy("vec_id", "v")
-        .agg(F.min(s).alias("m"))
-        .select(
-            "vec_id",
-            F.col("v"),
-            F.col("m").getField("cid").alias("cluster"),
-            F.col("m").getField("d").alias("d"),
-        )
-    )
-
-
-def _lloyd_assign_arrow(
-    ev: DataFrame, cents: list[tuple[int, list[float]]]
-) -> DataFrame:
-    """Vectorized argmin assignment (sanctioned Arrow ``mapInPandas``,
-    SURVEY §2.10): the centroid matrix rides to every task as a
-    closure constant (k·dim doubles — the same bounded driver state
-    the literal path embeds), and each Arrow batch computes all
-    batch×k distances as ONE BLAS matmul — no n·k row
-    materialization, no shuffle, O(1) plan size.
-
-    This is the paper-scale regime both in k AND in n·k: the literal
-    tree pays a plan/codegen term superlinear in k (measured 158 s at
-    k=800 before touching data — SCALING.md r9) and the join pays an
-    interpreted per-(row,centroid) cost. Matmul summation order
-    differs from the fold, so distances can differ in the last ulp —
-    this path is opt-in for scale, NEVER the oracle-pinned default;
-    parity (same clusters, distances to 1e-9 relative) is pinned by
-    tests/test_extensions.py."""
-    import numpy as np
-    import pandas as pd
-
-    ordered = sorted(cents)  # ascending cid == the struct-min tie-break
-    cmat = np.asarray([cv for _, cv in ordered], dtype=np.float64)
-    cids = np.asarray([cid for cid, _ in ordered], dtype=np.int64)
-    c2 = (cmat * cmat).sum(axis=1)
-    # declared output: input id/vector columns + (cluster, d)
-    out_schema = (
-        f"vec_id {ev.schema['vec_id'].dataType.simpleString()}, "
-        "v array<double>, cluster bigint, d double"
-    )
-
-    def assign(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vmat = np.stack(pdf["v"].to_numpy())
-            d = (
-                (vmat * vmat).sum(axis=1)[:, None]
-                - 2.0 * (vmat @ cmat.T)
-                + c2[None, :]
-            )
-            j = d.argmin(axis=1)  # first minimum == smallest cid on ties
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "v": pdf["v"],
-                    "cluster": cids[j],
-                    "d": d[np.arange(len(j)), j],
-                }
-            )
-
-    return ev.mapInPandas(assign, out_schema)
-
-
-def lloyd_assign(
-    ev: DataFrame,
-    cents: list[tuple[int, list[float]]],
-    strategy: str = "literal",
-) -> DataFrame:
-    """Assignment dispatcher: ``literal`` (default — zero-shuffle
-    array_min over k literal structs, the setting every oracle query
-    pins), ``join`` (broadcast centroid table + group-min, O(1) plan
-    size), or ``arrow`` (mapInPandas BLAS matmul — O(1) plan AND
-    vectorized execution; last-ulp distance drift, so opt-in only)."""
-    if strategy == "join":
-        return _lloyd_assign_join(ev, cents)
-    if strategy == "arrow":
-        return _lloyd_assign_arrow(ev, cents)
-    if strategy == "literal":
-        return _lloyd_assign(ev, cents)
-    raise ValueError(f"unknown assignment strategy: {strategy!r}")
-
-
 def _lloyd_assign_probes(
     ev: DataFrame, cents: list[tuple[int, list[float]]], probes: int = 2
 ) -> DataFrame:
@@ -441,7 +332,6 @@ def kmeans_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     sample_cap: int | None = None,
-    assign: str = "literal",
 ) -> list[tuple[int, list[float]]]:
     """The Lloyd loop itself; returns the trained centroids as driver
     state [(cid, vector)] — the form ``_lloyd_assign`` embeds as
@@ -466,13 +356,7 @@ def kmeans_centroids(
     ``UserWarning``; only if no cut short of the whole grid yields k
     vectors does training fall back to the full corpus, with a
     louder warning, so the O(n·k·iters) cost the cap exists to avoid
-    is never reintroduced silently (ADVICE r9).
-
-    ``assign`` picks the Lloyd-step assignment strategy (see
-    ``lloyd_assign``): ``literal`` (default, the oracle-pinned
-    zero-shuffle expression tree) or ``join`` (broadcast centroid
-    table — O(1) plan size, the paper-scale-k path; bit-identical
-    centroids, pinned by pytest)."""
+    is never reintroduced silently (ADVICE r9)."""
     ev = vectors.select(
         F.col(id_col).alias("vec_id"), as_double_array(vec_col).alias("v")
     )
@@ -535,7 +419,7 @@ def kmeans_centroids(
             f"cannot seed k={k} centroids"
         )
     for _ in range(iters):
-        micro = lloyd_assign(ev, cents, strategy=assign).select(
+        micro = _lloyd_assign(ev, cents).select(
             "cluster",
             F.posexplode(
                 F.transform("v", lambda x: F.round(x * 1e6, 0).cast("long"))
@@ -576,7 +460,6 @@ def ivf_index_build(
     vec_col: str = "embedding",
     path: str | None = None,
     sample_cap: int | None = None,
-    assign: str = "literal",
 ) -> list[tuple[int, list[float]]]:
     """Train centroids (Lloyd) and persist the vectors BUCKETED on
     ``assigned_centroid`` — the write-once layout that makes every
@@ -587,22 +470,20 @@ def ivf_index_build(
     centroid with no shuffle and no index-wide scan. Returns the
     trained centroids (persist them beside the table in production).
 
-    ``sample_cap`` / ``assign`` are the paper-scale-k levers (see
-    ``kmeans_centroids`` / ``lloyd_assign``): hash-sampled training
-    and O(1)-plan assignment. Defaults keep the exact oracle-pinned
-    paths bit-identical.
+    ``sample_cap`` is the paper-scale-k lever (see
+    ``kmeans_centroids``): hash-sampled training. The default keeps
+    the exact oracle-pinned path bit-identical.
     """
     from fabric_claims_spark.operators.bucketing import write_bucketed
 
     cents = kmeans_centroids(
-        vectors, k, iters, id_col, vec_col,
-        sample_cap=sample_cap, assign=assign,
+        vectors, k, iters, id_col, vec_col, sample_cap=sample_cap
     )
     ev = vectors.select(
         F.col(id_col).alias("vec_id"), as_double_array(vec_col).alias("v")
     )
     indexed = vectors.join(
-        lloyd_assign(ev, cents, strategy=assign).select(
+        _lloyd_assign(ev, cents).select(
             F.col("vec_id").alias(id_col),
             F.col("cluster").alias("assigned_centroid"),
         ),

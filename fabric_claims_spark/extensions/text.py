@@ -1,6 +1,7 @@
 """Text analysis column builders: tokenization, quality scoring,
-language-ID, fingerprinting (reused by queries/text_docs.py — the
-query module inlines the same expressions so its DuckDB oracles stay
+fingerprinting, PII redaction and winnowing (queries/text_docs.py
+calls ``normalized_fingerprint`` and ``redact_pii``, and inlines the
+token and quality expressions so its DuckDB oracles stay
 side-by-side readable).
 
 Everything is a Catalyst expression over a string column; the BPE-ish
@@ -17,13 +18,6 @@ from pyspark.sql import functions as F
 # word pieces ~4 chars, digits, and punctuation islands — a crude but
 # deterministic BPE-token-count proxy
 _BPE_ISH = r"[A-Za-z]{1,4}|[0-9]+|[^A-Za-z0-9\s]"
-
-STOPWORDS = {
-    "en": ["the", "a", "and", "of"],
-    "de": ["der", "die", "das", "und"],
-    "es": ["el", "la", "los", "que"],
-    "fr": ["le", "la", "les", "et"],
-}
 
 
 def token_count(text: Column) -> Column:
@@ -45,36 +39,12 @@ def alpha_ratio(text: Column) -> Column:
     )
 
 
-def stopword_hits(text: Column, lang: str = "en") -> Column:
-    pattern = r"\b(" + "|".join(STOPWORDS[lang]) + r")\b"
-    return F.regexp_count(text, F.lit(pattern)).cast("long")
-
-
 def quality_flag(
     text: Column, min_chars: int = 100, min_alpha_ratio: float = 0.5
 ) -> Column:
     return F.when(
         (F.length(text) >= min_chars) & (alpha_ratio(text) > min_alpha_ratio), "keep"
     ).otherwise("filter")
-
-
-def langid_scores(text: Column) -> dict[str, Column]:
-    return {lang: stopword_hits(text, lang) for lang in STOPWORDS}
-
-
-def predict_lang(text: Column) -> Column:
-    """Fixed-precedence argmax over stopword scores (deterministic)."""
-    scores = langid_scores(text)
-    langs = list(scores)
-    expr = F.lit("unknown")
-    # build from lowest precedence up
-    for lang in reversed(langs):
-        others = [scores[o] for o in langs[langs.index(lang) + 1 :]]
-        cond = scores[lang] > 0
-        for o in others:
-            cond = cond & (scores[lang] >= o)
-        expr = F.when(cond, lang).otherwise(expr)
-    return expr
 
 
 def normalized_fingerprint(text: Column) -> Column:

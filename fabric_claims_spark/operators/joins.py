@@ -1,29 +1,17 @@
 """Join helpers with explicit scale strategies (SURVEY.md §2.3, §4).
 
-Catalyst/AQE picks physical joins; these helpers encode the two
-decisions it can't make for us: (a) force-broadcast a known-small
-side, (b) salt a known-skewed key so one hot key's rows spread over
-``salt_buckets`` reducers instead of one. AQE's skew-join splitting
-handles *shuffle* skew adaptively; salting is for the aggregate case
-(groupBy on a hot key) where AQE can't re-split a single group.
+Catalyst/AQE picks physical joins; these helpers encode decisions it
+can't make for us, e.g. salting a known-skewed key so one hot key's
+rows spread over ``salt_buckets`` reducers instead of one. AQE's
+skew-join splitting handles *shuffle* skew adaptively; salting is for
+the aggregate case (groupBy on a hot key) where AQE can't re-split a
+single group.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def anti_join(left: DataFrame, right: DataFrame, on: list[str]) -> DataFrame:
-    """J1 — subtract matching keys (NB_BRONZE:182)."""
-    return left.join(right.select(on), on, "left_anti")
-
-
-def broadcast_join(
-    fact: DataFrame, dim: DataFrame, on: list[str] | Column, how: str = "left"
-) -> DataFrame:
-    """J4 — dim side pinned to broadcast (no fact shuffle)."""
-    return fact.join(F.broadcast(dim), on, how)
 
 
 def salted_groupby_count(

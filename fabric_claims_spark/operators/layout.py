@@ -199,6 +199,33 @@ def _bloom_positions(key: Column, k: int) -> list[Column]:
     ]
 
 
+def _bloom_bitmaps(files: DataFrame, key_col: str, k: int) -> DataFrame:
+    """(file, bitmap) — one word-indexed bloom bitmap per input file of
+    ``files``, the rows ``build_bloom_sidecar`` writes and
+    ``update_bloom_sidecar`` appends."""
+    keyed = files.select(
+        F.input_file_name().alias("file"), F.col(key_col).alias("key")
+    )
+    pos = F.explode(F.array(*_bloom_positions(F.col("key"), k))).alias("pos")
+    bits = keyed.select("file", pos).select(
+        "file",
+        (F.col("pos") / 64).cast("int").alias("word"),
+        # F.shiftleft takes a Python-int bit count; a per-row bit
+        # count needs the SQL form (same trap as events_ewma_daily)
+        F.expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT))").alias(
+            "bit"
+        ),
+    )
+    # bitmap: per (file, word) OR of bits, then per file a dense
+    # word-indexed array — both aggregates map-side combinable
+    words = bits.groupBy("file", "word").agg(F.bit_or("bit").alias("wordval"))
+    return words.groupBy("file").agg(
+        F.map_from_arrays(
+            F.collect_list("word"), F.collect_list("wordval")
+        ).alias("bitmap")
+    )
+
+
 def build_bloom_sidecar(
     spark,
     table_dir: str,
@@ -210,31 +237,10 @@ def build_bloom_sidecar(
     sidecar for ``key_col``. Returns the sidecar path."""
     import os
 
-    df = spark.read.parquet(table_dir).select(
-        F.input_file_name().alias("file"), F.col(key_col).alias("key")
-    )
-    pos = F.explode(F.array(*_bloom_positions(F.col("key"), k))).alias("pos")
-    bits = df.select("file", pos).select(
-        "file",
-        (F.col("pos") / 64).cast("int").alias("word"),
-        # F.shiftleft takes a Python-int bit count; a per-row bit
-        # count needs the SQL form (same trap as events_ewma_daily)
-        F.expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT))").alias(
-            "bit"
-        ),
-    )
-    # bitmap: per (file, word) OR of bits, then per file a dense
-    # word-indexed array — both aggregates map-side combinable
-    words = bits.groupBy("file", "word").agg(
-        F.bit_or("bit").alias("wordval")
-    )
-    sidecar = words.groupBy("file").agg(
-        F.map_from_arrays(
-            F.collect_list("word"), F.collect_list("wordval")
-        ).alias("bitmap")
-    )
     out = os.path.join(table_dir, sidecar_name)
-    sidecar.coalesce(1).write.mode("overwrite").parquet(out)
+    _bloom_bitmaps(spark.read.parquet(table_dir), key_col, k).coalesce(
+        1
+    ).write.mode("overwrite").parquet(out)
     return out
 
 
@@ -399,24 +405,9 @@ def update_bloom_sidecar(
                  if not indexed(p)]
     if not new_files:
         return 0
-    df = spark.read.parquet(*new_files).select(
-        F.input_file_name().alias("file"), F.col(key_col).alias("key")
-    )
-    pos = F.explode(F.array(*_bloom_positions(F.col("key"), k))).alias("pos")
-    bits = df.select("file", pos).select(
-        "file",
-        (F.col("pos") / 64).cast("int").alias("word"),
-        F.expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT))").alias(
-            "bit"
-        ),
-    )
-    words = bits.groupBy("file", "word").agg(F.bit_or("bit").alias("wordval"))
-    sidecar = words.groupBy("file").agg(
-        F.map_from_arrays(
-            F.collect_list("word"), F.collect_list("wordval")
-        ).alias("bitmap")
-    )
-    sidecar.coalesce(1).write.mode("append").parquet(side_path)
+    _bloom_bitmaps(spark.read.parquet(*new_files), key_col, k).coalesce(
+        1
+    ).write.mode("append").parquet(side_path)
     return len(new_files)
 
 

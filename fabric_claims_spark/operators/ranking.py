@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from fabric_claims_spark.caching import tracked_cache
+
 
 def with_global_rank(
     df: DataFrame,
@@ -32,20 +34,24 @@ def with_global_rank(
 
     Returns ``(ranked_df, total_rows)``.
 
-    The bucket-size census and the per-bucket ranking are branches of
-    ONE plan over the same range exchange, so ReuseExchange
-    materializes the shuffle once and both branches see identical
-    bucket boundaries — running the census as a separate job would
-    re-sample the range partitioner and can mis-align offsets against
-    a differently-bucketed second pass (observed: quartiles off by
-    ±100 rows). The cumulative-offset window runs over bucket COUNTS
-    (P rows), never data rows. ``total_rows`` comes from a plain
-    count (bucketing-independent).
+    The bucket-size census and the per-bucket ranking read ONE cached
+    range-partitioned frame (``tracked_cache``, materialized by the
+    ``total_rows`` count), so both see the same bucket of every row.
+    Every evaluation of a range exchange samples its own bounds, and
+    the sample depends on the order rows reach it; when the two
+    branches were two evaluations of one plan, column pruning made
+    them differ, ReuseExchange could not merge them, and offsets
+    drifted against the ranked rows (observed:
+    ``events_user_rfm_segments``, three chained ranks at sf0.1, a new
+    hash on every run). The cumulative-offset window runs over bucket
+    COUNTS (P rows), never data rows.
     """
     spark = df.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    ranked = df.repartitionByRange(p, *sort_cols).withColumn(
-        "_pid", F.spark_partition_id()
+    ranked = tracked_cache(
+        df.repartitionByRange(p, *sort_cols).withColumn(
+            "_pid", F.spark_partition_id()
+        )
     )
     sizes = ranked.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
     # global window over ≤P census rows — bounded, not a data window
@@ -61,7 +67,7 @@ def with_global_rank(
         .withColumn(rank_col, F.row_number().over(w) + F.coalesce("_off", F.lit(0)))
         .drop("_pid", "_off")
     )
-    return out, df.count()
+    return out, ranked.count()
 
 
 def ntile_by_rank(rank_col: str, n_rows: int, tiles: int) -> "F.Column":

@@ -90,6 +90,11 @@ from fabric_claims_spark.extensions.bpe import (
     _release_checkpoint,
     _tracked_checkpoint,
 )
+from fabric_claims_spark.extensions.similarity import (
+    as_double_array,
+    ivf_assign,
+    kmeans_centroids,
+)
 from fabric_claims_spark.localframe import local_frame
 from fabric_claims_spark.operators.rollup import (
     applied_watermark,
@@ -969,17 +974,17 @@ def apply_ivf_batch(
     across increments (the FAISS discipline — re-training moves every
     existing bucket boundary, so that is an index REBUILD, not
     maintenance). ``centroids`` is the (centroid_id, cv) frame, k
-    rows, broadcast; assignment is O(batch·k) with cosine rounded to
-    6 dp and row_number ties to the smaller centroid_id — the exact
-    ``embeddings_ivf_assign`` expressions, so the stored assignment
+    rows, broadcast; assignment is the shared ``ivf_assign`` that
+    ``embeddings_ivf_assign`` also calls, so the stored assignment
     hash-matches the one-shot query. The stored corpus is never
     re-scanned. Same commit protocol as the lexical/LSH indexes:
     token-stamped appends, atomic commit, redelivery no-op."""
     if _applied(store, IVF_COMMITS, batch_id):
         return False
-    ev = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    e = batch_vectors.select(F.col(id_col).alias("vec_id"), ev.alias("ev"))
-    assigned = _ivf_assign(e, centroids)
+    e = batch_vectors.select(
+        F.col(id_col).alias("vec_id"), as_double_array(vec_col).alias("ev")
+    )
+    assigned = ivf_assign(e, centroids)
     token = uuid.uuid4().hex
     store.append(IVF_VECS, assigned.withColumn(_TOKEN, F.lit(token)))
     if doc_col is not None:
@@ -994,51 +999,11 @@ def apply_ivf_batch(
     return True
 
 
-def _ivf_assign(e: DataFrame, centroids: DataFrame) -> DataFrame:
-    """The one coarse-assignment expression set — cosine rounded to
-    6 dp, row_number ties to the smaller centroid_id (the exact
-    ``embeddings_ivf_assign`` expressions). Shared verbatim by
-    ``apply_ivf_batch`` and ``rebuild_ivf_index`` so incremental
-    maintenance and rebuild reassignment cannot drift. Broadcast-join
-    shaped: O(rows·k) work, O(1) plan size — no per-centroid literal
-    expressions, so it carries any k without the plan-cost wall
-    measured for the literal Lloyd path (SCALING.md round 9)."""
-
-    def _dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    cos = _dot(F.col("ev"), F.col("cv")) / (
-        F.sqrt(_dot(F.col("ev"), F.col("ev")))
-        * F.sqrt(_dot(F.col("cv"), F.col("cv")))
-    )
-    scored = e.join(F.broadcast(centroids)).select(
-        "vec_id", "ev", "centroid_id", F.round(cos, 6).alias("sim")
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("sim").desc(), F.col("centroid_id").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            "vec_id",
-            "ev",
-            F.col("centroid_id").alias("assigned_centroid"),
-            F.col("sim").alias("centroid_sim"),
-        )
-    )
-
-
 def rebuild_ivf_index(
     store: TableStore,
     k: int = 8,
     iters: int = 3,
     sample_cap: int | None = None,
-    train_assign: str = "literal",
 ) -> list[tuple[int, list[float]]]:
     """Index REBUILD — the contract ``apply_ivf_batch`` names but
     round 9 left unimplemented: retraining the quantizer moves every
@@ -1046,13 +1011,12 @@ def rebuild_ivf_index(
     full retrain + reassign + atomic swap.
 
     1. RETRAIN on the committed vectors
-       (``kmeans_centroids(sample_cap=…, assign=…)`` — the measured
-       strategies: sampled training bounds the paper-scale k·n cost,
-       'join'/'arrow' bound the plan/compute cost; seeds = the k
-       smallest committed vec_ids, the oracle-pinned rule).
+       (``kmeans_centroids(sample_cap=…)`` — sampled training bounds
+       the paper-scale k·n cost; seeds = the k smallest committed
+       vec_ids, the oracle-pinned rule).
     2. REASSIGN every committed vector to the new centroids with the
-       verbatim ``_ivf_assign`` expressions — broadcast-join shaped,
-       one linear pass, never pair-shaped.
+       shared ``ivf_assign`` (extensions/similarity.py) —
+       broadcast-join shaped, one linear pass, never pair-shaped.
     3. ATOMIC SWAP under the existing commit protocol: the new
        assignment rows and the new quantizer rows (``ivf_centroids``)
        append token-stamped and INVISIBLE, then one pointer-swap
@@ -1072,8 +1036,6 @@ def rebuild_ivf_index(
     """
     if not store.exists(IVF_COMMITS):
         raise ValueError("rebuild_ivf_index: no committed index to rebuild")
-    from fabric_claims_spark.extensions.similarity import kmeans_centroids
-
     committed = read_ivf_index(store).select("vec_id", "ev")
     # live doc→vec rows must survive the commit swap (their append
     # tokens are un-committed by it): snapshot them now, re-append
@@ -1091,14 +1053,13 @@ def rebuild_ivf_index(
         id_col="vec_id",
         vec_col="ev",
         sample_cap=sample_cap,
-        assign=train_assign,
     )
     cent_df = local_frame(
         store.spark,
         [(int(cid), [float(x) for x in cv]) for cid, cv in cents],
         "centroid_id long, cv array<double>",
     )
-    assigned = _ivf_assign(committed, F.broadcast(cent_df))
+    assigned = ivf_assign(committed, F.broadcast(cent_df))
     token = uuid.uuid4().hex
     # appends are invisible until the commit swap (readers semi-join
     # committed tokens); the append itself reads the OLD version's
@@ -1216,7 +1177,6 @@ def maybe_rebuild_ivf_index(
     k: int | None = None,
     iters: int = 3,
     sample_cap: int | None = None,
-    train_assign: str = "literal",
 ) -> tuple[float, list[tuple[int, list[float]]] | None]:
     """Skew-triggered rebuild policy (VERDICT r10 item 4): the
     crossover measurement says one rebuild costs about two
@@ -1262,9 +1222,5 @@ def maybe_rebuild_ivf_index(
     if skew < skew_threshold:
         return skew, None
     return skew, rebuild_ivf_index(
-        store,
-        k=k,
-        iters=iters,
-        sample_cap=sample_cap,
-        train_assign=train_assign,
+        store, k=k, iters=iters, sample_cap=sample_cap
     )

@@ -75,9 +75,3 @@ def run_gold(
         total_written += stats.written
     results["rows_written"] = total_written
     return results
-
-
-def distinct_domain(gold_store: TableStore, table: str, column: str) -> DataFrame:
-    """A3 — the 7 distinct-domain views (WH_VIEWS/DistinctClaimStatus
-    .sql:4-6 et al.) as a single parameterized helper."""
-    return gold_store.read(table).select(column).distinct()

@@ -13,8 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from fabric_claims_spark.sources.merge import TableStore
-
 
 def star(
     fact: DataFrame,
@@ -44,16 +42,3 @@ def star(
             joined = joined.drop(pretty[dim_key])
         out = joined
     return out
-
-
-def claims_star(gold: TableStore) -> DataFrame:
-    """The reference model: Claims → Dates/Patients/Providers."""
-    claims = gold.read("Claims")
-    return star(
-        claims,
-        {
-            "date": (gold.read("Dates"), "ClaimDate", "Date"),
-            "patient": (gold.read("Patients"), "PatientID", "PatientID"),
-            "provider": (gold.read("Providers"), "ProviderID", "ProviderID"),
-        },
-    )

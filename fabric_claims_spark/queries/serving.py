@@ -43,6 +43,11 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fabric_claims_spark.extensions.similarity import (
+    as_double_array,
+    cosine_topk,
+    ivf_probe,
+)
 from fabric_claims_spark.operators.serving_index import (
     apply_ivf_batch,
     apply_lexical_batch,
@@ -65,7 +70,10 @@ from fabric_claims_spark.queries.lsh import (
 )
 from fabric_claims_spark.queries.similarity import (
     _IVF_ASSIGN_ORACLE,
+    _IVF_K,
+    _IVF_NPROBE,
     _IVF_SEARCH_ORACLE,
+    _IVF_TOPK,
     _RRF_INDEXED_ORACLE,
 )
 from fabric_claims_spark.sources.merge import TableStore
@@ -478,7 +486,7 @@ def embeddings_ivf_index_maintenance(
     emb = load_table(spark, sf_dir, "embeddings")
     cent = emb.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("cv"),
+        as_double_array("embedding").alias("cv"),
     )
     work = tempfile.mkdtemp(prefix="ivf_idx_")
     try:
@@ -498,6 +506,30 @@ def embeddings_ivf_index_maintenance(
         shutil.rmtree(work, ignore_errors=True)
 
 
+def _probe_stored(
+    spark: SparkSession,
+    sf_dir: str,
+    store: TableStore,
+    cent: DataFrame,
+    q: DataFrame,
+) -> DataFrame:
+    """The served IVF read: the query's probed buckets of the STORED
+    assignment (``read_ivf_index`` — committed, live rows), labelled
+    from the corpus and ranked by the shared cosine top-k — the
+    ``embeddings_ivf_search`` routing and scoring over the store."""
+    hits = read_ivf_index(store).where(F.col("vec_id") != 0).join(
+        F.broadcast(ivf_probe(cent, q, _IVF_NPROBE)),
+        F.col("assigned_centroid") == F.col("centroid_id"),
+        "left_semi",
+    )
+    labels = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
+    return cosine_topk(
+        hits.join(labels, "vec_id").select("vec_id", "label", "ev"),
+        q,
+        _IVF_TOPK,
+    ).localCheckpoint(eager=True)
+
+
 @query("embeddings_ivf_search_served", oracle=_IVF_SEARCH_ORACLE)
 def embeddings_ivf_search_served(
     spark: SparkSession, sf_dir: str
@@ -510,16 +542,8 @@ def embeddings_ivf_search_served(
     vector → nprobe nearest centroids) and exact re-scoring are
     identical expressions, so the fused top-10 hash-equals the
     in-plan twin (oracle shared verbatim)."""
-    from fabric_claims_spark.queries.similarity import (
-        _IVF_K,
-        _IVF_NPROBE,
-        _IVF_TOPK,
-        _as_double,
-        _cosine,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", "label", _as_double("embedding").alias("ev"))
+    e = emb.select("vec_id", "label", as_double_array("embedding").alias("ev"))
     q = e.where(F.col("vec_id") == 0).select(F.col("ev").alias("qv"))
     cent = e.where(F.col("vec_id") < _IVF_K).select(
         F.col("vec_id").alias("centroid_id"), F.col("ev").alias("cv")
@@ -533,44 +557,7 @@ def embeddings_ivf_search_served(
         # so it pays for one apply — assignment is batch-independent
         # (fixed quantizer), so the hash is identical either way.
         apply_ivf_batch(store, emb, 0, cent)
-        stored = read_ivf_index(store)
-
-        probe = (
-            cent.join(F.broadcast(q))
-            .select(
-                "centroid_id",
-                F.round(_cosine(F.col("cv"), F.col("qv")), 6).alias("sim"),
-            )
-            .orderBy(F.col("sim").desc(), F.col("centroid_id").asc())
-            .limit(_IVF_NPROBE)
-            .select("centroid_id")
-        )
-        return (
-            stored.where(F.col("vec_id") != 0)
-            .join(
-                F.broadcast(probe),
-                F.col("assigned_centroid") == F.col("centroid_id"),
-            )
-            .join(
-                F.broadcast(q)
-            )
-            .join(
-                load_table(spark, sf_dir, "embeddings").select(
-                    "vec_id", "label"
-                ),
-                "vec_id",
-            )
-            .select(
-                "vec_id",
-                "label",
-                F.round(_cosine(F.col("ev"), F.col("qv")), 6).alias(
-                    "cosine_sim"
-                ),
-            )
-            .orderBy(F.col("cosine_sim").desc(), F.col("vec_id").asc())
-            .limit(_IVF_TOPK)
-            .localCheckpoint(eager=True)
-        )
+        return _probe_stored(spark, sf_dir, store, cent, q)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -614,7 +601,7 @@ def embeddings_ivf_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     claim, and the multi-batch_id re-pointing is pytest-pinned, so
     this gate pays for one), then ``rebuild_ivf_index`` retrains
     (Lloyd, 2 rounds, seeds = the k smallest committed vec_ids),
-    reassigns every committed vector with the shared ``_ivf_assign``
+    reassigns every committed vector with the shared ``ivf_assign``
     expressions, and atomically swaps — and the post-swap reader must
     hash-equal the from-scratch trained assignment the oracle
     computes. The swapped quantizer is itself consumer-visible
@@ -626,7 +613,7 @@ def embeddings_ivf_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     seed = emb.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("cv"),
+        as_double_array("embedding").alias("cv"),
     )
     work = tempfile.mkdtemp(prefix="ivf_rb_")
     try:
@@ -680,16 +667,9 @@ def embeddings_ivf_search_after_erasure(
     from fabric_claims_spark.operators.serving_index import (
         apply_ivf_deletes,
     )
-    from fabric_claims_spark.queries.similarity import (
-        _IVF_K,
-        _IVF_NPROBE,
-        _IVF_TOPK,
-        _as_double,
-        _cosine,
-    )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", "label", _as_double("embedding").alias("ev"))
+    e = emb.select("vec_id", "label", as_double_array("embedding").alias("ev"))
     q = e.where(F.col("vec_id") == 0).select(F.col("ev").alias("qv"))
     cent = e.where(F.col("vec_id") < _IVF_K).select(
         F.col("vec_id").alias("centroid_id"), F.col("ev").alias("cv")
@@ -701,42 +681,7 @@ def embeddings_ivf_search_after_erasure(
         kill = emb.where(F.pmod("vec_id", F.lit(5)) == 2).select("vec_id")
         apply_ivf_deletes(store, kill, 1)
         apply_ivf_deletes(store, kill, 1)  # redelivery: no-op
-        stored = read_ivf_index(store)
-
-        probe = (
-            cent.join(F.broadcast(q))
-            .select(
-                "centroid_id",
-                F.round(_cosine(F.col("cv"), F.col("qv")), 6).alias("sim"),
-            )
-            .orderBy(F.col("sim").desc(), F.col("centroid_id").asc())
-            .limit(_IVF_NPROBE)
-            .select("centroid_id")
-        )
-        return (
-            stored.where(F.col("vec_id") != 0)
-            .join(
-                F.broadcast(probe),
-                F.col("assigned_centroid") == F.col("centroid_id"),
-            )
-            .join(F.broadcast(q))
-            .join(
-                load_table(spark, sf_dir, "embeddings").select(
-                    "vec_id", "label"
-                ),
-                "vec_id",
-            )
-            .select(
-                "vec_id",
-                "label",
-                F.round(_cosine(F.col("ev"), F.col("qv")), 6).alias(
-                    "cosine_sim"
-                ),
-            )
-            .orderBy(F.col("cosine_sim").desc(), F.col("vec_id").asc())
-            .limit(_IVF_TOPK)
-            .localCheckpoint(eager=True)
-        )
+        return _probe_stored(spark, sf_dir, store, cent, q)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -842,7 +787,7 @@ def embeddings_ivf_skew_rebuild(
     emb = load_table(spark, sf_dir, "embeddings")
     seed = emb.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("cv"),
+        as_double_array("embedding").alias("cv"),
     )
     work = tempfile.mkdtemp(prefix="ivf_skw_")
 
@@ -1049,7 +994,7 @@ def embeddings_ivf_mutation_stream(
         F.col("vec_id") < 8
     ).select(
         F.col("vec_id").alias("centroid_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("cv"),
+        as_double_array("embedding").alias("cv"),
     )
     evens = emb.where(F.col("vec_id") % 2 == 0)
     odds = emb.where(F.col("vec_id") % 2 == 1)
@@ -1262,7 +1207,7 @@ def forget_documents_pipeline(
         F.col("vec_id") < 8
     ).select(
         F.col("vec_id").alias("centroid_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("cv"),
+        as_double_array("embedding").alias("cv"),
     )
     work = tempfile.mkdtemp(prefix="forget_e2e_")
     try:

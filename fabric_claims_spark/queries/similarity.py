@@ -10,7 +10,8 @@ bit-identical doubles, then rounded to 6dp for belt-and-braces.
 Scale path: brute-force is the correctness baseline (fine when one
 side broadcasts); the IVF assignment below is the bucketed variant —
 centroids broadcast, each vector scored against K centroids instead
-of N vectors. extensions/similarity.py packages both for reuse.
+of N vectors. The cosine, the IVF assignment, the probe and the
+rounded top-k are the shared primitives of extensions/similarity.py.
 """
 
 from __future__ import annotations
@@ -18,19 +19,19 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fabric_claims_spark.extensions.similarity import (
+    as_double_array,
+    cosine,
+    cosine_topk,
+    dot,
+    ivf_assign,
+    ivf_probe,
+    ivf_search,
+)
 from fabric_claims_spark.localframe import local_frame
 from fabric_claims_spark.operators.partitioning import spread
 from fabric_claims_spark.queries import query
 from fabric_claims_spark.sources.parquet import load_table
-
-
-def _dot(a: Column, b: Column) -> Column:
-    """Sequential-fold dot product over double arrays (JVM-side HOF)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
 
 
 # Perf note for pair scans (measured on the semdedup-recall
@@ -47,15 +48,6 @@ def _dot(a: Column, b: Column) -> Column:
 # interpreted per candidate), project the cosine once per pair, and
 # bound the pair space itself (eval cohort). The HOF fold stays the
 # canonical dot — bit-exact with DuckDB's list_dot_product.
-
-
-def _as_double(c: str | Column) -> Column:
-    c = F.col(c) if isinstance(c, str) else c
-    return F.transform(c, lambda x: x.cast("double"))
-
-
-def _cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
 # --------------------------------------------------------------------------
@@ -79,19 +71,12 @@ def _cosine(a: Column, b: Column) -> Column:
 def embeddings_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") == 0).select(
-        _as_double("embedding").alias("qv")
+        as_double_array("embedding").alias("qv")
     )
     e = emb.where(F.col("vec_id") != 0).select(
-        "vec_id", "label", _as_double("embedding").alias("ev")
+        "vec_id", "label", as_double_array("embedding").alias("ev")
     )
-    scored = e.join(F.broadcast(q)).select(
-        "vec_id",
-        "label",
-        F.round(_cosine(F.col("ev"), F.col("qv")), 6).alias("cosine_sim"),
-    )
-    # orderBy+limit compiles to TakeOrderedAndProject — per-partition
-    # top-k then a k-row merge on the driver, not a global sort.
-    return scored.orderBy(F.col("cosine_sim").desc(), F.col("vec_id").asc()).limit(10)
+    return cosine_topk(e, q, 10)
 
 
 # --------------------------------------------------------------------------
@@ -122,25 +107,11 @@ _IVF_ASSIGN_ORACLE = """
 def embeddings_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     centroids = emb.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("centroid_id"), _as_double("embedding").alias("cv")
+        F.col("vec_id").alias("centroid_id"), as_double_array("embedding").alias("cv")
     )
-    e = emb.select("vec_id", _as_double("embedding").alias("ev"))
-    scored = e.join(F.broadcast(centroids)).select(
-        "vec_id",
-        "centroid_id",
-        F.round(_cosine(F.col("ev"), F.col("cv")), 6).alias("sim"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("sim").desc(), F.col("centroid_id").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            "vec_id",
-            F.col("centroid_id").alias("assigned_centroid"),
-            F.col("sim").alias("centroid_sim"),
-        )
+    e = emb.select("vec_id", as_double_array("embedding").alias("ev"))
+    return ivf_assign(e, centroids).select(
+        "vec_id", "assigned_centroid", "centroid_sim"
     )
 
 
@@ -177,8 +148,8 @@ def embeddings_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalized via ``+ 0.0``).
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    ev = _as_double("embedding")
-    norm = F.sqrt(_dot(ev, ev))
+    ev = as_double_array("embedding")
+    norm = F.sqrt(dot(ev, ev))
     return emb.select(
         "vec_id",
         "label",
@@ -262,10 +233,10 @@ def embeddings_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # IVF search: the full ANN read path — route the query vector to its
 # nprobe=2 nearest centroid buckets, brute-force only inside them
-# (extensions/similarity.ivf_search semantics, written inline so
-# every similarity rounds to 6dp for cross-engine parity). The scan
-# side only ever scores K centroids per vector (assignment) and the
-# probed ~2/K of the corpus (search) — at 100 TB with persisted
+# (extensions/similarity.ivf_search; every similarity rounds to 6dp
+# for cross-engine parity). The scan side only ever scores K
+# centroids per vector (assignment) and the probed ~2/K of the
+# corpus (search) — at 100 TB with persisted
 # bucketed assignments the probe is a partition-pruned read, not a
 # full scan. The approximate result itself is hash-checked: the
 # oracle replicates routing, bucketing, and scoring exactly.
@@ -351,7 +322,7 @@ _FILTERED_KNN_ORACLE = f"""
 @query("embeddings_filtered_knn", oracle=_FILTERED_KNN_ORACLE)
 def embeddings_filtered_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", "label", _as_double("embedding").alias("ev"))
+    e = emb.select("vec_id", "label", as_double_array("embedding").alias("ev"))
     q = e.where(F.col("vec_id") == 0).select(F.col("ev").alias("qv"))
     scored = (
         e.where(F.col("vec_id") != 0)
@@ -359,7 +330,7 @@ def embeddings_filtered_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "label",
-            F.round(_cosine(F.col("ev"), F.col("qv")), 6).alias(
+            F.round(cosine(F.col("ev"), F.col("qv")), 6).alias(
                 "cosine_sim"
             ),
         )
@@ -378,56 +349,13 @@ def embeddings_filtered_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("embeddings_ivf_search", oracle=_IVF_SEARCH_ORACLE)
 def embeddings_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", "label", _as_double("embedding").alias("ev"))
+    e = emb.select("vec_id", "label", as_double_array("embedding").alias("ev"))
     q = e.where(F.col("vec_id") == 0).select(F.col("ev").alias("qv"))
     cent = e.where(F.col("vec_id") < _IVF_K).select(
         F.col("vec_id").alias("centroid_id"), F.col("ev").alias("cv")
     )
-
-    # coarse assignment: broadcast K centroids, argmax per vector
-    scored = e.join(F.broadcast(cent)).select(
-        "vec_id",
-        "centroid_id",
-        F.round(_cosine(F.col("ev"), F.col("cv")), 6).alias("sim"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("sim").desc(), F.col("centroid_id").asc()
-    )
-    assign = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("vec_id", F.col("centroid_id").alias("assigned_centroid"))
-    )
-
-    # query routing: nprobe nearest centroids (K-row frame, trivially
-    # collected into a broadcast)
-    probe = (
-        cent.join(F.broadcast(q))
-        .select(
-            "centroid_id",
-            F.round(_cosine(F.col("cv"), F.col("qv")), 6).alias("sim"),
-        )
-        .orderBy(F.col("sim").desc(), F.col("centroid_id").asc())
-        .limit(_IVF_NPROBE)
-        .select("centroid_id")
-    )
-
-    # probed-bucket brute force (TakeOrderedAndProject, no global sort)
-    return (
-        e.where(F.col("vec_id") != 0)
-        .join(assign, "vec_id")
-        .join(
-            F.broadcast(probe),
-            F.col("assigned_centroid") == F.col("centroid_id"),
-        )
-        .join(F.broadcast(q))
-        .select(
-            "vec_id",
-            "label",
-            F.round(_cosine(F.col("ev"), F.col("qv")), 6).alias("cosine_sim"),
-        )
-        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id").asc())
-        .limit(_IVF_TOPK)
+    return ivf_search(
+        e.where(F.col("vec_id") != 0), cent, q, _IVF_NPROBE, _IVF_TOPK
     )
 
 
@@ -557,9 +485,9 @@ def embeddings_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embeddings_sq8_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") == 0).select(
-        _as_double("embedding").alias("qv")
+        as_double_array("embedding").alias("qv")
     )
-    ev = _as_double("embedding")
+    ev = as_double_array("embedding")
     max_abs = F.array_max(F.transform(ev, lambda x: F.abs(x)))
     scale = max_abs / F.lit(127.0)
     code = F.transform(ev, lambda x: F.floor(x / scale + F.lit(0.5)).cast("double"))
@@ -571,8 +499,8 @@ def embeddings_sq8_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "label",
-            F.round(_cosine(F.col("code"), F.col("qv")), 6).alias("sq8_cosine"),
-            F.round(_cosine(F.col("ev"), F.col("qv")), 6).alias("exact_cosine"),
+            F.round(cosine(F.col("code"), F.col("qv")), 6).alias("sq8_cosine"),
+            F.round(cosine(F.col("ev"), F.col("qv")), 6).alias("exact_cosine"),
         )
         .orderBy(F.col("sq8_cosine").desc(), F.col("vec_id").asc())
         .limit(10)
@@ -665,12 +593,12 @@ def pq_adc_frame(
     qt = (
         F.broadcast(cb)
         .crossJoin(F.broadcast(q))
-        .select("m", "j", _dot(qsub, F.col("cw")).alias("qdot"))
+        .select("m", "j", dot(qsub, F.col("cw")).alias("qdot"))
     )
     sv = with_subspaces(emb.where(F.col("vec_id") > K)).select(
         "vec_id", "label", "m", "sub"
     )
-    dist_key = _dot(F.col("cw"), F.col("cw")) - 2 * _dot(
+    dist_key = dot(F.col("cw"), F.col("cw")) - 2 * dot(
         F.col("sub"), F.col("cw")
     )
     rn = F.row_number().over(
@@ -691,7 +619,7 @@ def pq_adc_frame(
         )
     )
     exact = emb.select("vec_id", "v").crossJoin(F.broadcast(q)).select(
-        "vec_id", _dot(F.col("v"), F.col("qv")).alias("exact_dot")
+        "vec_id", dot(F.col("v"), F.col("qv")).alias("exact_dot")
     )
     return adc.join(exact, "vec_id").select(
         "vec_id",
@@ -750,7 +678,7 @@ def pq_adc_frame(
 )
 def embeddings_pq_adc_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double("embedding").alias("v")
+        "vec_id", "label", as_double_array("embedding").alias("v")
     )
     return (
         pq_adc_frame(emb, M=4, K=16, SD=16)
@@ -847,39 +775,24 @@ def embeddings_pq_adc_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embeddings_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     K_COARSE, NPROBE, K = 8, 2, 16
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double("embedding").alias("v")
+        "vec_id", "label", as_double_array("embedding").alias("v")
     )
     centroids = emb.where(F.col("vec_id") < K_COARSE).select(
         F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv")
     )
     q = emb.where(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
-    probe = (
-        F.broadcast(centroids)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "centroid_id",
-            F.round(_cosine(F.col("cv"), F.col("qv")), 6).alias("sim"),
-        )
-        .orderBy(F.col("sim").desc(), "centroid_id")
-        .limit(NPROBE)
-        .select("centroid_id")
-    )
-    scored = (
-        emb.where(F.col("vec_id") > K)
-        .join(F.broadcast(centroids))
-        .select(
-            "vec_id",
-            "centroid_id",
-            F.round(_cosine(F.col("v"), F.col("cv")), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("sim").desc(), F.col("centroid_id").asc()
-    )
     assigned = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .join(F.broadcast(probe), "centroid_id", "left_semi")
+        ivf_assign(
+            emb.where(F.col("vec_id") > K).select(
+                "vec_id", F.col("v").alias("ev")
+            ),
+            centroids,
+        )
+        .join(
+            F.broadcast(ivf_probe(centroids, q, NPROBE)),
+            F.col("assigned_centroid") == F.col("centroid_id"),
+            "left_semi",
+        )
         .select("vec_id")
     )
     searchable = emb.where(F.col("vec_id") <= K).unionByName(
@@ -1016,15 +929,15 @@ _DIV_TOPK = 10
 def embeddings_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") == 0).select(
-        _as_double("embedding").alias("qv")
+        as_double_array("embedding").alias("qv")
     )
     e = emb.where(F.col("vec_id") != 0).select(
-        "vec_id", "label", _as_double("embedding").alias("ev")
+        "vec_id", "label", as_double_array("embedding").alias("ev")
     )
     scored = e.join(F.broadcast(q)).select(
         "vec_id",
         "label",
-        F.round(_cosine(F.col("ev"), F.col("qv")), 6).alias("cosine_sim"),
+        F.round(cosine(F.col("ev"), F.col("qv")), 6).alias("cosine_sim"),
     )
     wl = Window.partitionBy("label").orderBy(
         F.col("cosine_sim").desc(), F.col("vec_id")
@@ -1072,25 +985,14 @@ def embeddings_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embeddings_centroid_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", _as_double("embedding").alias("ev"))
+    e = emb.select("vec_id", as_double_array("embedding").alias("ev"))
     cent = e.where(F.col("vec_id") < _IVF_K).select(
         F.col("vec_id").alias("centroid_id"), F.col("ev").alias("cv")
     )
-    scored = e.join(F.broadcast(cent)).select(
-        "vec_id",
-        "centroid_id",
-        F.round(_cosine(F.col("ev"), F.col("cv")), 6).alias("sim"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("sim").desc(), F.col("centroid_id").asc()
-    )
-    assign = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("vec_id", "centroid_id")
-    )
-    b = assign.groupBy("centroid_id").agg(
-        F.count(F.lit(1)).alias("bucket_size")
+    b = (
+        ivf_assign(e, cent)
+        .groupBy(F.col("assigned_centroid").alias("centroid_id"))
+        .agg(F.count(F.lit(1)).alias("bucket_size"))
     )
     t = b.agg(
         F.sum("bucket_size").alias("n"), F.count(F.lit(1)).alias("k")
@@ -1179,7 +1081,7 @@ def embeddings_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # then the zero-shuffle literal-centroid argmin assignment — the
     # exact pair embeddings_kmeans pins green against the SQL unroll.
     cents = kmeans_centroids(emb, k=_KM_K, iters=_KM_ITERS)
-    ev = emb.select("vec_id", _as_double("embedding").alias("v"))
+    ev = emb.select("vec_id", as_double_array("embedding").alias("v"))
     assign = _lloyd_assign(ev, cents).select(
         "vec_id", "cluster", F.col("v").alias("ev")
     )
@@ -1188,7 +1090,7 @@ def embeddings_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-pair recomputation the oracle performs) — without this every
     # pair re-derives both 64-element self-dots: 3x the array math
     # over the C(cluster,2) pair space
-    withn = assign.withColumn("nrm", F.sqrt(_dot(F.col("ev"), F.col("ev"))))
+    withn = assign.withColumn("nrm", F.sqrt(dot(F.col("ev"), F.col("ev"))))
     # Deterministic pair-blocking (guide §2.5): the pair join's only
     # equi-key is the cluster id — k distinct values, so the whole
     # quadratic within-cluster dot-product pass lands on ≤ k reduce
@@ -1210,7 +1112,7 @@ def embeddings_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ev").alias("ev_b"),
         F.col("nrm").alias("n_b"),
     ).crossJoin(F.broadcast(blocks))
-    pair_cos = _dot(F.col("ev_a"), F.col("ev_b")) / (
+    pair_cos = dot(F.col("ev_a"), F.col("ev_b")) / (
         F.col("n_a") * F.col("n_b")
     )
     dropped = (
@@ -1298,9 +1200,9 @@ def embeddings_semdedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (guide §2.5; measured 4.3 s single-task at sf0.1)
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     cents = kmeans_centroids(emb, k=_KM_K, iters=_KM_ITERS)
-    ev = emb.select("vec_id", _as_double("embedding").alias("v"))
+    ev = emb.select("vec_id", as_double_array("embedding").alias("v"))
     withn = _lloyd_assign(ev, cents).withColumn(
-        "nrm", F.sqrt(_dot(F.col("v"), F.col("v")))
+        "nrm", F.sqrt(dot(F.col("v"), F.col("v")))
     )
     # Pair enumeration is a BLOCK-PAIR EQUI-JOIN, not a nested-loop
     # theta join. A BroadcastNestedLoopJoin on id_a < id_b evaluates
@@ -1347,7 +1249,7 @@ def embeddings_semdedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("pa") != F.col("pb")) | (F.col("id_a") < F.col("id_b"))
     )
     pair_cos = F.round(
-        _dot(F.col("ev_a"), F.col("ev_b")) / (F.col("n_a") * F.col("n_b")),
+        dot(F.col("ev_a"), F.col("ev_b")) / (F.col("n_a") * F.col("n_b")),
         6,
     )
     scored = pairs.select(
@@ -1441,9 +1343,9 @@ def embeddings_semantic_dedup_mp(
 
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     cents = kmeans_centroids(emb, k=_KM_K, iters=_KM_ITERS)
-    ev = emb.select("vec_id", _as_double("embedding").alias("v"))
+    ev = emb.select("vec_id", as_double_array("embedding").alias("v"))
     pr = _lloyd_assign_probes(ev, cents, probes=_SEMDEDUP_PROBES)
-    withn = pr.withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
+    withn = pr.withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
     # one row per (vector, probed cluster) — the equi-join key; a pair
     # sharing both probes joins twice, the DISTINCT collapses it.
     # Same deterministic pair-blocking as embeddings_semantic_dedup
@@ -1471,7 +1373,7 @@ def embeddings_semantic_dedup_mp(
         F.col("v").alias("ev_b"),
         F.col("nrm").alias("n_b"),
     ).crossJoin(F.broadcast(blocks))
-    pair_cos = _dot(F.col("ev_a"), F.col("ev_b")) / (
+    pair_cos = dot(F.col("ev_a"), F.col("ev_b")) / (
         F.col("n_a") * F.col("n_b")
     )
     dropped = (
@@ -1540,10 +1442,10 @@ def embeddings_semdedup_recall_mp(
     # cohort pair pass otherwise run in ONE task (guide §2.5)
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     cents = kmeans_centroids(emb, k=_KM_K, iters=_KM_ITERS)
-    ev = emb.select("vec_id", _as_double("embedding").alias("v"))
+    ev = emb.select("vec_id", as_double_array("embedding").alias("v"))
     withn = _lloyd_assign_probes(
         ev, cents, probes=_SEMDEDUP_PROBES
-    ).withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
+    ).withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
     cohort = withn.where(F.col("vec_id") < _RECALL_COHORT)
     n_blocks = 16
     a = cohort.select(
@@ -1573,7 +1475,7 @@ def embeddings_semdedup_recall_mp(
         (F.col("pa") != F.col("pb")) | (F.col("id_a") < F.col("id_b"))
     )
     pair_cos = F.round(
-        _dot(F.col("ev_a"), F.col("ev_b")) / (F.col("n_a") * F.col("n_b")),
+        dot(F.col("ev_a"), F.col("ev_b")) / (F.col("n_a") * F.col("n_b")),
         6,
     )
     scored = pairs.select(
@@ -1705,15 +1607,15 @@ def docs_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") == 0).select(
-        _as_double("embedding").alias("qv")
+        as_double_array("embedding").alias("qv")
     )
     scored = (
         emb.where(F.col("vec_id") != 0)
-        .select("vec_id", _as_double("embedding").alias("ev"))
+        .select("vec_id", as_double_array("embedding").alias("ev"))
         .join(F.broadcast(q))
         .select(
             "vec_id",
-            F.round(_cosine(F.col("ev"), F.col("qv")), 6).alias("cos"),
+            F.round(cosine(F.col("ev"), F.col("qv")), 6).alias("cos"),
         )
         .orderBy(F.col("cos").desc(), F.col("vec_id").asc())
         .limit(_RRF_TOP)
@@ -1926,15 +1828,15 @@ def _rrf_indexed_core(
         "doc_id", "r_lex"
     )
     q = emb.where(F.col("vec_id") == 0).select(
-        _as_double("embedding").alias("qv")
+        as_double_array("embedding").alias("qv")
     )
     scored = (
         emb.where(F.col("vec_id") != 0)
-        .select("vec_id", _as_double("embedding").alias("ev"))
+        .select("vec_id", as_double_array("embedding").alias("ev"))
         .join(F.broadcast(q))
         .select(
             "vec_id",
-            F.round(_cosine(F.col("ev"), F.col("qv")), 6).alias("cos"),
+            F.round(cosine(F.col("ev"), F.col("qv")), 6).alias("cos"),
         )
         .orderBy(F.col("cos").desc(), F.col("vec_id").asc())
         .limit(_RRF_TOP)
@@ -2065,7 +1967,7 @@ def embeddings_hyperplane_recall(
     # both of which otherwise run single-task at the scan's
     # parallelism. Aggregate-only output — partitioning-invariant.
     e = tracked_cache(
-        spread(emb.select("vec_id", _as_double("embedding").alias("ev")))
+        spread(emb.select("vec_id", as_double_array("embedding").alias("ev")))
     )
     banded = e.select(
         "vec_id",
@@ -2093,7 +1995,7 @@ def embeddings_hyperplane_recall(
         .select(
             "vec_a",
             "vec_b",
-            F.round(_cosine(F.col("va"), F.col("vb")), 6).alias("cos"),
+            F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cos"),
         )
         .where(F.col("cos") >= float(_HP_COS_LO))
     )
@@ -2171,7 +2073,7 @@ _HARDNEG_COHORT = 100  # anchors: vec_id % 100 == 0 (5/5/20 per scale)
 )
 def embeddings_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", "label", _as_double("embedding").alias("ev"))
+    e = emb.select("vec_id", "label", as_double_array("embedding").alias("ev"))
     a = e.where(F.col("vec_id") % _HARDNEG_COHORT == 0).select(
         F.col("vec_id").alias("anchor_id"),
         F.col("label").alias("anchor_label"),
@@ -2186,7 +2088,7 @@ def embeddings_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("role"),
             F.col("vec_id").alias("cand_id"),
             F.col("label").alias("cand_label"),
-            F.round(_cosine(F.col("ev"), F.col("av")), 6).alias(
+            F.round(cosine(F.col("ev"), F.col("av")), 6).alias(
                 "cosine_sim"
             ),
         )
@@ -2276,7 +2178,7 @@ def embeddings_truncation_recall(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", _as_double("embedding").alias("ev"))
+    e = emb.select("vec_id", as_double_array("embedding").alias("ev"))
     a = e.where(F.col("vec_id") % _HARDNEG_COHORT == 0).select(
         F.col("vec_id").alias("anchor_id"), F.col("ev").alias("av")
     )
@@ -2288,7 +2190,7 @@ def embeddings_truncation_recall(
         ).select(
             "anchor_id",
             F.col("vec_id").alias("cand_id"),
-            F.round(_cosine(ev, av), 6).alias("sim"),
+            F.round(cosine(ev, av), 6).alias("sim"),
         )
         w = Window.partitionBy("anchor_id").orderBy(
             F.col("sim").desc(), F.col("cand_id").asc()

@@ -222,10 +222,13 @@ def docs_langid_stopwords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def docs_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from fabric_claims_spark.extensions.text import normalized_fingerprint
+
     d = load_table(spark, sf_dir, "documents")
-    fp = F.md5(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]", ""))
     return d.groupBy("source").agg(
-        F.countDistinct(fp).alias("distinct_fingerprints"),
+        F.countDistinct(normalized_fingerprint(F.col("text"))).alias(
+            "distinct_fingerprints"
+        ),
         F.count(F.lit(1)).alias("docs"),
     )
 

@@ -13,8 +13,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fabric_claims_spark.schemas import TESTDATA_TABLES
-
 
 def normalize_events_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     """Normalize the events timestamp column to TimestampType regardless
@@ -47,13 +45,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         return normalize_events_ts(spark.read.parquet(path))
     return spark.read.parquet(path)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test table as a temp view for spark.sql queries."""
-    for t in TESTDATA_TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -17,7 +17,8 @@ from fabric_claims_spark.extensions.multimodal import (
     wrap_as_media,
 )
 from fabric_claims_spark.extensions.similarity import (
-    brute_force_topk,
+    as_double_array,
+    cosine_topk,
     ivf_assign,
     ivf_search,
 )
@@ -134,49 +135,51 @@ def vectors(spark):
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
 
-def test_ivf_assign_recovers_clusters(vectors, spark):
-    centroids = spark.createDataFrame(
+@pytest.fixture(scope="module")
+def ev(vectors):
+    return vectors.select("vec_id", as_double_array("embedding").alias("ev"))
+
+
+@pytest.fixture(scope="module")
+def centroids(spark):
+    return spark.createDataFrame(
         [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0]), (2, [0.0, 0.0, 1.0])],
-        "centroid_id long, cv array<float>",
+        "centroid_id long, cv array<double>",
     )
+
+
+def test_ivf_assign_recovers_clusters(ev, centroids):
     got = {
         r["vec_id"]: r["assigned_centroid"]
-        for r in ivf_assign(vectors, centroids, centroid_vec_col="cv").collect()
+        for r in ivf_assign(ev, centroids).collect()
     }
+    assert len(got) == 15
     assert all(got[v] == v // 5 for v in got)
 
 
-def test_ivf_search_matches_bruteforce_in_bucket(vectors, spark):
-    centroids = spark.createDataFrame(
-        [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0]), (2, [0.0, 0.0, 1.0])],
-        "centroid_id long, cv array<float>",
-    )
+def test_ivf_search_matches_bruteforce_in_bucket(ev, centroids, spark):
     query = spark.createDataFrame([([10.0, 0.5, 0.0],)], "qv array<double>")
-    bf = brute_force_topk(vectors, query, k=3).collect()
-    ivf = ivf_search(vectors, centroids, query, k=3).collect()
+    bf = cosine_topk(ev, query, 3).collect()
+    ivf = ivf_search(ev, centroids, query, k=3).collect()
     assert [r["vec_id"] for r in bf] == [r["vec_id"] for r in ivf]
     assert all(r["vec_id"] < 5 for r in bf)  # all from cluster 0
 
 
-def test_ivf_search_nprobe_recovers_cross_bucket_neighbors(vectors, spark):
+def test_ivf_search_nprobe_recovers_cross_bucket_neighbors(ev, centroids, spark):
     """A query between two clusters: nprobe=1 sees only its own
     bucket; nprobe=2 must recover the true top-k (recall vs brute
     force) by probing the runner-up centroid too."""
-    centroids = spark.createDataFrame(
-        [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0]), (2, [0.0, 0.0, 1.0])],
-        "centroid_id long, cv array<float>",
-    )
     # leans to cluster 0; with k=8 > bucket size the true top-k must
     # take the 3 best of cluster 1 as well
     query = spark.createDataFrame([([10.0, 9.0, 0.0],)], "qv array<double>")
-    bf = {r["vec_id"] for r in brute_force_topk(vectors, query, k=8).collect()}
+    bf = {r["vec_id"] for r in cosine_topk(ev, query, 8).collect()}
     one = {
         r["vec_id"]
-        for r in ivf_search(vectors, centroids, query, k=8, nprobe=1).collect()
+        for r in ivf_search(ev, centroids, query, k=8, nprobe=1).collect()
     }
     two = {
         r["vec_id"]
-        for r in ivf_search(vectors, centroids, query, k=8, nprobe=2).collect()
+        for r in ivf_search(ev, centroids, query, k=8, nprobe=2).collect()
     }
     assert bf & {5, 6, 7, 8, 9}  # brute force really spans two clusters
     assert len(one & bf) < len(bf)  # single probe misses the other bucket
@@ -1117,15 +1120,15 @@ def test_trained_pq_codebook_never_increases_distortion(spark):
     tolerance needed. Candidate containment is reported for evidence."""
     from pyspark.sql import functions as F
 
+    from fabric_claims_spark.extensions.similarity import as_double_array
     from fabric_claims_spark.queries.similarity import (
-        _as_double,
         pq_adc_frame,
         train_pq_codebook,
     )
 
     emb = (
         spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-        .select("vec_id", "label", _as_double("embedding").alias("v"))
+        .select("vec_id", "label", as_double_array("embedding").alias("v"))
     )
     M, K, SD = 4, 16, 16
 
@@ -1526,63 +1529,6 @@ def test_kmeans_sampled_training_deterministic_and_useful(spark, sf_dir):
 
     seeded = kmeans_centroids(emb, k=4, iters=0)
     assert sse(a) < sse(seeded)
-
-
-def test_lloyd_assign_join_strategy_bit_identical(spark, sf_dir):
-    """The paper-scale-k assignment path (VERDICT r8 item 3): the
-    broadcast-centroid-table + group-min assignment must be
-    BIT-identical to the literal expression tree — same argmin
-    cluster, same distance doubles, row for row — and training with
-    assign='join' must reproduce the literal-trained centroids
-    exactly (dot is the same zip_with left-fold either way; the
-    (d, cid) struct-min tie-break is the same)."""
-    from fabric_claims_spark.extensions.similarity import (
-        _lloyd_assign,
-        _lloyd_assign_join,
-        as_double_array,
-        kmeans_centroids,
-    )
-    from fabric_claims_spark.sources.parquet import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = kmeans_centroids(emb, k=8, iters=2)
-    ev = emb.select("vec_id", as_double_array("embedding").alias("v"))
-    lit_rows = {
-        r["vec_id"]: (r["cluster"], r["d"])
-        for r in _lloyd_assign(ev, cents).collect()
-    }
-    join_rows = {
-        r["vec_id"]: (r["cluster"], r["d"])
-        for r in _lloyd_assign_join(ev, cents).collect()
-    }
-    assert lit_rows == join_rows  # exact doubles, not approx
-
-    cents_j = kmeans_centroids(emb, k=8, iters=2, assign="join")
-    assert cents == cents_j
-
-    # the join path's plan must not embed per-centroid literals
-    plan = (
-        _lloyd_assign_join(ev, cents)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastNestedLoopJoin" in plan
-
-    # the arrow path (BLAS matmul, opt-in): same clusters everywhere;
-    # distances may drift in the last ulp (different summation order),
-    # so parity is 1e-9 relative, not bit-exact
-    from fabric_claims_spark.extensions.similarity import lloyd_assign
-
-    arrow_rows = {
-        r["vec_id"]: (r["cluster"], r["d"])
-        for r in lloyd_assign(ev, cents, strategy="arrow").collect()
-    }
-    assert set(arrow_rows) == set(lit_rows)
-    for vid, (cl, d) in lit_rows.items():
-        acl, ad = arrow_rows[vid]
-        assert acl == cl, vid
-        assert abs(ad - d) <= 1e-9 * max(1.0, abs(d)), (vid, ad, d)
 
 
 def test_kmeans_sample_cap_never_underfills_k(spark, sf_dir):

@@ -692,3 +692,42 @@ def test_logrank_detects_separated_arms(spark, tmp_path):
     assert out["conv_a"] == out["conv_b"] == 20  # both arms convert...
     assert out["significant_95"]  # ...but at maximally separated times
     assert out["chi2"] > 3.841459
+
+
+def test_chained_global_ranks_equal_exact_row_numbers(spark):
+    """Three chained ``with_global_rank`` passes over a shuffled
+    aggregate (the ``events_user_rfm_segments`` shape) must give every
+    row its exact global row number under each key. A range exchange
+    samples its bounds anew on every evaluation, from rows whose order
+    a shuffle does not fix; when the bucket census and the ranked rows
+    were two evaluations, offsets drifted against the rows."""
+    from pyspark.sql import Window
+
+    from fabric_claims_spark.operators.ranking import with_global_rank
+
+    n = 6000
+    base = (
+        spark.range(0, n, numPartitions=4)
+        .select(
+            (F.col("id") % (n // 3)).alias("u"),
+            (F.col("id") * 7919 % 1000).alias("v"),
+        )
+        .groupBy("u")
+        .agg(
+            F.count(F.lit(1)).alias("f"),
+            F.sum("v").alias("m"),
+            F.max("v").alias("r"),
+        )
+    )
+    ranked, exact = base, base
+    for metric in ("r", "f", "m"):
+        ranked, _ = with_global_rank(ranked, [metric, "u"], num_partitions=4)
+        ranked = ranked.withColumnRenamed("_rank", f"rk_{metric}")
+        exact = exact.withColumn(
+            f"rk_{metric}",
+            F.row_number().over(Window.orderBy(metric, "u")).cast("long"),
+        )
+    cols = ["u", "rk_r", "rk_f", "rk_m"]
+    assert sorted(ranked.select(cols).collect()) == sorted(
+        exact.select(cols).collect()
+    )

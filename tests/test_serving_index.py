@@ -231,11 +231,11 @@ def test_ivf_torn_rebuild_is_invisible_and_vacuumable(spark, tmp_path):
     """A crash AFTER the rebuild's appends but BEFORE the commit-table
     swap must leave the old index fully intact (both tables), with the
     orphan rows reclaimable — the single-swap atomicity claim."""
+    from fabric_claims_spark.extensions.similarity import ivf_assign
     from fabric_claims_spark.operators.serving_index import (
         IVF_CENTROIDS,
         IVF_COMMITS,
         IVF_VECS,
-        _ivf_assign,
         apply_ivf_batch,
         read_ivf_centroids,
         read_ivf_index,
@@ -257,7 +257,7 @@ def test_ivf_torn_rebuild_is_invisible_and_vacuumable(spark, tmp_path):
     # the torn half-rebuild: reassignment + centroids appended with a
     # token that never commits
     committed = read_ivf_index(store).select("vec_id", "ev")
-    dead = _ivf_assign(committed, F.broadcast(seed)).withColumn(
+    dead = ivf_assign(committed, F.broadcast(seed)).withColumn(
         "_token", F.lit("dead-rebuild")
     )
     store.append(IVF_VECS, dead)
