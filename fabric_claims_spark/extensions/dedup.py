@@ -8,6 +8,9 @@ Scale shape (the reason this is LSH and not all-pairs): signatures
 are one narrow shuffle keyed by doc; candidate generation self-joins
 on (band_idx, band_hash) — only docs sharing a band bucket ever meet,
 so the join output is ~linear in true near-dup mass instead of O(n²).
+The blocking steps (band, cap, bucket join, MinHash verify) live only
+here; SimHash, hyperplane LSH (extensions/similarity.py) and the stored
+LSH index (operators/serving_index.py) compose them.
 """
 
 from __future__ import annotations
@@ -127,24 +130,6 @@ def _shingle_frame(
     )
 
 
-def _band_key_cols(rows: int, bands: int, hasher: str) -> list[Column]:
-    """One blocking-key expression per band over the wide h0..h{n-1}
-    layout. md5 mode keeps the raw comma-joined slot values (the form
-    DuckDB can rebuild); xxhash64 mode folds them to one long."""
-    if hasher == "md5":
-        return [
-            F.concat_ws(",", *[F.col(f"h{b * rows + i}") for i in range(rows)])
-            for b in range(bands)
-        ]
-    return [
-        F.xxhash64(
-            F.concat_ws(",", *[F.col(f"h{b * rows + i}") for i in range(rows)]),
-            F.lit(b),
-        )
-        for b in range(bands)
-    ]
-
-
 def _minhash_mins(sh: DataFrame, num_hashes: int, hasher: str) -> DataFrame:
     """Wide form of the signature matrix: (doc, h0..h{n-1}) — one row,
     one column per slot. The wide layout keeps every downstream
@@ -154,12 +139,10 @@ def _minhash_mins(sh: DataFrame, num_hashes: int, hasher: str) -> DataFrame:
     # All num_hashes slot aggregates ride in ONE parsed expression (a
     # struct of mins, unpacked right after): the Column-API chain paid
     # ~6 py4j round trips per slot — measured 1.6 s of pure PYTHON per
-    # 64-slot build, the same driver-side construction tax the Lloyd
-    # literals paid (guide §1.2 applied to the driver). The analyzed
-    # per-slot expressions are identical (INT literals promote over
-    # the LONG base exactly as F.lit(int) does; P = 2^31-1 keeps every
-    # product under 2^62) — value-equality re-verified against the
-    # Column-API form and pinned by every LSH oracle gate.
+    # 64-slot build. The analyzed per-slot expressions are identical
+    # (INT literals promote over the LONG base exactly as F.lit(int)
+    # does; P = 2^31-1 keeps every product under 2^62) — pinned by
+    # every LSH oracle gate.
     if hasher == "md5":
         sh = sh.select("doc", md5_long(F.col("shingle")).alias("_hb"))
         inner = ", ".join(
@@ -179,66 +162,149 @@ def _minhash_mins(sh: DataFrame, num_hashes: int, hasher: str) -> DataFrame:
     )
 
 
-def _eq_sum_expr(
-    num_hashes: int, a_prefix: str = "ha", b_prefix: str = "hb"
-) -> Column:
-    """Σ CAST(a_i = b_i AS INT) over the wide signature layout as ONE
-    parsed expression — the Column-API chain costs ~3 py4j round
-    trips per slot (~0.8 s of driver-side Python per 64-slot build;
-    the _minhash_mins lesson). Left-associative addition of INT
-    casts, exactly what sum(generator) built — value-identical."""
-    return F.expr(
-        " + ".join(
-            f"CAST({a_prefix}{i} = {b_prefix}{i} AS INT)"
-            for i in range(num_hashes)
+# -- banded-LSH blocking ------------------------------------------------------
+# Every LSH family blocks candidates through the same four steps, and
+# these are their only copies: ``band`` explodes (id, keys) into
+# (id, band_idx, band_hash) rows, ``cap_buckets`` drops hot buckets,
+# ``bucket_pairs`` self-joins the buckets into distinct id pairs, and
+# ``minhash_verify`` keeps the pairs whose signature estimate clears
+# the threshold. ``batch_store_pairs`` is the incremental leg: a new
+# batch's bands against the capped bands of a stored corpus.
+def minhash_band_keys(num_hashes: int, bands: int, hasher: str) -> list[Column]:
+    """One blocking-key expression per band over the wide h0..h{n-1}
+    layout. md5 mode keeps the raw comma-joined slot values (the form
+    DuckDB can rebuild); xxhash64 mode folds them to one long.
+
+    ``bands`` must divide ``num_hashes``: a remainder would leave the
+    trailing slots out of every band."""
+    if bands < 1 or num_hashes % bands:
+        raise ValueError(
+            f"bands={bands} must be a positive divisor of num_hashes={num_hashes}"
         )
-    )
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    num_hashes: int = 64,
-    bands: int = 16,
-    hasher: str = "xxhash64",
-) -> DataFrame:
-    """Band the signature and self-join on band buckets → candidate
-    (doc_a, doc_b) pairs. bands must divide num_hashes; more bands =
-    higher recall, lower precision.
-
-    ``hasher='md5'`` keys each band by the comma-joined slot values
-    instead of an xxhash64 of them — a hash-free band key equality
-    joins identically, and DuckDB can reproduce it verbatim."""
     rows = num_hashes // bands
+    keys = [
+        F.concat_ws(",", *[F.col(f"h{b * rows + i}") for i in range(rows)])
+        for b in range(bands)
+    ]
     if hasher == "md5":
-        band_keys = [
-            F.array_join(
-                F.slice(F.col("sig"), b * rows + 1, rows).cast("array<string>"), ","
-            )
-            for b in range(bands)
-        ]
-    else:
-        band_keys = [
-            F.xxhash64(
-                F.slice(F.col("sig"), b * rows + 1, rows).cast("string"),
-                F.lit(b),
-            )
-            for b in range(bands)
-        ]
-    banded = signatures.select(
-        "doc",
-        F.posexplode(F.array(*band_keys)).alias("band_idx", "band_hash"),
+        return keys
+    return [F.xxhash64(key, F.lit(b)) for b, key in enumerate(keys)]
+
+
+def band(df: DataFrame, id_col: str, keys: list[Column]) -> DataFrame:
+    """(id_col, band_idx, band_hash): one row per band key, band_idx
+    being the key's position in ``keys``."""
+    return df.select(
+        id_col, F.posexplode(F.array(*keys)).alias("band_idx", "band_hash")
     )
-    a = banded.alias("a")
-    b = banded.alias("b")
+
+
+def check_bucket_cap(bucket_cap: int) -> None:
+    """A cap below 1 would drop every bucket and empty every result."""
+    if bucket_cap < 1:
+        raise ValueError(f"bucket_cap={bucket_cap} must be at least 1")
+
+
+def cap_buckets(banded: DataFrame, bucket_cap: int) -> DataFrame:
+    """Drop band buckets holding more than ``bucket_cap`` rows — the
+    hot-bucket guard. A bucket shared by n docs contributes C(n,2)
+    candidate pairs yet almost no discriminative signal (on this
+    corpus one bucket held 1,562 docs = 1.2M of 1.6M candidates, none
+    surviving the estimate); every measured true pair also collides
+    in a small bucket."""
+    check_bucket_cap(bucket_cap)
+    w_bucket = Window.partitionBy("band_idx", "band_hash")
     return (
-        a.join(
-            b,
+        banded.withColumn("_bs", F.count(F.lit(1)).over(w_bucket))
+        .where(F.col("_bs") <= bucket_cap)
+        .drop("_bs")
+    )
+
+
+def bucket_pairs(
+    banded: DataFrame, id_col: str, a: str = "doc_a", b: str = "doc_b"
+) -> DataFrame:
+    """Distinct (a, b) id pairs, a < b, sharing at least one
+    (band_idx, band_hash) bucket — an equi-join, so only bucket mates
+    ever meet."""
+    left, right = banded.alias("a"), banded.alias("b")
+    return (
+        left.join(
+            right,
             (F.col("a.band_idx") == F.col("b.band_idx"))
             & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc") < F.col("b.doc")),
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
         )
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
+        .select(F.col(f"a.{id_col}").alias(a), F.col(f"b.{id_col}").alias(b))
         .distinct()
+    )
+
+
+def minhash_verify(
+    pairs: DataFrame,
+    mins_a: DataFrame,
+    mins_b: DataFrame,
+    num_hashes: int,
+    threshold: float,
+    a: str = "doc_a",
+    b: str = "doc_b",
+) -> DataFrame:
+    """(a, b, est_jaccard) for the candidate pairs whose wide
+    signatures (``doc``, h0..h{n-1}) agree on at least ``threshold``
+    of their slots.
+
+    The slot-equality sum is ONE parsed expression: the Column-API
+    chain costs ~3 py4j round trips per slot (~0.8 s of driver-side
+    Python per 64-slot build)."""
+    eq_sum = F.expr(
+        " + ".join(f"CAST(ha{i} = hb{i} AS INT)" for i in range(num_hashes))
+    )
+    ma = mins_a.select(
+        F.col("doc").alias(a),
+        *[F.col(f"h{i}").alias(f"ha{i}") for i in range(num_hashes)],
+    )
+    mb = mins_b.select(
+        F.col("doc").alias(b),
+        *[F.col(f"h{i}").alias(f"hb{i}") for i in range(num_hashes)],
+    )
+    return (
+        pairs.join(ma, a)
+        .join(mb, b)
+        .select(
+            a,
+            b,
+            (eq_sum.cast("double") / F.lit(num_hashes)).alias("est_jaccard"),
+        )
+        .where(F.col("est_jaccard") >= threshold)
+    )
+
+
+def batch_store_pairs(
+    bands_batch: DataFrame,
+    mins_batch: DataFrame,
+    bands_store: DataFrame,
+    mins_store: DataFrame,
+    num_hashes: int,
+    threshold: float,
+    bucket_cap: int,
+) -> DataFrame:
+    """(doc, store_doc, est_jaccard): verified pairs of a batch doc
+    and a stored doc sharing a bucket. Only the store's buckets are
+    capped; the batch reaches the store only through the equi-join on
+    (band_idx, band_hash), so the work is bounded by bands × cap per
+    batch doc."""
+    cand = (
+        bands_batch.join(
+            cap_buckets(bands_store, bucket_cap).select(
+                "band_idx", "band_hash", F.col("doc").alias("store_doc")
+            ),
+            ["band_idx", "band_hash"],
+        )
+        .select("doc", "store_doc")
+        .distinct()
+    )
+    return minhash_verify(
+        cand, mins_batch, mins_store, num_hashes, threshold, "doc", "store_doc"
     )
 
 
@@ -252,99 +318,26 @@ def minhash_near_dups(
     k: int = 5,
     shingle_unit: str = "char",
     hasher: str = "xxhash64",
-    bucket_cap: int | None = 64,
+    bucket_cap: int = 64,
 ) -> DataFrame:
-    """End-to-end near-dup pairs: shingle → minhash → band →
-    bucket-join → estimate → threshold.
-
-    Runs on the WIDE signature layout throughout (h0..h63 columns):
-    band keys and the slot-equality sum are flat codegen expressions.
-    The array-based helpers above remain the public building blocks;
-    this composition avoids their per-pair interpreted HOF compare
-    (64 lambda evals × every candidate pair — measured 3× the whole
-    query's runtime at sf0.1).
-
-    ``bucket_cap`` drops band buckets holding more docs than the cap
-    before the self-join — the hot-bucket bomb guard. A bucket shared
-    by thousands of docs contributes C(n,2) candidate pairs yet almost
-    no discriminative signal (on this corpus one bucket held 1,562
-    docs = 1.2M of 1.6M candidates, none surviving the estimate);
-    every measured true pair also collides in a small bucket. None
-    disables the cap for exhaustive-recall runs."""
+    """End-to-end near-dup pairs: shingle → minhash → band → cap →
+    bucket-join → estimate → threshold, on the WIDE signature layout
+    throughout (h0..h63 columns): band keys and the slot-equality sum
+    are flat codegen expressions, never a per-pair interpreted HOF
+    compare (64 lambda evals × every candidate pair — measured 3× the
+    whole query's runtime at sf0.1)."""
+    keys = minhash_band_keys(num_hashes, bands, hasher)
+    check_bucket_cap(bucket_cap)
     # mins feed both candidate generation and estimation — cache so
-    # the shingle scan + 64-way agg runs once (scan amortization,
-    # same pattern as the bronze fan-out). tracked_cache: callers
+    # the shingle scan + 64-way agg runs once. tracked_cache: callers
     # composing operators release it via caching.scoped_caches().
     mins = tracked_cache(
         _minhash_mins(
             _shingle_frame(df, id_col, text_col, k, shingle_unit), num_hashes, hasher
         )
     )
-    return _near_dups_from_mins(
-        mins, threshold, num_hashes, bands, hasher, bucket_cap
-    )
-
-
-def _near_dups_from_mins(
-    mins: DataFrame,
-    threshold: float,
-    num_hashes: int,
-    bands: int,
-    hasher: str,
-    bucket_cap: int | None,
-    banded: DataFrame | None = None,
-) -> DataFrame:
-    """``minhash_near_dups`` from a PRECOMPUTED signature frame —
-    callers that already hold (and checkpointed) the wide mins (the
-    serving-index apply path computes them for the stored tables)
-    skip the whole shingle scan + 64-way aggregate instead of paying
-    it twice per increment (guide §1.2: don't compute things twice).
-    ``banded`` optionally reuses a precomputed UNCAPPED
-    (doc, band_idx, band_hash) frame of the same mins. Expressions are
-    the verbatim ``minhash_near_dups`` tail, so results are
-    bit-identical."""
-    rows = num_hashes // bands
-    if banded is None:
-        band_keys = _band_key_cols(rows, bands, hasher)
-        banded = mins.select(
-            "doc",
-            F.posexplode(F.array(*band_keys)).alias("band_idx", "band_hash"),
-        )
-    if bucket_cap is not None:
-        w_bucket = Window.partitionBy("band_idx", "band_hash")
-        banded = (
-            banded.withColumn("_bs", F.count(F.lit(1)).over(w_bucket))
-            .where(F.col("_bs") <= bucket_cap)
-            .drop("_bs")
-        )
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .distinct()
-    )
-    ma = mins.select(
-        F.col("doc").alias("doc_a"), *[F.col(f"h{i}").alias(f"ha{i}") for i in range(num_hashes)]
-    )
-    mb = mins.select(
-        F.col("doc").alias("doc_b"), *[F.col(f"h{i}").alias(f"hb{i}") for i in range(num_hashes)]
-    )
-    eq_sum = _eq_sum_expr(num_hashes)
-    return (
-        pairs.join(ma, "doc_a")
-        .join(mb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (eq_sum.cast("double") / F.lit(num_hashes)).alias("est_jaccard"),
-        )
-        .where(F.col("est_jaccard") >= threshold)
-    )
+    pairs = bucket_pairs(cap_buckets(band(mins, "doc", keys), bucket_cap), "doc")
+    return minhash_verify(pairs, mins, mins, num_hashes, threshold)
 
 
 def incremental_dedup(
@@ -358,7 +351,7 @@ def incremental_dedup(
     k: int = 5,
     shingle_unit: str = "char",
     hasher: str = "xxhash64",
-    bucket_cap: int | None = 64,
+    bucket_cap: int = 64,
 ) -> DataFrame:
     """Dedup a NEW batch of documents against an EXISTING corpus —
     the daily-increment shape of a training-data pipeline, where
@@ -376,21 +369,17 @@ def incremental_dedup(
     * exact: content-hash equi-join batch→corpus. The corpus side is
       a (hash, id) projection — in production a STORED table bucketed
       on the hash, so the join is batch-side shuffle only.
-    * near: the batch's band keys join the corpus's band table (again:
-      stored + bucketed on (band_idx, band_key) in production — see
-      operators/bucketing.py — so only the batch shuffles). The
-      ``bucket_cap`` guard drops corpus band buckets above the cap
-      exactly as in ``minhash_near_dups``: a bucket shared by
-      thousands of corpus docs carries no discriminative signal and
-      would multiply every colliding batch doc by its size.
-    * verify: candidate (batch, corpus) pairs — bounded by
-      bands × cap per batch doc — join both wide signatures and keep
+    * near: ``batch_store_pairs`` — the batch's band keys join the
+      corpus's capped band table (again: stored + bucketed on
+      (band_idx, band_key) in production — see operators/bucketing.py
+      — so only the batch shuffles), and the candidates verify
       est_jaccard ≥ threshold.
 
     Nothing in the plan scans the corpus per batch doc; the corpus
     appears only behind equi-joins on precomputable keys.
     """
-    rows = num_hashes // bands
+    keys = minhash_band_keys(num_hashes, bands, hasher)
+    check_bucket_cap(bucket_cap)
     cid, bid = F.col(id_col).alias("_cid"), F.col(id_col).alias("doc")
 
     # exact: smallest corpus id per identical content
@@ -401,62 +390,28 @@ def incremental_dedup(
         .agg(F.min("_cid").alias("exact_match"))
     )
 
-    mins_c = tracked_cache(
-        _minhash_mins(
-            _shingle_frame(corpus, id_col, text_col, k, shingle_unit),
-            num_hashes,
-            hasher,
+    mins_c, mins_b = (
+        tracked_cache(
+            _minhash_mins(
+                _shingle_frame(side, id_col, text_col, k, shingle_unit),
+                num_hashes,
+                hasher,
+            )
         )
+        for side in (corpus, batch)
     )
-    mins_b = tracked_cache(
-        _minhash_mins(
-            _shingle_frame(batch, id_col, text_col, k, shingle_unit),
-            num_hashes,
-            hasher,
-        )
-    )
-    band_keys = _band_key_cols(rows, bands, hasher)
-
-    def banded(mins: DataFrame) -> DataFrame:
-        return mins.select(
-            "doc", F.posexplode(F.array(*band_keys)).alias("band_idx", "band_hash")
-        )
-
-    bc = banded(mins_c)
-    if bucket_cap is not None:
-        w_bucket = Window.partitionBy("band_idx", "band_hash")
-        bc = (
-            bc.withColumn("_bs", F.count(F.lit(1)).over(w_bucket))
-            .where(F.col("_bs") <= bucket_cap)
-            .drop("_bs")
-        )
-    cand = (
-        banded(mins_b)
-        .join(
-            bc.select(
-                "band_idx", "band_hash", F.col("doc").alias("_cdoc")
-            ),
-            ["band_idx", "band_hash"],
-        )
-        .select("doc", "_cdoc")
-        .distinct()
-    )
-    ma = mins_b.select(
-        "doc", *[F.col(f"h{i}").alias(f"ha{i}") for i in range(num_hashes)]
-    )
-    mb = mins_c.select(
-        F.col("doc").alias("_cdoc"),
-        *[F.col(f"h{i}").alias(f"hb{i}") for i in range(num_hashes)],
-    )
-    eq_sum = _eq_sum_expr(num_hashes)
     near = (
-        cand.join(ma, "doc")
-        .join(mb, "_cdoc")
-        .where(
-            (eq_sum.cast("double") / F.lit(num_hashes)) >= F.lit(threshold)
+        batch_store_pairs(
+            band(mins_b, "doc", keys),
+            mins_b,
+            band(mins_c, "doc", keys),
+            mins_c,
+            num_hashes,
+            threshold,
+            bucket_cap,
         )
         .groupBy("doc")
-        .agg(F.min("_cdoc").alias("near_match"))
+        .agg(F.min("store_doc").alias("near_match"))
     )
     status = (
         F.when(F.col("exact_match").isNotNull(), "exact_dup")
@@ -553,8 +508,8 @@ def simhash_band_pairs(
 
     Scale shape: a fixed signature width gives band collisions a fixed
     per-pair probability, so on a clustered corpus uncapped candidates
-    are a constant *fraction* of C(n,2) — ``bucket_cap`` (same guard
-    as the MinHash path) bounds every surviving bucket to C(cap,2)
+    are a constant *fraction* of C(n,2) — ``cap_buckets`` (the MinHash
+    path's guard) bounds every surviving bucket to C(cap,2)
     pairs, making the join output linear in bucket count. The recall
     cost is deliberate and documented: members of a > cap bucket stop
     pairing *through that band* (measured at sf0.1: cap=64 keeps
@@ -565,34 +520,8 @@ def simhash_band_pairs(
     :func:`simhash60_md5` (cross-engine, 60-bit; 4×15 exactly tiles).
     """
     mask = F.lit((1 << bits) - 1)
-    banded = sigs.select(
-        "doc",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright("simhash", b * bits).bitwiseAND(mask)
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band_idx", "bv"),
-    )
-    w = Window.partitionBy("band_idx", "bv")
-    capped = (
-        banded.withColumn("bs", F.count(F.lit(1)).over(w))
-        .where(F.col("bs") <= bucket_cap)
-        .drop("bs")
-    )
-    a, b = capped.alias("a"), capped.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .distinct()
-    )
+    chunks = [F.shiftright("simhash", b * bits).bitwiseAND(mask) for b in range(bands)]
+    cand = bucket_pairs(cap_buckets(band(sigs, "doc", chunks), bucket_cap), "doc")
     sa = sigs.select(F.col("doc").alias("doc_a"), F.col("simhash").alias("sig_a"))
     sb = sigs.select(F.col("doc").alias("doc_b"), F.col("simhash").alias("sig_b"))
     return (

@@ -29,6 +29,8 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from fabric_claims_spark.extensions.dedup import band, bucket_pairs
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential-fold dot product over double arrays — the op order of
@@ -148,12 +150,12 @@ def hyperplane_band_sigs(vec: Column, planes: list[list[list[float]]]) -> list[C
     list_dot_product op order bit-exactly, so bucket keys agree across
     engines even for near-zero dots."""
     sigs = []
-    for band in planes:
+    for hs in planes:
         bits = [
             F.when(
                 dot(vec, F.array(*[F.lit(c) for c in h])) >= 0, F.lit("1")
             ).otherwise(F.lit("0"))
-            for h in band
+            for h in hs
         ]
         sigs.append(F.concat(*bits))
     return sigs
@@ -176,23 +178,8 @@ def hyperplane_neardup_pairs(
     e = vectors.select(
         F.col(id_col).alias("vid"), as_double_array(vec_col).alias("ev")
     )
-    banded = e.select(
-        "vid",
-        F.posexplode(F.array(*hyperplane_band_sigs(F.col("ev"), planes))).alias(
-            "band_idx", "sig"
-        ),
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.vid") < F.col("b.vid")),
-        )
-        .select(F.col("a.vid").alias("vec_a"), F.col("b.vid").alias("vec_b"))
-        .distinct()
-    )
+    keys = hyperplane_band_sigs(F.col("ev"), planes)
+    cand = bucket_pairs(band(e, "vid", keys), "vid", "vec_a", "vec_b")
     ea = e.select(F.col("vid").alias("vec_a"), F.col("ev").alias("ev_a"))
     eb = e.select(F.col("vid").alias("vec_b"), F.col("ev").alias("ev_b"))
     return (

@@ -23,10 +23,10 @@ LSH near-dup index (``minhash_near_dups`` shape):
 * ``lsh_mins``  (doc, h0..h63)            — append-only per batch
 * ``lsh_bands`` (doc, band_idx, band_hash) — append-only per batch
 * ``lsh_pairs`` (doc_a, doc_b, est_jaccard) — append-only: each batch
-  contributes batch-vs-corpus pairs (the batch's band keys joined
-  against the STORED band table, hot buckets capped exactly as in
-  ``extensions.dedup.incremental_dedup``) plus batch-internal pairs
-  (``minhash_near_dups`` over the batch alone)
+  contributes batch-vs-corpus pairs (``extensions.dedup.batch_store_pairs``
+  over the STORED band table, the leg ``incremental_dedup`` runs) plus
+  batch-internal pairs (``minhash_near_dups``' band, cap, bucket join
+  and verify over the batch alone)
 
 Exactly-once visibility (the bloom sidecar at ``operators/layout.py``
 tolerates partial updates because an unindexed file is merely
@@ -84,7 +84,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from fabric_claims_spark.extensions.bpe import (
     _release_checkpoint,
@@ -490,18 +489,6 @@ def _fold_deletes(store: TableStore, fam: IndexFamily, n_files: int = 8) -> int:
         _release_checkpoint(cp)
 
 
-def read_lexical_tombstones(store: TableStore) -> DataFrame:
-    return read_tombstones(store, LEXICAL)
-
-
-def read_lsh_tombstones(store: TableStore) -> DataFrame:
-    return read_tombstones(store, LSH)
-
-
-def read_ivf_tombstones(store: TableStore) -> DataFrame:
-    return read_tombstones(store, IVF)
-
-
 def fold_lexical_deletes(store: TableStore, n_files: int = 8) -> int:
     return _fold_deletes(store, LEXICAL, n_files)
 
@@ -808,43 +795,47 @@ def apply_lsh_batch(
     bands: int = 16,
     k: int = 5,
     hasher: str = "xxhash64",
-    bucket_cap: int | None = 64,
+    bucket_cap: int = 64,
 ) -> bool:
     """Fold one corpus increment into the stored near-dup index:
     signatures + band keys for the batch (O(batch)), new pairs =
-    batch-vs-corpus (batch band keys joined against the STORED band
-    table, corpus hot buckets capped — ``incremental_dedup``'s exact
-    candidate discipline) plus batch-internal pairs. The stored pair
-    table is append-only: pairs, once found, never change (signatures
-    are pure functions of immutable text).
+    batch-vs-corpus (``batch_store_pairs`` against the STORED band
+    table, ``incremental_dedup``'s leg) plus batch-internal pairs.
+    The stored pair table is append-only: pairs, once found, never
+    change (signatures are pure functions of immutable text).
 
     Capping note: the cap is evaluated against the band table AS OF
     this batch — the same order-dependence every incremental LSH has.
     Consumers that need the one-shot capping semantics rebuild from
     ``lsh_mins`` (which is cap-free and lossless).
 
-    Returns applied-by-this-call (ADVICE r12 audit contract)."""
+    Raises ValueError, before writing anything, on ``bands`` that do
+    not divide ``num_hashes`` or a ``bucket_cap`` below 1. Returns
+    applied-by-this-call."""
     from fabric_claims_spark.extensions.dedup import (
-        _band_key_cols,
-        _eq_sum_expr,
         _minhash_mins,
-        _near_dups_from_mins,
         _shingle_frame,
+        band,
+        batch_store_pairs,
+        bucket_pairs,
+        cap_buckets,
+        check_bucket_cap,
+        minhash_band_keys,
+        minhash_verify,
     )
 
     if _applied(store, LSH_COMMITS, batch_id):
         return False
-    rows = num_hashes // bands
+    # bad blocking parameters fail before anything is written
+    keys = minhash_band_keys(num_hashes, bands, hasher)
+    check_bucket_cap(bucket_cap)
     token = uuid.uuid4().hex
-    # Write-then-derive (round 14, guide §1.2): the shingle scan +
-    # 64-slot signature aggregate materializes ONCE, directly into its
-    # stored table; every derived frame (band keys, batch-internal and
-    # cross pairs) re-reads the just-written parquet — a tiny scan plan
-    # with the token filter pushed to the file stats — instead of a
-    # localCheckpoint materialization FOLLOWED by an append of the same
-    # rows (one extra full pass + one extra wide-plan analysis per
-    # table per increment). Appends stay invisible until the commit;
-    # a torn apply leaves vacuumable orphans exactly as before.
+    # Write-then-derive: the shingle scan + 64-slot signature aggregate
+    # materializes ONCE, directly into its stored table; every derived
+    # frame (band keys, batch-internal and cross pairs) re-reads the
+    # just-written parquet — a tiny scan plan with the token filter
+    # pushed to the file stats. Appends stay invisible until the
+    # commit; a torn apply leaves vacuumable orphans.
     store.append(
         LSH_MINS,
         _minhash_mins(
@@ -856,78 +847,41 @@ def apply_lsh_batch(
     mins_b = (
         store.read(LSH_MINS).where(F.col(_TOKEN) == token).drop(_TOKEN)
     )
-    band_keys = _band_key_cols(rows, bands, hasher)
     store.append(
-        LSH_BANDS,
-        mins_b.select(
-            "doc",
-            F.posexplode(F.array(*band_keys)).alias("band_idx", "band_hash"),
-        ).withColumn(_TOKEN, F.lit(token)),
+        LSH_BANDS, band(mins_b, "doc", keys).withColumn(_TOKEN, F.lit(token))
     )
     bands_b = (
         store.read(LSH_BANDS).where(F.col(_TOKEN) == token).drop(_TOKEN)
     )
-    # batch-internal pairs (first batch: this IS the full build) —
-    # derived from the JUST-WRITTEN batch signatures and band keys
-    # (round 13/14, guide §1.2: never re-run the shingle scan + 64-way
-    # minhash aggregate that the stored tables already hold)
-    pairs_new = _near_dups_from_mins(
+    # batch-internal pairs (first batch: this IS the full build), from
+    # the just-written signatures and band keys
+    pairs_new = minhash_verify(
+        bucket_pairs(cap_buckets(bands_b, bucket_cap), "doc"),
         mins_b,
-        threshold=threshold,
-        num_hashes=num_hashes,
-        bands=bands,
-        hasher=hasher,
-        bucket_cap=bucket_cap,
-        banded=bands_b,
+        mins_b,
+        num_hashes,
+        threshold,
     )
     # cross pairs only against PRIOR committed increments (our own
     # just-appended rows are invisible until the commit below), and
     # only their live rows: an erased doc's band/signature rows must
-    # not pair against future batches (round 12)
+    # not pair against future batches
     if _read_commits(store, LSH_COMMITS):
         tomb = read_tombstones(store, LSH)
-        bands_c = _live(store, LSH, LSH_BANDS, tomb)
-        if bucket_cap is not None:
-            w_bucket = Window.partitionBy("band_idx", "band_hash")
-            bands_c = (
-                bands_c.withColumn("_bs", F.count(F.lit(1)).over(w_bucket))
-                .where(F.col("_bs") <= bucket_cap)
-                .drop("_bs")
-            )
-        cand = (
-            bands_b.join(
-                bands_c.select(
-                    "band_idx",
-                    "band_hash",
-                    F.col("doc").alias("_cdoc"),
-                ),
-                ["band_idx", "band_hash"],
-            )
-            .select("doc", "_cdoc")
-            .distinct()
-        )
-        ma = mins_b.select(
-            F.col("doc").alias("_bdoc"),
-            *[F.col(f"h{i}").alias(f"ha{i}") for i in range(num_hashes)],
-        )
-        mb = _live(store, LSH, LSH_MINS, tomb).select(
-            F.col("doc").alias("_cdoc"),
-            *[F.col(f"h{i}").alias(f"hb{i}") for i in range(num_hashes)],
-        )
-        eq_sum = _eq_sum_expr(num_hashes)
-        cross = (
-            cand.join(ma, cand["doc"] == ma["_bdoc"])
-            .join(mb, "_cdoc")
-            .select(
-                # canonical pair order (doc_a < doc_b), independent of
-                # which increment a doc arrived in
-                F.least("_bdoc", "_cdoc").alias("doc_a"),
-                F.greatest("_bdoc", "_cdoc").alias("doc_b"),
-                (eq_sum.cast("double") / F.lit(num_hashes)).alias(
-                    "est_jaccard"
-                ),
-            )
-            .where(F.col("est_jaccard") >= threshold)
+        cross = batch_store_pairs(
+            bands_b,
+            mins_b,
+            _live(store, LSH, LSH_BANDS, tomb),
+            _live(store, LSH, LSH_MINS, tomb),
+            num_hashes,
+            threshold,
+            bucket_cap,
+        ).select(
+            # canonical pair order (doc_a < doc_b), independent of
+            # which increment a doc arrived in
+            F.least("doc", "store_doc").alias("doc_a"),
+            F.greatest("doc", "store_doc").alias("doc_b"),
+            "est_jaccard",
         )
         pairs_new = pairs_new.unionByName(cross)
 

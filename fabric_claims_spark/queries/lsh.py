@@ -450,7 +450,7 @@ def docs_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     _CLEAN_LABEL_BROADCAST_MAX rows. The gate exists because a
     checkpointed frame is a LogicalRDD with unknown stats: the
     planner assumes worst-case size and always shuffles, even for a
-    100-row label set. An unconditional hint (the round-4 bug) OOMs
+    100-row label set. An unconditional hint OOMs
     at high dup rates; the measured gate is scale-safe at both ends."""
     from fabric_claims_spark.extensions.graph import connected_components
     from pyspark.sql import Window
@@ -1100,11 +1100,14 @@ _MH_RECALL_HI = 0.8
 def docs_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fabric_claims_spark.caching import tracked_cache
     from fabric_claims_spark.extensions.dedup import (
-        _band_key_cols,
         _minhash_mins,
         _shingle_frame,
+        band,
+        bucket_pairs,
+        cap_buckets,
+        minhash_band_keys,
+        minhash_verify,
     )
-    from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents").where(
         (F.col("doc_id") < _MH_RECALL_COHORT)
@@ -1115,48 +1118,12 @@ def docs_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = tracked_cache(_shingle_frame(docs, "doc_id", "text", _K, "char"))
     mins = tracked_cache(_minhash_mins(sh, _NUM_HASHES, "md5"))
 
-    # the production candidate pipeline, verbatim shape
-    # (minhash_near_dups internals: capped banding, wide-layout est)
-    rows = _NUM_HASHES // _BANDS
-    banded = mins.select(
-        "doc",
-        F.posexplode(F.array(*_band_key_cols(rows, _BANDS, "md5"))).alias(
-            "band_idx", "band_hash"
-        ),
-    )
-    w_bucket = Window.partitionBy("band_idx", "band_hash")
-    banded = (
-        banded.withColumn("_bs", F.count(F.lit(1)).over(w_bucket))
-        .where(F.col("_bs") <= 64)
-        .drop("_bs")
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .distinct()
-    )
-    ma = mins.select(
-        F.col("doc").alias("doc_a"),
-        *[F.col(f"h{i}").alias(f"ha{i}") for i in range(_NUM_HASHES)],
-    )
-    mb = mins.select(
-        F.col("doc").alias("doc_b"),
-        *[F.col(f"h{i}").alias(f"hb{i}") for i in range(_NUM_HASHES)],
-    )
-    from fabric_claims_spark.extensions.dedup import _eq_sum_expr
-
-    eq_sum = _eq_sum_expr(_NUM_HASHES)
-    e2e = (
-        cand.join(ma, "doc_a")
-        .join(mb, "doc_b")
-        .where((eq_sum.cast("double") / F.lit(_NUM_HASHES)) >= 0.5)
-        .select("doc_a", "doc_b")
+    # the production candidate pipeline (minhash_near_dups' blocking),
+    # kept apart from its verify so band recall is measured too
+    keys = minhash_band_keys(_NUM_HASHES, _BANDS, "md5")
+    cand = bucket_pairs(cap_buckets(band(mins, "doc", keys), 64), "doc")
+    e2e = minhash_verify(cand, mins, mins, _NUM_HASHES, 0.5).select(
+        "doc_a", "doc_b"
     )
 
     # exact ground truth over the cohort (eval-harness cost, C(n,2)
@@ -1400,7 +1367,7 @@ def docs_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Per-source dedup rates (round 9) — the curation dashboard readout a
+# Per-source dedup rates — the curation dashboard readout a
 # training pipeline watches per ingestion source: how much of each
 # source survives exact dedup, how much survives the near-dup pass,
 # and the kept share. A source whose kept_rate collapses is scraping

@@ -1089,7 +1089,8 @@ def lexical_maintenance_pipeline(
     reader-visible rows, or a tombstone that survives the fold each
     diverge the hash."""
     from fabric_claims_spark.operators.serving_index import (
-        read_lexical_tombstones,
+        LEXICAL,
+        read_tombstones,
     )
     from fabric_claims_spark.pipeline.runner import IndexMaintenance
 
@@ -1123,7 +1124,7 @@ def lexical_maintenance_pipeline(
         rows.append(("post", "index:doclen", "", int(dn.count())))
         rows.append(
             ("post", "index:tombstones", "",
-             int(read_lexical_tombstones(store).count()))
+             int(read_tombstones(store, LEXICAL).count()))
         )
         return local_frame(
             spark, rows,

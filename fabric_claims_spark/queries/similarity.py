@@ -1954,6 +1954,7 @@ def embeddings_hyperplane_recall(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from fabric_claims_spark.caching import tracked_cache
+    from fabric_claims_spark.extensions.dedup import band, bucket_pairs
     from fabric_claims_spark.extensions.similarity import (
         hyperplane_band_sigs,
     )
@@ -1961,31 +1962,16 @@ def embeddings_hyperplane_recall(
     emb = load_table(spark, sf_dir, "embeddings").where(
         F.col("vec_id") < _HP_RECALL_COHORT
     )
-    # spread the single-file cohort scan (round 14, guide §2.5 input
-    # skew — the semdedup-recall fix pattern): the cached frame feeds
+    # spread the single-file cohort scan: the cached frame feeds
     # the 32k-pair truth self-join AND the 128-hyperplane banding,
     # both of which otherwise run single-task at the scan's
     # parallelism. Aggregate-only output — partitioning-invariant.
     e = tracked_cache(
         spread(emb.select("vec_id", as_double_array("embedding").alias("ev")))
     )
-    banded = e.select(
-        "vec_id",
-        F.posexplode(
-            F.array(*hyperplane_band_sigs(F.col("ev"), _hp_planes()))
-        ).alias("band_idx", "sig"),
-    )
-    a = banded.select(
-        F.col("vec_id").alias("vec_a"), "band_idx", "sig"
-    )
-    b = banded.select(
-        F.col("vec_id").alias("vec_b"), "band_idx", "sig"
-    )
+    keys = hyperplane_band_sigs(F.col("ev"), _hp_planes())
     cand = (
-        a.join(b, ["band_idx", "sig"])
-        .where(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b")
-        .distinct()
+        bucket_pairs(band(e, "vec_id", keys), "vec_id", "vec_a", "vec_b")
         .withColumn("hit", F.lit(1))
     )
     ea = e.select(F.col("vec_id").alias("vec_a"), F.col("ev").alias("va"))

@@ -1308,7 +1308,9 @@ def test_minhash_band_recall_matches_theory_at_boundary(spark):
     import random
 
     from fabric_claims_spark.extensions.dedup import (
-        lsh_candidate_pairs,
+        band,
+        bucket_pairs,
+        minhash_band_keys,
         minhash_signatures,
     )
 
@@ -1344,9 +1346,11 @@ def test_minhash_band_recall_matches_theory_at_boundary(spark):
 
     df = spark.createDataFrame(rows, "doc_id long, text string")
     sigs = minhash_signatures(df, "doc_id", "text", hasher="md5")
+    mins = sigs.select("doc", *[F.col("sig")[i].alias(f"h{i}") for i in range(64)])
+    banded = band(mins, "doc", minhash_band_keys(64, 16, "md5"))
     cand = {
         (r["doc_a"], r["doc_b"])
-        for r in lsh_candidate_pairs(sigs, hasher="md5").collect()
+        for r in bucket_pairs(banded, "doc").collect()
     }
 
     def theory(s):

@@ -508,9 +508,10 @@ def test_forget_documents_audits_skipped_on_batch_id_collision(
     the audit row says Skipped with rows_written=0, and no tombstone
     lands."""
     from fabric_claims_spark.operators.serving_index import (
+        LEXICAL,
         apply_lexical_batch,
         read_lexical_index,
-        read_lexical_tombstones,
+        read_tombstones,
     )
     from fabric_claims_spark.plans.governance import forget_documents
     from fabric_claims_spark.sources.audit import AUDIT_TABLE
@@ -526,7 +527,7 @@ def test_forget_documents_audits_skipped_on_batch_id_collision(
     # batch_id 0 collides with the committed build batch
     out = forget_documents(store, kill, batch_id=0)
     assert out == {"lexical": 0}
-    assert read_lexical_tombstones(store).count() == 0
+    assert read_tombstones(store, LEXICAL).count() == 0
     td, _, _ = read_lexical_index(store)
     assert td.join(kill, "doc_id", "left_semi").count() > 0  # NOT erased
 

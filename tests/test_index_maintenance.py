@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from fabric_claims_spark.operators.serving_index import (
+    LEXICAL,
     apply_ivf_batch,
     apply_lexical_batch,
     apply_lexical_deletes,
@@ -16,7 +17,7 @@ from fabric_claims_spark.operators.serving_index import (
     read_ivf_centroids,
     read_ivf_index,
     read_lexical_index,
-    read_lexical_tombstones,
+    read_tombstones,
 )
 from fabric_claims_spark.pipeline.runner import IndexMaintenance
 from fabric_claims_spark.sources.audit import AUDIT_TABLE
@@ -51,13 +52,13 @@ def test_tombstoned_lexical_store_folds_at_cadence(spark, tmp_path):
     apply_lexical_batch(store, docs, 0)
     dels = docs.where(F.col("doc_id") % 5 == 2).select("doc_id")
     apply_lexical_deletes(store, dels, 1)
-    assert read_lexical_tombstones(store).count() > 0
+    assert read_tombstones(store, LEXICAL).count() > 0
 
     maint = IndexMaintenance(store, compact_file_threshold=10_000)
     out = maint.run_post_apply()
     assert out["fold:lexical"]["fired"] is True
     assert out["fold:lexical"]["rows_dropped"] > 0
-    assert read_lexical_tombstones(store).count() == 0
+    assert read_tombstones(store, LEXICAL).count() == 0
 
     # folded state == fresh build over survivors
     survivors = docs.where(F.col("doc_id") % 5 != 2)
@@ -251,8 +252,9 @@ def test_mutation_stream_runs_maintenance_at_cadence(spark, tmp_path):
     import shutil
 
     from fabric_claims_spark.operators.serving_index import (
+        LEXICAL,
         apply_lexical_deletes,
-        read_lexical_tombstones,
+        read_tombstones,
     )
     from fabric_claims_spark.sources.parquet import load_table
     from fabric_claims_spark.streaming.corpus_stream import (
@@ -293,7 +295,7 @@ def test_mutation_stream_runs_maintenance_at_cadence(spark, tmp_path):
         maintenance_every=1,
     )
     # every tombstone the stream laid down has been folded
-    assert read_lexical_tombstones(store).count() == 0
+    assert read_tombstones(store, LEXICAL).count() == 0
     fold_rows = _audit_rows(store, "fold:lexical")
     assert any(s == "Fired" for _, s, _ in fold_rows)
 

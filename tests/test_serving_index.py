@@ -533,11 +533,12 @@ def test_fold_lexical_deletes_physically_erases(spark, docs, tmp_path):
     stored tables (not merely masked) and the tombstone table is
     empty — the bytes an erasure SLA cares about."""
     from fabric_claims_spark.operators.serving_index import (
+        LEXICAL,
         LEX_DOCLEN,
         LEX_TOMBSTONES,
         apply_lexical_deletes,
         fold_lexical_deletes,
-        read_lexical_tombstones,
+        read_tombstones,
     )
 
     store = _lex_store_3inc(spark, docs, tmp_path / "lexphys")
@@ -558,7 +559,7 @@ def test_fold_lexical_deletes_physically_erases(spark, docs, tmp_path):
         }
         assert not (killed & raw), t
     assert store.read(LEX_TOMBSTONES).count() == 0
-    assert read_lexical_tombstones(store).count() == 0
+    assert read_tombstones(store, LEXICAL).count() == 0
     # a redelivered delete after the fold stays a no-op
     _, df_before, _ = read_lexical_index(store)
     before = sorted((r["term"], r["df"]) for r in df_before.collect())
@@ -578,9 +579,10 @@ def test_torn_delete_heals_on_redelivery(spark, docs, tmp_path):
         maintain_additive_rollup_idempotent,
     )
     from fabric_claims_spark.operators.serving_index import (
+        LEXICAL,
         LEX_DF,
         apply_lexical_deletes,
-        read_lexical_tombstones,
+        read_tombstones,
     )
 
     store = _lex_store_3inc(spark, docs, tmp_path / "lextorn")
@@ -595,7 +597,7 @@ def test_torn_delete_heals_on_redelivery(spark, docs, tmp_path):
         store, LEX_DF, td_del, 3, keys=["term"], count_col="df",
         weight_col="_w",
     )
-    assert read_lexical_tombstones(store).count() == 0  # torn state
+    assert read_tombstones(store, LEXICAL).count() == 0  # torn state
     # redelivery completes: tombstones land, df NOT decremented again
     apply_lexical_deletes(store, kill, 3)
     survivors = docs.where(F.pmod("doc_id", F.lit(7)) != 3)
@@ -615,12 +617,13 @@ def test_ivf_deletes_flow_through_skew_and_rebuild(spark, tmp_path):
     at the commit; the next rebuild trains on live rows only and
     vacuums the stale tombstones (physical erasure)."""
     from fabric_claims_spark.operators.serving_index import (
+        IVF,
         IVF_TOMBSTONES,
         apply_ivf_batch,
         apply_ivf_deletes,
         ivf_bucket_skew,
         read_ivf_index,
-        read_ivf_tombstones,
+        read_tombstones,
         rebuild_ivf_index,
     )
 
@@ -645,7 +648,7 @@ def test_ivf_deletes_flow_through_skew_and_rebuild(spark, tmp_path):
     assert ivf_bucket_skew(store, k=8) != skew0 or n_kill == 0
     rebuild_ivf_index(store, k=8, iters=2)
     assert read_ivf_index(store).count() == n0 - n_kill
-    assert read_ivf_tombstones(store).count() == 0
+    assert read_tombstones(store, IVF).count() == 0
     # physical: the raw tombstone table was vacuumed
     assert store.read(IVF_TOMBSTONES).count() == 0
 
@@ -696,12 +699,13 @@ def test_lsh_deletes_mask_pairs_and_future_candidates(spark, docs, tmp_path):
     the fold physically drops mins/bands/pairs and clears the
     tombstones."""
     from fabric_claims_spark.operators.serving_index import (
+        LSH,
         LSH_BANDS,
         LSH_MINS,
         LSH_TOMBSTONES,
         apply_lsh_deletes,
         fold_lsh_deletes,
-        read_lsh_tombstones,
+        read_tombstones,
     )
 
     store = TableStore(spark, str(tmp_path / "lshdel"))
@@ -747,7 +751,7 @@ def test_lsh_deletes_mask_pairs_and_future_candidates(spark, docs, tmp_path):
         }
         assert not (killed & raw), t
     assert store.read(LSH_TOMBSTONES).count() == 0
-    assert read_lsh_tombstones(store).count() == 0
+    assert read_tombstones(store, LSH).count() == 0
     # reader view unchanged by the fold
     assert sorted(tuple(r) for r in read_lsh_pairs(store).collect()) == (
         sorted(tuple(r) for r in after.collect())
